@@ -3,8 +3,8 @@
 ``entry(spark)`` runs the flagship query at sf0.001; ``queries()`` /
 ``oracle_sql()`` expose the engine's full registry (one entry per
 implemented operator from SURVEY.md §2) for the DuckDB differential
-check at sf0.01. The registry itself lives in
-``pyspark_movie_recommender_spark/queries.py``.
+check at sf0.01. The registry itself lives in the
+``pyspark_movie_recommender_spark/queries/`` package.
 """
 
 from __future__ import annotations

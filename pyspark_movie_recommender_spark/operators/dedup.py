@@ -1,19 +1,24 @@
 """Deduplication operators for LLM training-data pipelines.
 
-Five tiers, each with a different cost/recall point at 100 TB:
+Six tiers, each with a different cost/recall point at 100 TB:
 
 1. exact row/subset dedup — ``dropDuplicates`` (hash shuffle on the key);
 2. content-hash dedup — md5/sha2 of normalized text, keep canonical row
    per hash via min-aggregation (one shuffle, no window sort needed);
-3. n-gram Jaccard — exact set similarity via shingle explode + equi-join
-   on shared shingles (candidate pairs bounded by shared-shingle count);
-4. MinHash + LSH banding — the sub-quadratic scale path: constant-size
+3. exact Jaccard — character n-gram sets via shingle explode + equi-join
+   on shared shingles (candidate pairs bounded by shared-shingle count),
+   and word sets via prefix filtering (candidates from each document's
+   rarest tokens only);
+4. edit distance — prefix Levenshtein with (lang, length-bucket±1)
+   blocking; a per-key census routes oversized blocks from the block
+   join to a lossless PassJoin segment join;
+5. MinHash + LSH banding — the sub-quadratic scale path: constant-size
    signature per doc, band-bucket equi-join, verify candidates only;
-5. SimHash — 64-bit fingerprint; near-dups differ in few bits, bucketed
+6. SimHash — 64-bit fingerprint; near-dups differ in few bits, bucketed
    by (max_hamming+1) bit chunks (pigeonhole-exact recall).
 
-The exact forms (1-3) are DuckDB-oracle-checkable; the probabilistic
-forms (4-5) are deterministic given fixed hash seeds but engine-specific,
+The exact forms (1-4) are DuckDB-oracle-checkable; the probabilistic
+forms (5-6) are deterministic given fixed hash seeds but engine-specific,
 so they get rows-only checks plus unit tests on planted duplicates.
 """
 
@@ -25,7 +30,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from pyspark_movie_recommender_spark.functions import char_ngrams, fingerprint, ws_tokens
+from pyspark_movie_recommender_spark.functions import char_ngrams, fingerprint
 
 
 def exact_dedup(df: DataFrame, subset: list[str] | None = None) -> DataFrame:
@@ -144,6 +149,163 @@ def ngram_jaccard_pairs(
     return out
 
 
+def _lev_base(
+    docs: DataFrame,
+    text_col: str,
+    id_col: str,
+    lang_col: str,
+    len_col: str,
+    bucket_size: int,
+    prefix_len: int,
+) -> DataFrame:
+    """The narrow (doc_id, lang, bucket, prefix) projection that every
+    edit-distance route blocks on and verifies."""
+    return docs.select(
+        F.col(id_col).alias("doc_id"),
+        F.col(lang_col).alias("lang"),
+        F.floor(F.col(len_col) / bucket_size).alias("bucket"),
+        F.substring(text_col, 1, prefix_len).alias("prefix"),
+    )
+
+
+def _bucket_pm1(bucket: Column) -> Column:
+    """Explode a length bucket to {bucket-1, bucket, bucket+1}, so pairs
+    straddling a bucket boundary (e.g. lengths 49 vs 51) still meet."""
+    return F.explode(F.array(bucket - 1, bucket, bucket + 1))
+
+
+def _block_sides(base: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """The two sides of the (lang, jbucket) block join over ``base``.
+
+    The probe side explodes to bucket±1 and the build side keeps its
+    single true bucket, so each unordered pair matches exactly one key;
+    after ``left_id < right_id`` that key is the GREATER id's
+    (lang, bucket), which makes it an exact routing unit. Every column
+    besides doc_id/lang/bucket is carried with an ``_a`` / ``_b``
+    suffix."""
+    payload = [c for c in base.columns if c not in ("doc_id", "lang", "bucket")]
+    a = base.select(
+        F.col("doc_id").alias("left_id"),
+        "lang",
+        _bucket_pm1(F.col("bucket")).alias("jbucket"),
+        *[F.col(c).alias(f"{c}_a") for c in payload],
+    )
+    b = base.select(
+        F.col("doc_id").alias("right_id"),
+        "lang",
+        F.col("bucket").alias("jbucket"),
+        *[F.col(c).alias(f"{c}_b") for c in payload],
+    )
+    return a, b
+
+
+def _block_join(a: DataFrame, b: DataFrame) -> DataFrame:
+    return a.join(b, ["lang", "jbucket"]).filter(F.col("left_id") < F.col("right_id"))
+
+
+def _verify(pairs: DataFrame, max_dist: int) -> DataFrame:
+    """Exact verify of candidate pairs: the 3-arg
+    ``levenshtein(l, r, threshold)`` (SPARK-44510) runs the banded
+    early-abandon DP — O(len·max_dist) per pair instead of O(len²) —
+    and returns -1 when the distance exceeds the bound."""
+    return pairs.select(
+        "left_id",
+        "right_id",
+        F.levenshtein("prefix_a", "prefix_b", max_dist)
+        .cast("long")
+        .alias("edit_distance"),
+    ).filter(F.col("edit_distance") >= 0)
+
+
+def _blocked_pairs(
+    base: DataFrame, max_dist: int, probe_repartition: int | None = None
+) -> DataFrame:
+    """Block join + verify over a :func:`_lev_base` projection.
+
+    ``probe_repartition``: the pair-enumeration + banded-DP stage is
+    CPU-bound, but its parallelism follows the probe side's BYTE-sized
+    partitioning: a broadcast-joined probe inherits the parquet scan's
+    few input splits (and AQE coalesces shuffles by bytes, blind to the
+    quadratic per-row fan-out downstream). A round-robin repartition of
+    the narrow probe rows spreads the DP across the cluster — measured
+    19.9s -> 9.7s at the sf1 profile on 32 cores. Set it ONLY when the
+    corpus is hint-proven small enough that the build side broadcasts;
+    on a corpus that shuffle-joins, the join's own key exchange already
+    sets parallelism and the extra pass would be waste."""
+    a, b = _block_sides(base)
+    if probe_repartition:
+        a = a.repartition(probe_repartition)
+    return _verify(_block_join(a, b), max_dist)
+
+
+def _passjoin_candidates(
+    full: DataFrame, keys: DataFrame, prefix_len: int, max_dist: int
+) -> DataFrame:
+    """PassJoin candidate pairs (Li, Deng, Feng, PVLDB 2011) among the
+    full-length prefixes of ``full`` whose (lang, jbucket) block is in
+    ``keys``; returns distinct (left_id, right_id) with left_id < right_id.
+
+    The pigeonhole: split one side's prefix into ``max_dist + 1``
+    segments; ≤ max_dist edits can destroy at most max_dist of them, so
+    at least one segment survives EXACTLY in any partner within
+    distance, at a position shifted by at most max_dist. Candidates
+    therefore come from an equi-join on (lang, bucket, segment index,
+    segment content) between one side's exact segments (exploded to
+    bucket±1) and the other side's substrings at the ±max_dist position
+    window — never from enumerating whole blocks. Both explodes are
+    constant fan-out per doc (27 segment keys, ~135 windowed substrings
+    at the defaults), so candidate volume is driven by shared aligned
+    segments, not by block population. Lossless: every pair within
+    distance is a candidate, and :func:`_verify` then drops the rest.
+    """
+    nseg = max_dist + 1
+    seg_len, rem = divmod(prefix_len, nseg)
+    lens = [seg_len + 1 if i < rem else seg_len for i in range(nseg)]
+    starts = [1 + sum(lens[:i]) for i in range(nseg)]
+
+    def seg(i: int, pos: int) -> Column:
+        return F.struct(
+            F.lit(i).alias("i"), F.substring("prefix", pos, lens[i]).alias("c")
+        )
+
+    segs = [seg(i, starts[i]) for i in range(nseg)]
+    # every position a surviving segment can land on after ≤ max_dist
+    # insertions/deletions before it
+    subs = [
+        seg(i, p)
+        for i in range(nseg)
+        for p in range(
+            max(1, starts[i] - max_dist),
+            min(prefix_len - lens[i] + 1, starts[i] + max_dist) + 1,
+        )
+    ]
+
+    def side(id_alias: str, bkt: Column, structs: list[Column]) -> DataFrame:
+        return (
+            full.select(
+                F.col("doc_id").alias(id_alias), "lang", bkt.alias("bkt"), "prefix"
+            )
+            .join(
+                F.broadcast(keys.select("lang", F.col("jbucket").alias("bkt"))),
+                ["lang", "bkt"],
+                "semi",
+            )
+            .select(id_alias, "lang", "bkt", F.inline(F.array(*structs)))
+        )
+
+    seg_side = side("id_s", _bucket_pm1(F.col("bucket")), segs)
+    sub_side = side("id_w", F.col("bucket"), subs).distinct()
+    return (
+        seg_side.join(sub_side, ["lang", "bkt", "i", "c"])
+        .where(F.col("id_s") != F.col("id_w"))
+        .select(
+            F.least("id_s", "id_w").alias("left_id"),
+            F.greatest("id_s", "id_w").alias("right_id"),
+        )
+        .distinct()
+    )
+
+
 def blocked_levenshtein_pairs(
     docs: DataFrame,
     text_col: str = "text",
@@ -153,282 +315,27 @@ def blocked_levenshtein_pairs(
     bucket_size: int = 50,
     prefix_len: int = 40,
     max_dist: int = 8,
-    freq_prefilter: bool = False,
-    probe_repartition: int | None = None,
 ) -> DataFrame:
-    """Edit-distance near-dup pairs with (lang, length-bucket) blocking.
+    """Edit-distance near-dup pairs with (lang, length-bucket) blocking:
+    (left_id, right_id, edit_distance) for every same-lang pair in
+    adjacent length buckets whose ``prefix_len``-char prefixes are
+    within ``max_dist`` edits, left_id < right_id.
 
-    The probe side explodes each doc to blocks {bucket-1, bucket, bucket+1}
-    so pairs straddling a bucket boundary (e.g. lengths 49 vs 51) still
-    meet — plain same-bucket blocking silently loses exactly those
-    near-dups. Each unordered pair matches exactly one exploded key (the
-    build side keeps its single true bucket), so no pair-dedup is needed;
-    ``left_id < right_id`` keeps one direction.
+    The probe side explodes each doc to blocks {bucket-1, bucket,
+    bucket+1} so pairs straddling a bucket boundary still meet — plain
+    same-bucket blocking silently loses exactly those near-dups — and
+    each unordered pair matches exactly one exploded key, so no
+    pair-dedup is needed.
 
     Scale shape: one shuffle on the (lang, bucket) block key; pair count
     is sum of per-block ~3·C(n,2), never global C(n,2). The prefix cap
-    bounds each levenshtein call's cost, and the 3-arg
-    ``levenshtein(l, r, threshold)`` (SPARK-44510) runs the banded
-    early-abandon DP — O(len·max_dist) per pair instead of O(len²),
-    returning -1 when the distance exceeds the bound.
-
-    ``freq_prefilter``: a LOSSLESS character-frequency lower bound can
-    gate the DP — each unit edit changes the prefix's 27-dim (a-z +
-    space) count vector by at most 2 in L1, so ``lev(a, b) >=
-    L1(fv_a, fv_b) / 2`` and any pair with ``L1 > 2*max_dist`` is
-    safely rejected first; the bound holds for ANY alphabet (uncounted
-    characters change L1 by at most 1 per edit). MEASURED round 5 and
-    left DEFAULT-OFF: although it prunes 95.5% of DP calls at sf0.1,
-    wall-clock is neutral-to-worse on this workload (sf1 natural 17.2s
-    off vs 17.9s on; forced 5k-doc blocks 63.1s vs 68.4s) because the
-    3-arg banded DP with early abandon costs about the same as the
-    interpreted 27-element ``zip_with``/``aggregate`` — the knob earns
-    its keep only where verify is pricier (longer prefixes, larger
-    max_dist). Count-BLOCKING variants (a banded char-class count as a
-    third block-key component) were also measured and rejected: the
-    lossless cell width must be >= max_dist, and the within-block count
-    spread (sigma 1.3-2.9) sits entirely inside one +/-1 band, pruning
-    ~0% (BENCH_NOTES_r05.md). The fix that actually bounds the
-    quadratic is :func:`adaptive_levenshtein_pairs`' per-key routing.
+    and the banded verify bound each pair's cost. The within-block
+    quadratic itself is bounded by :func:`adaptive_levenshtein_pairs`'
+    per-key routing; this plain form is its small-key route and the
+    reference the router is tested against.
     """
-    base = docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.col(lang_col).alias("lang"),
-        F.floor(F.col(len_col) / bucket_size).alias("bucket"),
-        F.substring(text_col, 1, prefix_len).alias("prefix"),
-    )
-    if freq_prefilter:
-        # 27 counts: 'a'..'z' + space. One pass per char via replace —
-        # linear per doc, computed once per side before the join.
-        base = base.withColumn(
-            "fv",
-            F.expr(
-                "transform(concat(sequence(97, 122), array(32)), "
-                "c -> length(prefix) - length(replace(prefix, char(c), '')))"
-            ),
-        )
-    fv_cols_a = [F.col("fv").alias("fv_a")] if freq_prefilter else []
-    fv_cols_b = [F.col("fv").alias("fv_b")] if freq_prefilter else []
-    a = base.select(
-        F.col("doc_id").alias("left_id"),
-        "lang",
-        F.explode(
-            F.array(F.col("bucket") - 1, F.col("bucket"), F.col("bucket") + 1)
-        ).alias("jbucket"),
-        F.col("prefix").alias("prefix_a"),
-        *fv_cols_a,
-    )
-    if probe_repartition:
-        # The pair-enumeration + banded-DP stage is CPU-bound, but its
-        # parallelism follows the probe side's BYTE-sized partitioning:
-        # a broadcast-joined probe inherits the parquet scan's few
-        # input splits (and AQE coalesces shuffles by bytes, blind to
-        # the quadratic per-row fan-out downstream). A round-robin
-        # repartition of the narrow (id, lang, bucket, prefix) rows
-        # spreads the DP across the cluster — measured 19.9s -> 9.7s
-        # at the sf1 profile on 32 cores. Callers enable it ONLY when
-        # the corpus is hint-proven small enough that its b-side
-        # broadcasts (adaptive_levenshtein_pairs); on a corpus that
-        # shuffle-joins, the join's own key exchange already sets
-        # parallelism and the extra pass would be waste.
-        a = a.repartition(probe_repartition)
-    b = base.select(
-        F.col("doc_id").alias("right_id"),
-        "lang",
-        F.col("bucket").alias("jbucket"),
-        F.col("prefix").alias("prefix_b"),
-        *fv_cols_b,
-    )
-    if freq_prefilter:
-        # when() gates the DP on the cheap bound — a separate filter
-        # could be reordered by the optimizer behind the DP.
-        l1 = F.aggregate(
-            F.zip_with("fv_a", "fv_b", lambda x, y: F.abs(x - y)),
-            F.lit(0),
-            lambda acc, x: acc + x,
-        )
-        dist = F.when(
-            l1 <= 2 * max_dist,
-            F.levenshtein("prefix_a", "prefix_b", max_dist),
-        ).otherwise(F.lit(-1))
-    else:
-        dist = F.levenshtein("prefix_a", "prefix_b", max_dist)
-    return (
-        a.join(b, on=["lang", "jbucket"])
-        .filter(F.col("left_id") < F.col("right_id"))
-        .select(
-            "left_id",
-            "right_id",
-            dist.cast("long").alias("edit_distance"),
-        )
-        .filter(F.col("edit_distance") >= 0)
-    )
-
-
-def segmented_levenshtein_pairs(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    lang_col: str = "lang",
-    len_col: str = "n_chars",
-    bucket_size: int = 50,
-    prefix_len: int = 40,
-    max_dist: int = 8,
-) -> DataFrame:
-    """PassJoin-style edit-distance near-dup pairs: the same result set
-    as :func:`blocked_levenshtein_pairs` (same lang / bucket±1 /
-    prefix-levenshtein ≤ max_dist semantics) with an additional
-    LOSSLESS pigeonhole prefilter, so within-block candidates no longer
-    grow quadratically with the corpus.
-
-    The pigeonhole (Li, Deng, Feng: PassJoin, PVLDB 2011): split one
-    side's prefix into ``max_dist + 1`` segments; ≤ max_dist edits can
-    destroy at most max_dist of them, so at least one segment survives
-    EXACTLY in any partner within distance, at a position shifted by at
-    most max_dist. Candidates therefore come from an equi-join on
-    (lang, bucket, segment index, segment content) between one side's
-    exact segments and the other side's substrings at the ±max_dist
-    position window — never from enumerating whole blocks. Docs whose
-    prefix is shorter than ``prefix_len`` (the fixed segment layout
-    doesn't apply) fall back to the block join, on their pairs only.
-
-    Scale shape: both explodes are constant fan-out per doc (27 segment
-    keys, ~135 windowed substrings); candidates are pairs sharing an
-    aligned segment, then exact-verified with the banded 3-arg
-    levenshtein exactly as before.
-
-    MEASURED FINDING (round 4, recorded so the trade is priced): on the
-    driver's synthetic corpus this is ~1.6x SLOWER than
-    :func:`blocked_levenshtein_pairs` at both sf0.1 (4.3s vs 2.6s) and
-    sf1 (27s vs 18s) — document openings share common 4-5-char
-    segments at aligned positions, so the pigeonhole filter is
-    unselective there and the ~160-key/doc explode + pair-distinct
-    costs more than it prunes. Round 5 located the crossover with a
-    forced-block-profile scan (block join vs this path: 63s vs 88s at
-    5k-doc blocks, 115s vs 107s at 10k, >45min vs 316s at 25k) and
-    :func:`adaptive_levenshtein_pairs` now routes oversized keys here
-    AUTOMATICALLY — the escape hatch became a per-key router instead
-    of a manual switch. Hash-equal to the block join by construction
-    (lossless pigeonhole), pinned by tests.
-    """
-    nseg = max_dist + 1
-    seg_len = prefix_len // nseg
-    rem = prefix_len % nseg
-    lens = [seg_len + 1 if i < rem else seg_len for i in range(nseg)]
-    starts = [1 + sum(lens[:i]) for i in range(nseg)]
-
-    base = docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.col(lang_col).alias("lang"),
-        F.floor(F.col(len_col) / bucket_size).alias("bucket"),
-        F.substring(text_col, 1, prefix_len).alias("prefix"),
-    )
-    full = base.where(F.length("prefix") == prefix_len)
-    short = base.where(F.length("prefix") < prefix_len)
-
-    # segment side: exact segments, exploded to bucket±1 so pairs
-    # straddling a bucket boundary still meet
-    segs = F.array(
-        *[
-            F.struct(
-                F.lit(i).alias("i"),
-                F.substring("prefix", starts[i], lens[i]).alias("c"),
-            )
-            for i in range(nseg)
-        ]
-    )
-    seg_side = (
-        full.select(
-            F.col("doc_id").alias("id_s"),
-            "lang",
-            F.explode(
-                F.array(
-                    F.col("bucket") - 1, F.col("bucket"), F.col("bucket") + 1
-                )
-            ).alias("bkt"),
-            segs.alias("sgs"),
-        )
-        .select("id_s", "lang", "bkt", F.explode("sgs").alias("sg"))
-        .select(
-            "id_s",
-            "lang",
-            "bkt",
-            F.col("sg.i").alias("i"),
-            F.col("sg.c").alias("c"),
-        )
-    )
-
-    # substring side: every candidate position a surviving segment can
-    # land on after ≤ max_dist insertions/deletions before it
-    subs = []
-    for i in range(nseg):
-        lo = max(1, starts[i] - max_dist)
-        hi = min(prefix_len - lens[i] + 1, starts[i] + max_dist)
-        for p in range(lo, hi + 1):
-            subs.append(
-                F.struct(
-                    F.lit(i).alias("i"),
-                    F.substring("prefix", p, lens[i]).alias("c"),
-                )
-            )
-    sub_side = full.select(
-        F.col("doc_id").alias("id_w"),
-        "lang",
-        F.col("bucket").alias("bkt"),
-        F.explode(F.array(*subs)).alias("sg"),
-    ).select(
-        "id_w", "lang", "bkt", F.col("sg.i").alias("i"), F.col("sg.c").alias("c")
-    ).dropDuplicates(["id_w", "lang", "bkt", "i", "c"])
-
-    fast = (
-        seg_side.join(sub_side, ["lang", "bkt", "i", "c"])
-        .where(F.col("id_s") != F.col("id_w"))
-        .select(
-            F.least("id_s", "id_w").alias("left_id"),
-            F.greatest("id_s", "id_w").alias("right_id"),
-        )
-    )
-
-    # fallback: pairs with at least one short prefix use the plain
-    # block join (short side exploded to bucket±1, partner side full)
-    sa = short.select(
-        F.col("doc_id").alias("id_s"),
-        "lang",
-        F.explode(
-            F.array(F.col("bucket") - 1, F.col("bucket"), F.col("bucket") + 1)
-        ).alias("bkt"),
-    )
-    sb = base.select(
-        F.col("doc_id").alias("id_w"), "lang", F.col("bucket").alias("bkt")
-    )
-    slow = (
-        sa.join(sb, ["lang", "bkt"])
-        .where(F.col("id_s") != F.col("id_w"))
-        .select(
-            F.least("id_s", "id_w").alias("left_id"),
-            F.greatest("id_s", "id_w").alias("right_id"),
-        )
-    )
-
-    cand = fast.unionAll(slow).distinct()
-    pa = base.select(
-        F.col("doc_id").alias("left_id"), F.col("prefix").alias("prefix_a")
-    )
-    pb = base.select(
-        F.col("doc_id").alias("right_id"), F.col("prefix").alias("prefix_b")
-    )
-    return (
-        cand.join(pa, "left_id")
-        .join(pb, "right_id")
-        .select(
-            "left_id",
-            "right_id",
-            F.levenshtein("prefix_a", "prefix_b", max_dist)
-            .cast("long")
-            .alias("edit_distance"),
-        )
-        .filter(F.col("edit_distance") >= 0)
-    )
+    base = _lev_base(docs, text_col, id_col, lang_col, len_col, bucket_size, prefix_len)
+    return _blocked_pairs(base, max_dist)
 
 
 def adaptive_levenshtein_pairs(
@@ -441,13 +348,11 @@ def adaptive_levenshtein_pairs(
     prefix_len: int = 40,
     max_dist: int = 8,
     block_cap: int = 40_000,
-    freq_prefilter: bool = False,
     row_hint: int | None = None,
 ) -> DataFrame:
     """Edit-distance near-dups with PER-KEY routing between the block
-    join and the PassJoin segmented path — the round-5 fix that BOUNDS
-    the block join's within-block quadratic term instead of hoping
-    blocks stay small.
+    join and the PassJoin segment join — BOUNDS the block join's
+    within-block quadratic term instead of hoping blocks stay small.
 
     Same result set as :func:`blocked_levenshtein_pairs` (same lang /
     bucket±1 / prefix-levenshtein ≤ max_dist semantics, oracle
@@ -458,24 +363,23 @@ def adaptive_levenshtein_pairs(
     length-range/bucket_size) classifies each key by its a-side
     population (the bucket±1 sum): keys at or under ``block_cap`` run
     the enumeration-cheap block join — per-key pair count ≤
-    block_cap² — and oversized keys run the PassJoin segment join,
+    block_cap² — and oversized keys run :func:`_passjoin_candidates`,
     whose candidate volume is driven by shared aligned segments, not
-    block population. Both branches end in the same lossless
-    char-frequency gate + banded-DP verify.
+    block population. All branches end in the same banded-DP verify.
 
     Measured basis for the default cap (round-5 crossover scan on
     forced block profiles, BENCH_NOTES_r05.md): block join vs
-    segmented = 63s vs 88s at 10 blocks of 5k docs (a_pop~15k), 115s
+    PassJoin = 63s vs 88s at 10 blocks of 5k docs (a_pop~15k), 115s
     vs 107s at 5 blocks of 10k (a_pop~30k), >45 MINUTES (killed) vs
     316s at 2 blocks of 25k (a_pop~75k — key skew additionally
     collapses the block join's parallelism to the giant keys). The
     ROUTER itself costs ~40% at the boundary (end-to-end at a_pop~30k:
     149s routed vs 115s pure block — persist, census, the three-branch
     union), so the cap sits ABOVE the raw-path toss-up zone, at the
-    point where segmented wins decisively even with router overhead.
+    point where PassJoin wins decisively even with router overhead.
     End-to-end receipts at the default cap: a_pop~15k routes block at
-    67.9s (pure block 63-68s); a_pop~75k routes segmented at a
-    MEASURED 279s (vs pure segmented 316s — the router's big-key doc
+    67.9s (pure block 63-68s); a_pop~75k routes PassJoin at a
+    MEASURED 279s (vs pure PassJoin 316s — the router's big-key doc
     restriction prunes the explode inputs — and vs >2700s block:
     a >=9.7x win), identical row counts throughout. At the natural sf1 profile
     (max block 2.4k, a_pop <= 7k) every key routes to the block join,
@@ -496,7 +400,7 @@ def adaptive_levenshtein_pairs(
     oversized WITHOUT running the census: plan construction triggers
     zero Spark jobs (plan dumps, audits, and every at-or-below-cap
     corpus stay job-free). Above the hint — or with no hint — the
-    eager census aggregate runs exactly as before (a priced cold-path
+    eager census aggregate runs (a priced cold-path
     action, ~0.3 s at sf0.1). When routing does engage, ``base`` is
     persisted via ``track`` for the branches' shared scans; the
     persist lives until the caller's session-level
@@ -507,47 +411,22 @@ def adaptive_levenshtein_pairs(
     from pyspark_movie_recommender_spark.operators.cache import track
     from pyspark_movie_recommender_spark.operators.lineage import ckpt
 
-    # probe-parallelism knob for the block join: when the footer hint
-    # proves the corpus small enough that the build side broadcasts
-    # (~1M rows of 40-char prefixes stays well under the 64MB
-    # threshold), spread the CPU-bound DP stage over 2x the cores —
-    # the byte-sized input partitioning otherwise caps it at the scan's
-    # split count (measured 2x win at the sf1 profile). Left None on
-    # unhinted/large corpora, where the join's own key exchange sets
-    # parallelism.
+    base = _lev_base(docs, text_col, id_col, lang_col, len_col, bucket_size, prefix_len)
+    # ~1M rows of 40-char prefixes stays well under the broadcast
+    # threshold, so a hint-proven corpus that small gets the probe
+    # repartition (2x the cores; see _blocked_pairs)
     probe_par: int | None = None
     if row_hint is not None and row_hint <= 1_000_000:
         probe_par = docs.sparkSession.sparkContext.defaultParallelism * 2
-
     if row_hint is not None and row_hint <= block_cap:
-        return blocked_levenshtein_pairs(
-            docs,
-            text_col,
-            id_col,
-            lang_col,
-            len_col,
-            bucket_size,
-            prefix_len,
-            max_dist,
-            freq_prefilter,
-            probe_repartition=probe_par,
-        )
+        return _blocked_pairs(base, max_dist, probe_par)
 
-    base = docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.col(lang_col).alias("lang"),
-        F.floor(F.col(len_col) / bucket_size).alias("bucket"),
-        F.substring(text_col, 1, prefix_len).alias("prefix"),
-    )
-    if freq_prefilter:
-        base = base.withColumn(
-            "fv",
-            F.expr(
-                "transform(concat(sequence(97, 122), array(32)), "
-                "c -> length(prefix) - length(replace(prefix, char(c), '')))"
-            ),
+    def a_pop(census: DataFrame) -> DataFrame:
+        return (
+            census.select("lang", _bucket_pm1(F.col("bucket")).alias("jbucket"), "n")
+            .groupBy("lang", "jbucket")
+            .agg(F.sum("n").alias("a_pop"))
         )
-    base = base.withColumn("is_short", F.length("prefix") < prefix_len)
 
     # --- routing census: a-side population per join key -------------
     # one construction-time aggregate over the corpus, bounded output
@@ -559,245 +438,56 @@ def adaptive_levenshtein_pairs(
     # routing machinery measured at sf0.1 is paid only when it buys
     # a bounded quadratic.
     census0 = base.groupBy("lang", "bucket").agg(F.count(F.lit(1)).alias("n"))
-    has_big = (
-        census0.select(
-            "lang",
-            F.explode(
-                F.array(F.col("bucket") - 1, F.col("bucket"), F.col("bucket") + 1)
-            ).alias("jbucket"),
-            "n",
-        )
-        .groupBy("lang", "jbucket")
-        .agg(F.sum("n").alias("a_pop"))
-        .filter(F.col("a_pop") > block_cap)
-        .limit(1)
-        .count()
-        > 0
-    )
-    if not has_big:
-        return blocked_levenshtein_pairs(
-            docs,
-            text_col,
-            id_col,
-            lang_col,
-            len_col,
-            bucket_size,
-            prefix_len,
-            max_dist,
-            freq_prefilter,
-            probe_repartition=probe_par,
-        )
+    if a_pop(census0).filter(F.col("a_pop") > block_cap).limit(1).count() == 0:
+        return _blocked_pairs(base, max_dist, probe_par)
 
-    base = track(base)
+    base = track(base.withColumn("short", F.length("prefix") < prefix_len))
     # tiny relation; ckpt materializes it once so small_keys/big_keys
-    # and their six broadcast semi-join consumers don't each rescan
+    # and their broadcast semi-join consumers don't each rescan
     census = ckpt(census0)
-    apop = (
-        census.select(
-            "lang",
-            F.explode(
-                F.array(F.col("bucket") - 1, F.col("bucket"), F.col("bucket") + 1)
-            ).alias("jbucket"),
-            "n",
-        )
-        .groupBy("lang", "jbucket")
-        .agg(F.sum("n").alias("a_pop"))
-    )
     routes = census.select("lang", F.col("bucket").alias("jbucket")).join(
-        apop, ["lang", "jbucket"]
+        a_pop(census), ["lang", "jbucket"]
     )
     small_keys = routes.filter(F.col("a_pop") <= block_cap).select("lang", "jbucket")
     big_keys = routes.filter(F.col("a_pop") > block_cap).select("lang", "jbucket")
 
-    fvc = ["fv"] if freq_prefilter else []
-    a_side = base.select(
-        F.col("doc_id").alias("left_id"),
-        "lang",
-        F.explode(
-            F.array(F.col("bucket") - 1, F.col("bucket"), F.col("bucket") + 1)
-        ).alias("jbucket"),
-        F.col("prefix").alias("prefix_a"),
-        F.col("is_short").alias("short_a"),
-        *[F.col(c).alias(f"{c}_a") for c in fvc],
-    )
-    b_side = base.select(
-        F.col("doc_id").alias("right_id"),
-        "lang",
-        F.col("bucket").alias("jbucket"),
-        F.col("prefix").alias("prefix_b"),
-        F.col("is_short").alias("short_b"),
-        *[F.col(c).alias(f"{c}_b") for c in fvc],
-    )
+    def in_keys(df: DataFrame, keys: DataFrame) -> DataFrame:
+        return df.join(F.broadcast(keys), ["lang", "jbucket"], "semi")
 
-    def _verify(pairs: DataFrame) -> DataFrame:
-        if freq_prefilter:
-            l1 = F.aggregate(
-                F.zip_with("fv_a", "fv_b", lambda x, y: F.abs(x - y)),
-                F.lit(0),
-                lambda acc, x: acc + x,
-            )
-            dist = F.when(
-                l1 <= 2 * max_dist,
-                F.levenshtein("prefix_a", "prefix_b", max_dist),
-            ).otherwise(F.lit(-1))
-        else:
-            dist = F.levenshtein("prefix_a", "prefix_b", max_dist)
-        return (
-            pairs.select(
-                "left_id", "right_id", dist.cast("long").alias("edit_distance")
-            )
-            .filter(F.col("edit_distance") >= 0)
-        )
+    a_side, b_side = _block_sides(base)
 
     # --- branch 1: small keys, plain block join ----------------------
-    small_pairs = (
-        a_side.join(F.broadcast(small_keys), ["lang", "jbucket"], "semi")
-        .join(
-            b_side.join(F.broadcast(small_keys), ["lang", "jbucket"], "semi"),
-            ["lang", "jbucket"],
-        )
-        .filter(F.col("left_id") < F.col("right_id"))
-    )
+    small_pairs = _block_join(in_keys(a_side, small_keys), in_keys(b_side, small_keys))
 
     # --- branch 2: big keys, pairs involving a short prefix ---------
     # the a<b filter pins each pair to key bucket(greater id); the
     # short side of each sub-join keeps the enumeration linear in
     # |short docs| x block population
-    a_big = a_side.join(F.broadcast(big_keys), ["lang", "jbucket"], "semi")
-    b_big = b_side.join(F.broadcast(big_keys), ["lang", "jbucket"], "semi")
-    big_short_pairs = (
-        a_big.filter("short_a")
-        .join(b_big, ["lang", "jbucket"])
-        .unionByName(
-            a_big.filter(~F.col("short_a")).join(
-                b_big.filter("short_b"), ["lang", "jbucket"]
-            )
-        )
-        .filter(F.col("left_id") < F.col("right_id"))
+    a_big, b_big = in_keys(a_side, big_keys), in_keys(b_side, big_keys)
+    big_short_pairs = _block_join(a_big.filter("short_a"), b_big).unionByName(
+        _block_join(a_big.filter(~F.col("short_a")), b_big.filter("short_b"))
     )
 
     # --- branch 3: big keys, full-full pairs via PassJoin segments ---
-    nseg = max_dist + 1
-    seg_len = prefix_len // nseg
-    rem = prefix_len % nseg
-    lens = [seg_len + 1 if i < rem else seg_len for i in range(nseg)]
-    starts = [1 + sum(lens[:i]) for i in range(nseg)]
-    full = base.filter(~F.col("is_short"))
-
-    segs = F.array(
-        *[
-            F.struct(
-                F.lit(i).alias("i"),
-                F.substring("prefix", starts[i], lens[i]).alias("c"),
-            )
-            for i in range(nseg)
-        ]
-    )
-    seg_side = (
-        full.select(
-            F.col("doc_id").alias("id_s"),
-            "lang",
-            F.explode(
-                F.array(F.col("bucket") - 1, F.col("bucket"), F.col("bucket") + 1)
-            ).alias("bkt"),
-            segs.alias("sgs"),
-        )
-        .join(
-            F.broadcast(big_keys.select("lang", F.col("jbucket").alias("bkt"))),
-            ["lang", "bkt"],
-            "semi",
-        )
-        .select("id_s", "lang", "bkt", F.explode("sgs").alias("sg"))
-        .select("id_s", "lang", "bkt", F.col("sg.i").alias("i"), F.col("sg.c").alias("c"))
-    )
-    subs = []
-    for i in range(nseg):
-        lo = max(1, starts[i] - max_dist)
-        hi = min(prefix_len - lens[i] + 1, starts[i] + max_dist)
-        for p in range(lo, hi + 1):
-            subs.append(
-                F.struct(
-                    F.lit(i).alias("i"),
-                    F.substring("prefix", p, lens[i]).alias("c"),
-                )
-            )
-    sub_side = (
-        full.join(
-            F.broadcast(big_keys.select("lang", F.col("jbucket").alias("bucket"))),
-            ["lang", "bucket"],
-            "semi",
-        )
-        .select(
-            F.col("doc_id").alias("id_w"),
-            "lang",
-            F.col("bucket").alias("bkt"),
-            F.explode(F.array(*subs)).alias("sg"),
-        )
-        .select(
-            "id_w", "lang", "bkt", F.col("sg.i").alias("i"), F.col("sg.c").alias("c")
-        )
-        .dropDuplicates(["id_w", "lang", "bkt", "i", "c"])
-    )
-    cand = (
-        seg_side.join(sub_side, ["lang", "bkt", "i", "c"])
-        .where(F.col("id_s") != F.col("id_w"))
-        .select(
-            F.least("id_s", "id_w").alias("left_id"),
-            F.greatest("id_s", "id_w").alias("right_id"),
-        )
-        .distinct()
-    )
     # pin the routing predicate: keep only pairs whose key — the
     # GREATER id's (lang, bucket) — is big (a pair discovered via the
     # lesser doc's big bucket belongs to branch 1 when the greater
     # doc's bucket is small, and to branch 2 when a side is short)
-    pa = base.select(
-        F.col("doc_id").alias("left_id"),
-        F.col("prefix").alias("prefix_a"),
-        *[F.col(c).alias(f"{c}_a") for c in fvc],
+    cand = _passjoin_candidates(
+        base.filter(~F.col("short")), big_keys, prefix_len, max_dist
     )
-    pb = base.select(
-        F.col("doc_id").alias("right_id"),
-        "lang",
-        F.col("bucket").alias("jbucket"),
-        F.col("prefix").alias("prefix_b"),
-        *[F.col(c).alias(f"{c}_b") for c in fvc],
+    prefix_a = base.select(
+        F.col("doc_id").alias("left_id"), F.col("prefix").alias("prefix_a")
     )
-    big_full_pairs = (
-        cand.join(pb, "right_id")
-        .join(F.broadcast(big_keys), ["lang", "jbucket"], "semi")
-        .join(pa, "left_id")
+    big_full_pairs = in_keys(cand.join(b_side, "right_id"), big_keys).join(
+        prefix_a, "left_id"
     )
 
     return (
-        _verify(small_pairs)
-        .unionByName(_verify(big_short_pairs))
-        .unionByName(_verify(big_full_pairs))
+        _verify(small_pairs, max_dist)
+        .unionByName(_verify(big_short_pairs, max_dist))
+        .unionByName(_verify(big_full_pairs, max_dist))
     )
-
-
-def minhash_signature(shingles: Column, num_hashes: int = 64, seed: int = 42) -> Column:
-    """MinHash signature in pure higher-order SQL — REFERENCE FORM.
-
-    Kept as the executable spec (and for plans that must stay UDF-free);
-    the hot path is :func:`minhash_signature_udf` — Catalyst inlines the
-    shared ``base`` sub-expression into all ``num_hashes`` array_min
-    branches and evaluates the nested lambdas interpreted, which is
-    orders of magnitude slower than the Arrow/NumPy form.
-    """
-    import random
-
-    rng = random.Random(seed)
-    base = F.transform(shingles, lambda s: F.xxhash64(s, F.lit(seed)))
-    sigs = []
-    for _ in range(num_hashes):
-        salt = rng.randrange(0, 2**62)
-        sigs.append(
-            F.array_min(
-                F.transform(base, lambda h: F.xxhash64(F.lit(salt), h))
-            )
-        )
-    return F.array(*sigs)
 
 
 def minhash_signature_udf(n: int = 3, num_hashes: int = 64, seed: int = 42):
@@ -963,38 +653,14 @@ def minhash_lsh_pairs(
     return est
 
 
-def simhash64(text_col: Column | str, seed: int = 42) -> Column:
-    """64-bit SimHash over whitespace tokens, pure SQL.
-
-    For each bit position b, sum over tokens of ±1 according to bit b of
-    xxhash64(token); bit set iff the sum is positive. Near-duplicate
-    documents land within small Hamming distance.
-    """
-    tokens = ws_tokens(text_col)
-    hashes = F.transform(tokens, lambda t: F.xxhash64(t, F.lit(seed)))
-    bits = []
-    for b in range(64):
-        contrib = F.aggregate(
-            hashes,
-            F.lit(0).cast("long"),
-            lambda acc, h: acc
-            + F.when(F.shiftright(h, b).bitwiseAND(F.lit(1)) == 1, 1).otherwise(-1),
-        )
-        bit = F.when(contrib > 0, F.lit(1).cast("long")).otherwise(F.lit(0).cast("long"))
-        bits.append(F.shiftleft(bit, b))
-    out = bits[0]
-    for bc in bits[1:]:
-        out = out.bitwiseOR(bc)
-    return out
-
-
 def simhash64_udf(seed: int = 42):
-    """Arrow-batched SimHash, the hot path (``simhash64`` is the pure-SQL
-    spec — Catalyst inlines the token-hash array into all 64 per-bit
-    aggregates and runs them interpreted).
+    """Arrow-batched 64-bit SimHash over whitespace tokens.
 
-    Whitespace tokens → FNV-style wrapping token hash → per-bit ±1 sums
-    via one (tokens x 64) broadcasted shift, sign-bits packed to int64.
+    Whitespace tokens → FNV-style wrapping token hash → for each bit
+    position b, the sum over tokens of ±1 according to bit b of the
+    token hash; bit b is set iff that sum is positive, and the sign-bits
+    are packed to int64. Near-duplicate documents land within small
+    Hamming distance.
     """
     import numpy as np
     from pyspark.sql.functions import pandas_udf

@@ -53,11 +53,6 @@ def query(name: str, oracle: str | None = None, bench: bool = False):
     return deco
 
 
-# ---------------------------------------------------------------------------
-# flagship: per-customer top-3 orders by totalprice, with nation name
-# ---------------------------------------------------------------------------
-
-
 # Parts are imported IN ORDER — registration order (and therefore
 # QUERIES/BENCH_QUERIES iteration order) is identical to the former
 # single-module registry.

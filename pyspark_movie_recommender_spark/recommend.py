@@ -148,6 +148,27 @@ def recommend_for_user(
     return global_top_k(preds, order, k)
 
 
+def _order_history_als(spark: SparkSession, sf_dir: str):
+    """Implicit-feedback ALS fitted on order history: rating = log1p of
+    total quantity per customer×part (one orders⋈lineitem shuffle + one
+    groupBy on the composite key). Returns the fitted model."""
+    from pyspark_movie_recommender_spark.sources import load_table
+
+    li = load_table(spark, sf_dir, "lineitem").select(
+        "l_orderkey", "l_partkey", "l_quantity"
+    )
+    orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
+    ratings = (
+        li.join(orders, li.l_orderkey == orders.o_orderkey)
+        .groupBy(
+            F.col("o_custkey").cast("int").alias("user_id"),
+            F.col("l_partkey").cast("int").alias("item_id"),
+        )
+        .agg(F.log1p(F.sum("l_quantity")).alias("rating"))
+    )
+    return _als(rank=8, implicit=True, max_iter=5).fit(ratings)
+
+
 def recommend_parts_for_customers(
     spark: SparkSession, sf_dir: str, k: int = 5
 ) -> DataFrame:
@@ -160,20 +181,7 @@ def recommend_parts_for_customers(
     factorization. ``recommendForAllUsers`` does blocked cross products
     JVM-side — never a driver loop.
     """
-    from pyspark_movie_recommender_spark.sources import load_table
-
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey", "l_quantity")
-    orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    ratings = (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .groupBy(
-            F.col("o_custkey").cast("int").alias("user_id"),
-            F.col("l_partkey").cast("int").alias("item_id"),
-        )
-        .agg(F.log1p(F.sum("l_quantity")).alias("rating"))
-    )
-    model = _als(rank=8, implicit=True, max_iter=5).fit(ratings)
-    recs = model.recommendForAllUsers(k)
+    recs = _order_history_als(spark, sf_dir).recommendForAllUsers(k)
     return recs.select(
         F.col("user_id").cast("long").alias("c_custkey"),
         F.explode("recommendations").alias("rec"),
@@ -201,22 +209,8 @@ def item_neighbors_from_factors(
     from pyspark_movie_recommender_spark.operators.similarity import (
         cosine_topk_bruteforce,
     )
-    from pyspark_movie_recommender_spark.sources import load_table
 
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_partkey", "l_quantity"
-    )
-    orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    ratings = (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .groupBy(
-            F.col("o_custkey").cast("int").alias("user_id"),
-            F.col("l_partkey").cast("int").alias("item_id"),
-        )
-        .agg(F.log1p(F.sum("l_quantity")).alias("rating"))
-    )
-    model = _als(rank=8, implicit=True, max_iter=5).fit(ratings)
-    factors = model.itemFactors.select(
+    factors = _order_history_als(spark, sf_dir).itemFactors.select(
         F.col("id").cast("long").alias("vec_id"),
         F.col("features").cast("array<float>").alias("embedding"),
     )

@@ -1,8 +1,8 @@
 """Interpreter-start shim: replay protobuf_compat in Spark workers.
 
 Python auto-imports ``sitecustomize`` at startup when this directory is
-on PYTHONPATH (``protobuf_compat.enable_for_workers`` puts it there
-before the JVM launches). Spark's Python processes — the
+on PYTHONPATH (``protobuf_compat.enable_for_session`` puts it on the
+session's worker PYTHONPATH). Spark's Python processes — the
 transformWithState driver worker and the executor UDF daemons — import
 ``StateMessage_pb2`` long after launch, so the bundled-runtime sys.path
 fix and the lenient gencode/runtime check must already be in place;

@@ -216,6 +216,61 @@ def _stateful_update_fn():
     return update
 
 
+def _require_protobuf(spark: SparkSession, alternative: str | None = None) -> None:
+    """The transformWithState gate: wire up a protobuf runtime for the
+    session's Python workers (protobuf_compat), else raise ImportError
+    naming ``alternative``, the applyInPandasWithState job to use
+    where no runtime exists."""
+    from pyspark_movie_recommender_spark.streaming.protobuf_compat import (
+        enable_for_session,
+    )
+
+    reason = enable_for_session(spark)
+    if reason is None:
+        return
+    hint = ""
+    if alternative is not None:
+        hint = f"; use {alternative} (applyInPandasWithState) where it is unavailable"
+    raise ImportError(
+        f"transformWithStateInPandas requires the protobuf package{hint} — {reason}"
+    )
+
+
+def _user_peaks_processor():
+    """The per-user (count, peak) transformWithState processor used by
+    both the one-shot and the resumable user-peaks jobs — one
+    definition so the resume test exercises EXACTLY the production
+    update logic."""
+    import pandas as pd
+    from pyspark.sql.streaming import StatefulProcessor, StatefulProcessorHandle
+    from pyspark.sql.types import DoubleType, LongType, StructField, StructType
+
+    state_schema = StructType(
+        [StructField("n", LongType(), True), StructField("peak", DoubleType(), True)]
+    )
+
+    class UserPeaks(StatefulProcessor):
+        def init(self, handle: StatefulProcessorHandle) -> None:
+            self._state = handle.getValueState("peaks", state_schema)
+
+        def handleInputRows(self, key, rows, timerValues):
+            n, peak = 0, float("-inf")
+            if self._state.exists():
+                n, peak = self._state.get()
+            for pdf in rows:
+                n += len(pdf)
+                peak = max(peak, float(pdf["value"].max()))
+            self._state.update((n, peak))
+            yield pd.DataFrame(
+                {"user_id": [key[0]], "n_events": [n], "peak_value": [round(peak, 2)]}
+            )
+
+        def close(self) -> None:
+            pass
+
+    return UserPeaks()
+
+
 def _run_updates_to_parquet(
     out: DataFrame, sink_dir: str, checkpoint_dir: str
 ) -> None:
@@ -348,44 +403,7 @@ def user_peaks_tws_resumable(
     for real here); only where NO runtime exists does the gate fire,
     with the applyInPandasWithState twin covering resume semantics.
     """
-    from pyspark_movie_recommender_spark.streaming.protobuf_compat import (
-        enable_for_session,
-    )
-
-    _pb_reason = enable_for_session(spark)
-    if _pb_reason is not None:
-        raise ImportError(
-            "transformWithStateInPandas requires the protobuf package; "
-            "use running_user_totals_resumable (applyInPandasWithState) "
-            "where it is unavailable — " + _pb_reason
-        )
-    import pandas as pd
-    from pyspark.sql.streaming import StatefulProcessor
-    from pyspark.sql.types import DoubleType, LongType, StructField, StructType
-
-    state_schema = StructType(
-        [StructField("n", LongType(), True), StructField("peak", DoubleType(), True)]
-    )
-
-    class UserPeaks(StatefulProcessor):
-        def init(self, handle) -> None:
-            self._state = handle.getValueState("peaks", state_schema)
-
-        def handleInputRows(self, key, rows, timerValues):
-            n, peak = 0, float("-inf")
-            if self._state.exists():
-                n, peak = self._state.get()
-            for pdf in rows:
-                n += len(pdf)
-                peak = max(peak, float(pdf["value"].max()))
-            self._state.update((n, peak))
-            yield pd.DataFrame(
-                {"user_id": [key[0]], "n_events": [n], "peak_value": [round(peak, 2)]}
-            )
-
-        def close(self) -> None:
-            pass
-
+    _require_protobuf(spark, "running_user_totals_resumable")
     ev = (
         spark.readStream.schema(schema)
         .option("recursiveFileLookup", "true")
@@ -393,7 +411,7 @@ def user_peaks_tws_resumable(
         .select("user_id", "value")
     )
     out = ev.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=UserPeaks(),
+        statefulProcessor=_user_peaks_processor(),
         outputStructType="user_id bigint, n_events bigint, peak_value double",
         outputMode="Update",
         timeMode="None",
@@ -432,59 +450,11 @@ def user_peaks_transform_with_state(
     tries the container's bundled pure-Python runtime — with it, this
     path runs for real and the stream≡batch test pins it).
     """
-    from pyspark_movie_recommender_spark.streaming.protobuf_compat import (
-        enable_for_session,
-    )
-
-    _pb_reason = enable_for_session(spark)
-    if _pb_reason is not None:
-        raise ImportError(
-            "transformWithStateInPandas requires the protobuf package; "
-            "use running_user_totals_stream (applyInPandasWithState) "
-            "where it is unavailable — " + _pb_reason
-        )
-    import pandas as pd
-    from pyspark.sql.streaming import StatefulProcessor, StatefulProcessorHandle
-    from pyspark.sql.types import (
-        DoubleType,
-        LongType,
-        StructField,
-        StructType,
-    )
-
-    state_schema = StructType(
-        [
-            StructField("n", LongType(), True),
-            StructField("peak", DoubleType(), True),
-        ]
-    )
-
-    class UserPeaks(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState("peaks", state_schema)
-
-        def handleInputRows(self, key, rows, timerValues):
-            n, peak = 0, float("-inf")
-            if self._state.exists():
-                n, peak = self._state.get()
-            for pdf in rows:
-                n += len(pdf)
-                peak = max(peak, float(pdf["value"].max()))
-            self._state.update((n, peak))
-            yield pd.DataFrame(
-                {
-                    "user_id": [key[0]],
-                    "n_events": [n],
-                    "peak_value": [round(peak, 2)],
-                }
-            )
-
-        def close(self) -> None:
-            pass
+    _require_protobuf(spark, "running_user_totals_stream")
 
     ev = _events_stream(spark, sf_dir).select("user_id", "value")
     out = ev.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=UserPeaks(),
+        statefulProcessor=_user_peaks_processor(),
         outputStructType="user_id bigint, n_events bigint, peak_value double",
         outputMode="Update",
         timeMode="None",
@@ -812,16 +782,7 @@ def running_user_stats_tws(
     when protobuf_compat can wire up no runtime at all (this container
     carries a bundled pure-Python one, so the path runs for real).
     """
-    from pyspark_movie_recommender_spark.streaming.protobuf_compat import (
-        enable_for_session,
-    )
-
-    _pb_reason = enable_for_session(spark)
-    if _pb_reason is not None:
-        raise ImportError(
-            "transformWithStateInPandas requires the protobuf package — "
-            + _pb_reason
-        )
+    _require_protobuf(spark)
 
     import pandas as pd
 

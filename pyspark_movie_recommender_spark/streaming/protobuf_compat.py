@@ -38,7 +38,8 @@ hard way:
 Worker processes can't be monkeypatched from the driver, so the same
 logic ships as a ``sitecustomize.py`` shim (``_pb_shim/``) that Python
 auto-imports at interpreter start when its directory is on PYTHONPATH;
-:func:`enable_for_workers` wires that up before the JVM launches.
+:func:`enable_for_session` puts that directory on a session's worker
+PYTHONPATH.
 
 Everything here is stdlib-only and loadable by file path (the shim
 imports it without the package being importable in the worker).
@@ -177,34 +178,6 @@ def ensure_protobuf() -> str | None:
         "google.protobuf unavailable: no installed runtime and no usable "
         "bundled runtime (tried %s)" % (tried or ["<none>"])
     )
-
-
-def enable_for_workers() -> str | None:
-    """Ensure protobuf here AND in every Python process Spark spawns.
-
-    Prepends the ``_pb_shim`` directory (whose ``sitecustomize.py``
-    replays :func:`ensure_protobuf` at interpreter start, then
-    chain-loads any sitecustomize it shadowed) to
-    ``os.environ['PYTHONPATH']`` — a GLOBAL edit that reaches every
-    Python subprocess this driver spawns, Spark or not. Prefer
-    :func:`enable_for_session`, which scopes the shim to one session's
-    ``sc.environment`` (``get_spark`` uses that path; round-6 advice).
-    Keep this variant only for launchers that must bake the env before
-    a JVM they don't control starts. Returns :func:`ensure_protobuf`'s
-    reason (None on success); the PYTHONPATH edit is skipped when no
-    runtime could be found, so containers without one see zero
-    behavior change.
-    """
-    reason = ensure_protobuf()
-    if reason is not None:
-        return reason
-    existing = os.environ.get("PYTHONPATH", "")
-    parts = existing.split(os.pathsep) if existing else []
-    if _SHIM_DIR not in parts:
-        os.environ["PYTHONPATH"] = (
-            _SHIM_DIR + (os.pathsep + existing if existing else "")
-        )
-    return None
 
 
 def enable_for_session(spark) -> str | None:

@@ -1097,21 +1097,6 @@ def test_ckpt_registry_fail_closed_and_scoped(spark, sf_oracle_dir):
     assert reg and all(isinstance(k, int) for k in reg)
 
 
-def test_segmented_levenshtein_equals_block_join(spark, sf_oracle_dir):
-    # the PassJoin pigeonhole prefilter is LOSSLESS: both paths must
-    # return the identical pair set with identical distances
-    from pyspark_movie_recommender_spark.operators.dedup import (
-        blocked_levenshtein_pairs,
-        segmented_levenshtein_pairs,
-    )
-    from pyspark_movie_recommender_spark.sources import load_table
-
-    docs = load_table(spark, sf_oracle_dir, "documents")
-    a = {tuple(r) for r in blocked_levenshtein_pairs(docs).collect()}
-    b = {tuple(r) for r in segmented_levenshtein_pairs(docs).collect()}
-    assert a and a == b
-
-
 def test_adaptive_levenshtein_routing_is_exact_partition(spark, sf_oracle_dir):
     # per-key routing must be LOSSLESS at every cap: cap=0 sends every
     # key to the PassJoin branches, tiny caps mix both paths (keys near
@@ -1122,16 +1107,22 @@ def test_adaptive_levenshtein_routing_is_exact_partition(spark, sf_oracle_dir):
         blocked_levenshtein_pairs,
     )
     from pyspark_movie_recommender_spark.sources import load_table
+    from pyspark_movie_recommender_spark.sources.tables import table_row_hint
 
     docs = load_table(spark, sf_oracle_dir, "documents")
-    want = {tuple(r) for r in blocked_levenshtein_pairs(docs).collect()}
+    ref = blocked_levenshtein_pairs(docs)
+    want = {tuple(r) for r in ref.collect()}
     assert want
     for cap in (0, 60, 10_000_000):
-        got = {
-            tuple(r)
-            for r in adaptive_levenshtein_pairs(docs, block_cap=cap).collect()
-        }
+        routed = adaptive_levenshtein_pairs(docs, block_cap=cap)
+        got = {tuple(r) for r in routed.collect()}
         assert got == want, f"cap={cap}"
+        # the routed result is a unionByName of three branches: its
+        # column types and nullability must match the plain block join
+        assert routed.schema == ref.schema, f"cap={cap}"
+    # the job-free row_hint short-circuit route, same schema
+    n = table_row_hint(sf_oracle_dir, "documents")
+    assert adaptive_levenshtein_pairs(docs, row_hint=n).schema == ref.schema
     # short-prefix docs route through the big-key short branch when
     # their key is oversized — pin that edge with a literal corpus
     rows = [

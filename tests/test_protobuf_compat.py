@@ -131,17 +131,6 @@ def test_get_spark_scopes_shim_to_session_env(spark):
     assert pc._SHIM_DIR in (env.get("PYTHONPATH") or "").split(os.pathsep)
 
 
-def test_enable_for_workers_prepends_shim_once(monkeypatch):
-    monkeypatch.setenv("PYTHONPATH", "/some/existing/entry")
-    assert pc.enable_for_workers() is None
-    parts = os.environ["PYTHONPATH"].split(os.pathsep)
-    assert parts[0] == pc._SHIM_DIR
-    assert "/some/existing/entry" in parts
-    # idempotent: a second call must not duplicate the entry
-    assert pc.enable_for_workers() is None
-    assert os.environ["PYTHONPATH"].split(os.pathsep).count(pc._SHIM_DIR) == 1
-
-
 def test_namespace_false_positive_defense(tmp_path):
     """Reproduce the spark-core-jar failure: a sys.path entry carrying
     ``google/protobuf/`` WITHOUT ``__init__.py`` makes the bare import
@@ -178,7 +167,7 @@ def test_namespace_false_positive_defense(tmp_path):
 
 
 def test_sitecustomize_shim_fixes_fresh_interpreters():
-    """With the shim dir on PYTHONPATH — exactly what enable_for_workers
+    """With the shim dir on PYTHONPATH — exactly what enable_for_session
     arranges for Spark's worker processes — a fresh interpreter can
     import the protobuf submodules TWS needs with no explicit setup."""
     proc = subprocess.run(
