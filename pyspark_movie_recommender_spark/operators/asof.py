@@ -1,4 +1,4 @@
-"""As-of and range joins — operators Spark lacks natively.
+"""As-of joins — an operator Spark lacks natively.
 
 The scale-correct batch as-of join is NOT a range join (which explodes
 candidate pairs): tag both relations, union, and run ONE window pass per
@@ -124,55 +124,6 @@ def merge_asof_pandas(
         return merged[[f.name for f in schema.fields]]
 
     return both.groupBy(key).applyInPandas(per_key, schema=schema)
-
-
-def range_join(
-    fact: DataFrame,
-    dim: DataFrame,
-    condition,
-    broadcast_dim: bool = True,
-) -> DataFrame:
-    """Non-equi join against a (small) range dimension.
-
-    Broadcast nested-loop is the right plan when the dim is tiny
-    (tier/bucket tables); for two LARGE range sides, pre-bucketize both
-    on the range key and equi-join on the bucket before filtering —
-    that path is ``bucketed_range_join``.
-    """
-    d = F.broadcast(dim) if broadcast_dim else dim
-    return fact.join(d, condition)
-
-
-def bucketed_range_join(
-    left: DataFrame,
-    right: DataFrame,
-    left_ts: str,
-    right_lo: str,
-    right_hi: str,
-    bucket_width: int,
-    extra_cond=None,
-) -> DataFrame:
-    """Large-large interval join: explode right intervals into fixed-width
-    buckets, equi-join on bucket, then apply the exact range filter.
-
-    Turns an O(n*m) nested loop into a shuffle-hash equi-join whose fan-out
-    is bounded by interval_length/bucket_width — the standard distributed
-    interval-join decomposition.
-    """
-    b = F.lit(bucket_width)
-    lb = left.withColumn("__bucket", (F.col(left_ts) / b).cast("long"))
-    rb = right.withColumn(
-        "__bucket",
-        F.explode(
-            F.sequence(
-                (F.col(right_lo) / b).cast("long"), (F.col(right_hi) / b).cast("long")
-            )
-        ),
-    )
-    cond = (F.col(left_ts) >= F.col(right_lo)) & (F.col(left_ts) <= F.col(right_hi))
-    if extra_cond is not None:
-        cond = cond & extra_cond
-    return lb.join(rb, on="__bucket").filter(cond).drop("__bucket")
 
 
 def asof_nearest(

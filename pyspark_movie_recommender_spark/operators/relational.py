@@ -33,34 +33,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 
-def project(df: DataFrame, *cols: Column | str) -> DataFrame:
-    """Projection + cast/rename (reference P2-P8). Alias computed columns."""
-    return df.select(*cols)
-
-
-def filter_rows(df: DataFrame, predicate: Column | str) -> DataFrame:
-    """Row filter; predicates on scanned columns push down to parquet."""
-    return df.filter(predicate)
-
-
-def equi_join(
-    df: DataFrame,
-    other: DataFrame,
-    on: str | Sequence[str],
-    how: str = "inner",
-    broadcast_right: bool = False,
-) -> DataFrame:
-    """Equi-join on one or more named key columns (reference J1/J2).
-
-    The reference hand-encoded composite keys as nested tuples
-    (``recommender.py:64,68``); multi-column ``on`` lists replace that.
-    ``broadcast_right=True`` pins a broadcast-hash join for dimension
-    tables (movies-sized sides, ``recommender.py:164``).
-    """
-    right = F.broadcast(other) if broadcast_right else other
-    return df.join(right, on=list(on) if not isinstance(on, str) else on, how=how)
-
-
 def anti_join(df: DataFrame, other: DataFrame, on: str | Sequence[str]) -> DataFrame:
     """NOT IN / NOT EXISTS as a left-anti join (generalizes reference F1).
 
@@ -68,12 +40,12 @@ def anti_join(df: DataFrame, other: DataFrame, on: str | Sequence[str]) -> DataF
     (``recommender.py:144-146``); at scale the excluded set is a relation,
     and left-anti join is the shuffle-aware form (broadcast when small).
     """
-    return equi_join(df, other, on, how="left_anti")
+    return df.join(other, on=list(on) if not isinstance(on, str) else on, how="left_anti")
 
 
 def semi_join(df: DataFrame, other: DataFrame, on: str | Sequence[str]) -> DataFrame:
     """EXISTS as a left-semi join — returns left columns only."""
-    return equi_join(df, other, on, how="left_semi")
+    return df.join(other, on=list(on) if not isinstance(on, str) else on, how="left_semi")
 
 
 def union_all(*dfs: DataFrame) -> DataFrame:

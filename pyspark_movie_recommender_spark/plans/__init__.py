@@ -23,10 +23,6 @@ def physical_plan(df: DataFrame) -> str:
     )
 
 
-def simple_plan(df: DataFrame) -> str:
-    return df._jdf.queryExecution().executedPlan().toString()
-
-
 def has_pushed_filter(df: DataFrame, fragment: str) -> bool:
     """True if a predicate mentioning ``fragment`` reached the scan."""
     plan = physical_plan(df)

@@ -181,18 +181,6 @@ def write_bucketed(
     w.format("parquet").saveAsTable(table_name)
 
 
-def write_partitioned(
-    df: DataFrame, path: str, *partition_cols: str, fmt: str = "parquet"
-) -> None:
-    """Partitioned-directory write (hive layout): one dir per key value.
-
-    Queries filtering on the partition column scan only matching dirs
-    (partition pruning — ``PartitionFilters`` in the scan node), the
-    difference between reading one day and reading three years.
-    """
-    df.write.mode("overwrite").partitionBy(*partition_cols).format(fmt).save(path)
-
-
 def compact_parquet(
     spark: SparkSession,
     src_dir: str,

@@ -149,8 +149,8 @@ def _patch_runtime_version() -> None:
 def ensure_protobuf() -> str | None:
     """Make ``google.protobuf`` importable in THIS process.
 
-    Returns None on success, else a one-line reason string (the gate
-    message the streaming audit records). Idempotent and cheap when a
+    Returns None on success, else a one-line reason string (the skip
+    reason tests/test_streaming.py reports). Idempotent and cheap when a
     real protobuf is already importable.
     """
     if _probe():

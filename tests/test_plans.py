@@ -5,7 +5,6 @@ query got slower at scale even if answers stay right.
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
 from pyspark_movie_recommender_spark import queries as Q
@@ -849,10 +848,10 @@ def test_registry_slice_no_fact_sized_windows(spark, sf_dir):
     """Registry-WIDE fact_sized == 0 pin, sliced like the oracle suite:
     a rotating ~1/8 of all registered queries per commit-week (pin with
     SPARK_GRAFT_AUDIT_SLICE=k, or SPARK_GRAFT_AUDIT_SLICE=all for the
-    FULL registry — the round runner's gated path, same walk that
-    writes PLANAUDIT_r{N}.json). Together with the named reroute pin
-    above this keeps the single-task global-sort cliff out of every
-    plan, not just the 29 rewritten ones."""
+    FULL registry, the census gate to run before a change to query
+    plans). Together with the named reroute pin above this keeps the
+    single-task global-sort cliff out of every plan, not just the 29
+    rewritten ones."""
     import os
     import zlib
 
@@ -875,40 +874,21 @@ def test_registry_slice_no_fact_sized_windows(spark, sf_dir):
     assert not offenders, f"fact-sized global windows (slice {k}): {offenders}"
 
 
-def test_plan_audit_gate_fails_red(spark, sf_dir, tmp_path, monkeypatch):
-    """The census is a GATE: tools_plan_audit.main() must exit 1 when a
-    fact-sized unpartitioned window appears anywhere in the registry,
-    and exit cleanly when none does. Proven by running the real gate
-    entrypoint against a registry poisoned with the exact anti-pattern
-    the 100 TB contract bans (row_number over the whole fact table in
-    a single task) — no standing offender needs to be committed."""
+def test_unpartitioned_windows_flags_fact_sized_global_window(spark, sf_dir):
+    """The census classifier must see the exact anti-pattern the 100 TB
+    contract bans (row_number over the whole fact table in a single
+    task) as fact-sized, and must not flag the global top-k, whose
+    TakeOrderedAndProject has no window at all."""
     from pyspark.sql import Window
 
-    import tools_plan_audit as tpa
+    from pyspark_movie_recommender_spark.plans import unpartitioned_windows
 
-    def poison(s, d):
-        return load_table(s, d, "orders").withColumn(
-            "rn", F.row_number().over(Window.orderBy("o_orderkey"))
-        )
-
-    clean = Q.QUERIES["top_lineitems_global"]
-    monkeypatch.chdir(tmp_path)
-    monkeypatch.delenv("SPARK_GRAFT_AUDIT_SLICE", raising=False)
-    monkeypatch.setattr(tpa, "Q", type("Qm", (), {"QUERIES": {"zz_poison": poison}}))
-    monkeypatch.setattr("sys.argv", ["tools_plan_audit.py", "tt"])
-    with pytest.raises(SystemExit) as exc:
-        tpa.main()
-    assert exc.value.code == 1
-    import json
-
-    report = json.loads((tmp_path / "PLANAUDIT_rtt.json").read_text())
-    assert report["fact_sized_total"] >= 1
-    assert "zz_poison" in report["offenders"]
-    # and the same entrypoint stays green on a clean registry
-    monkeypatch.setattr(tpa, "Q", type("Qm", (), {"QUERIES": {"ok": clean}}))
-    tpa.main()  # no SystemExit
-    report = json.loads((tmp_path / "PLANAUDIT_rtt.json").read_text())
-    assert report["fact_sized_total"] == 0 and not report["build_errors"]
+    poison = load_table(spark, sf_dir, "orders").withColumn(
+        "rn", F.row_number().over(Window.orderBy("o_orderkey"))
+    )
+    assert unpartitioned_windows(poison)[1] >= 1
+    clean = Q.QUERIES["top_lineitems_global"](spark, sf_dir)
+    assert unpartitioned_windows(clean)[1] == 0
 
 
 def test_adaptive_levenshtein_routes_by_block_population(spark, sf_dir):

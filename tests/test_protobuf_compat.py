@@ -214,7 +214,7 @@ def test_enable_for_session_reaches_running_context(spark, monkeypatch):
 
 def test_gate_reason_is_accurate_when_no_runtime(tmp_path, monkeypatch):
     """When discovery genuinely finds nothing, the gate reason must say
-    so (this string is what STREAMING_r{N}.json records as the skip)."""
+    so (this string is the skip reason tests/test_streaming.py reports)."""
     monkeypatch.setattr(pc, "_CANDIDATE_DIRS", [str(tmp_path / "nowhere")])
     monkeypatch.delenv("SPARK_GRAFT_PROTOBUF_DIR", raising=False)
     monkeypatch.setattr(pc, "_probe", lambda: False)

@@ -12,11 +12,9 @@ through CI over eight weeks with no query permanently uncovered, while
 re-running a historical commit stays reproducible (the slice is a
 function of the commit, not of today's date); pin a slice with
 SPARK_GRAFT_ORACLE_SLICE=k, or run everything with
-SPARK_GRAFT_ORACLE_ALL=1 (what the per-round full driver-sim sweep in
-`.claude/skills/verify` does — its SWEEP_r*.json artifacts are the
-full-coverage evidence). The per-wave test files are rows-only
-property checks, NOT oracle compares; this module and the full sweep
-are the only Spark-vs-DuckDB differentials.
+SPARK_GRAFT_ORACLE_ALL=1 (the full sweep). The per-wave test files
+are rows-only property checks, NOT oracle compares; this module is the
+suite's only Spark-vs-DuckDB differential.
 """
 
 from __future__ import annotations
