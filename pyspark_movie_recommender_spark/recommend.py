@@ -6,12 +6,25 @@ Re-expresses ``/root/reference/recommender.py`` (RDD-era
 - 60/20/20 randomSplit with seed 0 (reference R1, ``recommender.py:51``);
 - grid search over rank {4,8,12}, iterations=10, lambda=0.1, seed=5
   picking min validation RMSE (ML3, ``recommender.py:24-27,58-86``);
-- ``coldStartStrategy='drop'`` scoring — the exact semantic match for
+- ``coldStartStrategy='drop'`` batch scoring through ``ALSModel.transform``
+  (``score``, used by the RMSE evaluation) — the exact semantic match for
   ``predictAll`` silently dropping factorless pairs (ML2,
   ``recommender.py:64,151,155-156``);
 - union-retrain fold-in for a new user (ML4, ``recommender.py:122-125``);
-- candidate generation as a left-anti join over the new user's rated
-  items (F1 generalized, ``recommender.py:144-146``);
+- a per-model serving catalogue, built once per ``(model, items)`` pair:
+  ``itemFactors ⋈ items`` and the user factors, coalesced to
+  ``defaultParallelism`` and lineage-truncated with ``ckpt``. The factor
+  tables are ``LogicalRDD`` leaves without size statistics, so any plan
+  over them is a shuffle join, and every job over a relation derived
+  from them re-walks the whole ALS training DAG; after truncation a
+  request plans and schedules over a one-stage leaf instead;
+- per-request scoring without ``ALSModel.transform``: the user's factor
+  row, broadcast, cross-joined to the catalogue, with the dot product
+  accumulated in float in ALS ``predict``'s order, so predictions are
+  the ones ``transform`` gives. A factorless user or item yields no row,
+  as with ``coldStartStrategy='drop'``;
+- candidate generation as a broadcast left-anti join over the user's
+  rated items (F1 generalized, ``recommender.py:144-146``);
 - min-max rescale of predictions to [1,5] in pure SQL (ML5,
   ``recommender.py:199-204`` — no VectorUDT, no Python UDF).
 
@@ -22,12 +35,14 @@ MovieLens-profile fixture instead (SURVEY.md §6).
 
 from __future__ import annotations
 
+import weakref
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pyspark_movie_recommender_spark.driver_scalar import scalar_row
+from pyspark_movie_recommender_spark.operators.lineage import ckpt
 from pyspark_movie_recommender_spark.operators.relational import (
     anti_join,
     global_top_k,
@@ -109,6 +124,8 @@ def train_with_grid_search(
             best, result.best_rank, result.best_model = err, rank, model
 
     result.test_rmse = evaluate_rmse(result.best_model, test)
+    train.unpersist()
+    validation.unpersist()
     return result
 
 
@@ -117,6 +134,41 @@ def fold_in_user(
 ) -> object:
     """Model refresh by union-retrain (reference ML4, recommender.py:122-125)."""
     return _als(rank).fit(union_all(ratings, new_user_ratings))
+
+
+@dataclass(frozen=True)
+class ServingCatalog:
+    """A model's factors, materialised for serving: ``items`` is the
+    items relation's columns plus ``features`` (items without factors
+    dropped), ``users`` is ``(user_id, features)``."""
+
+    source: DataFrame
+    items: DataFrame
+    users: DataFrame
+
+
+# model -> its ServingCatalog; weak, so a dropped model frees its catalogue
+_CATALOGS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+
+
+def serving_catalog(model, items: DataFrame) -> ServingCatalog:
+    """The serving catalogue of ``(model, items)``: built and
+    checkpointed on first use, reused while the model lives and is
+    served with the same ``items`` DataFrame."""
+    cat = _CATALOGS.get(model)
+    if cat is not None and cat.source is items:
+        return cat
+    n = items.sparkSession.sparkContext.defaultParallelism
+    factors = model.itemFactors.select(F.col("id").alias("item_id"), "features")
+    cat = ServingCatalog(
+        source=items,
+        items=items.join(factors, "item_id").coalesce(n).transform(ckpt),
+        users=model.userFactors.select(F.col("id").alias("user_id"), "features")
+        .coalesce(n)
+        .transform(ckpt),
+    )
+    _CATALOGS[model] = cat
+    return cat
 
 
 def recommend_for_user(
@@ -131,15 +183,31 @@ def recommend_for_user(
     the user has NOT rated, top-k by prediction, optional [1,5] rescale.
 
     Candidate generation is a left-anti join (not a closure-captured id
-    list); items is expected to carry (item_id, title).
+    list); items is expected to carry (item_id, title). Scoring reads the
+    model's serving catalogue (``serving_catalog``), so a request plans
+    no shuffle: the user vector, the rated items and the rescale bounds
+    are broadcast.
     """
-    candidates = anti_join(
-        items.select("item_id"),
-        user_ratings.filter(F.col("user_id") == user_id).select("item_id"),
-        "item_id",
-    ).select(F.lit(user_id).alias("user_id"), "item_id")
-
-    preds = score(model, candidates).join(items, "item_id")
+    cat = serving_catalog(model, items)
+    user = cat.users.filter(F.col("user_id") == user_id).select(
+        F.col("features").alias("__u")
+    )
+    rated = user_ratings.filter(F.col("user_id") == user_id).select("item_id")
+    dot = F.aggregate(
+        F.zip_with("__u", "features", lambda x, y: x * y),
+        F.lit(0).cast("float"),
+        lambda acc, x: acc + x,
+    )
+    preds = (
+        anti_join(cat.items, F.broadcast(rated), "item_id")
+        .crossJoin(F.broadcast(user))
+        .select(
+            "item_id",
+            F.lit(user_id).alias("user_id"),
+            dot.alias("prediction"),
+            *[c for c in items.columns if c != "item_id"],
+        )
+    )
     if rescale:
         preds = minmax_rescale(preds, "prediction", out_col="scaled_rating")
         order = [F.desc("scaled_rating"), F.asc("item_id")]

@@ -97,6 +97,95 @@ def test_rescale_bounds_exact(spark, movielens_fixture):
     assert lo == 1.0 and hi == 5.0
 
 
+def _reference_top_k(model, items, ratings, user_id, k, rescale):
+    """The request as ``ALSModel.transform`` composes it: anti_join →
+    score → minmax_rescale → global_top_k."""
+    from pyspark_movie_recommender_spark.operators.relational import (
+        global_top_k,
+        minmax_rescale,
+    )
+
+    cands = REC.anti_join(
+        items.select("item_id"),
+        ratings.filter(F.col("user_id") == user_id).select("item_id"),
+        "item_id",
+    ).select(F.lit(user_id).alias("user_id"), "item_id")
+    preds = REC.score(model, cands).join(items, "item_id")
+    if rescale:
+        preds = minmax_rescale(preds, "prediction", out_col="scaled_rating")
+        order = [F.desc("scaled_rating"), F.asc("item_id")]
+    else:
+        order = [F.desc("prediction"), F.asc("item_id")]
+    return global_top_k(preds, order, k)
+
+
+@pytest.fixture(scope="module")
+def model_without_399(movielens_fixture):
+    ratings, _ = movielens_fixture
+    return REC._als(rank=3).fit(ratings.filter(F.col("item_id") != 399))
+
+
+@pytest.mark.parametrize("rescale", [True, False])
+def test_recommend_matches_transform_composition(
+    spark, movielens_fixture, model_without_399, rescale
+):
+    """The serving-catalogue path returns what scoring through
+    ``ALSModel.transform`` returns: same columns, same item ids in the
+    same order, same scores. Item 399 has no factors (trained without
+    it) and never appears; user 0 has no factors and gets no row."""
+    ratings, items = movielens_fixture
+    value = "scaled_rating" if rescale else "prediction"
+    n_items = items.count()
+    for user_id, k in [(1, 10), (2, 10), (3, 10), (50, 10), (249, 10), (7, n_items), (0, 10)]:
+        got = REC.recommend_for_user(
+            model_without_399, items, ratings, user_id, k, rescale
+        )
+        want = _reference_top_k(model_without_399, items, ratings, user_id, k, rescale)
+        assert got.columns == want.columns
+        g, w = got.collect(), want.collect()
+        assert [r.item_id for r in g] == [r.item_id for r in w], user_id
+        assert all(abs(a[value] - b[value]) <= 1e-9 for a, b in zip(g, w))
+        assert 399 not in {r.item_id for r in g}
+        if user_id == 0:
+            assert g == []
+        elif k == n_items:
+            # every factored item the user has not rated: 399 items with
+            # factors (0..398) less the user's 50 ratings
+            assert len(g) == 399 - 50
+
+
+def test_request_plan_has_no_shuffle_and_reuses_catalogue(spark, movielens_fixture):
+    """A request plans no shuffle join and no hash exchange; the
+    catalogue is checkpointed once per model and reused after."""
+    import gc
+    import weakref
+
+    from pyspark_movie_recommender_spark.operators.lineage import ckpt_registry
+
+    ratings, items = movielens_fixture
+    model = REC._als(rank=2).fit(ratings)
+
+    before = set(ckpt_registry())
+    first = REC.recommend_for_user(model, items, ratings, 2)
+    first.collect()
+    assert len(set(ckpt_registry()) - before) == 2  # item and user catalogues
+    plan = first._jdf.queryExecution().executedPlan().toString()
+    assert "SortMergeJoin" not in plan, plan
+    assert "Exchange hashpartitioning" not in plan, plan
+
+    seen = set(ckpt_registry())
+    REC.recommend_for_user(model, items, ratings, 3).collect()
+    assert set(ckpt_registry()) == seen  # same model: catalogue reused
+
+    refit = REC._als(rank=2).fit(ratings)
+    REC.recommend_for_user(refit, items, ratings, 2).collect()
+    assert len(set(ckpt_registry()) - seen) == 2  # new model, new catalogue
+    catalogue = weakref.ref(REC.serving_catalog(refit, items))
+    del refit
+    gc.collect()
+    assert catalogue() is None  # a dropped model drops its catalogue
+
+
 # ---------------------------------------------------------------------------
 # true-parity integration: the reference's own MovieLens data, read in
 # place (never copied into this repo), full protocol end-to-end
