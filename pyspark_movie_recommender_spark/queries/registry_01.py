@@ -1753,8 +1753,8 @@ def streaming_dedup_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query("streaming_running_user_totals")
 def streaming_running_user_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Arbitrary-stateful streaming (``applyInPandasWithState``): running
-    per-user totals, state ∝ |users| not |events|."""
+    """Stateful streaming on the built-in aggregation (update mode):
+    running per-user totals, state ∝ |users| not |events|."""
     from pyspark_movie_recommender_spark.streaming.jobs import (
         running_user_totals_stream,
     )

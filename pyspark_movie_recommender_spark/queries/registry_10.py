@@ -1669,8 +1669,9 @@ def page_hinkley_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     over the SAME (type, day-order) partitioning — Catalyst collapses
     them into a single sort+window stage, so drift detection over any
     number of series costs one shuffle; in production the identical
-    recurrence runs incrementally via applyInPandasWithState
-    (`streaming/jobs.py`).
+    recurrence would run incrementally as per-series arbitrary state
+    (transformWithState, as the per-user jobs in `streaming/jobs.py`
+    use it).
     """
     ev = load_table(spark, sf_dir, "events")
     d = ev.groupBy("event_type", F.to_date("ts").alias("day")).agg(
@@ -6269,7 +6270,7 @@ def dgim_sliding_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     (≤ ~22 (end_pos, size) pairs) carried between segments by the
     driver, the same legitimate driver-coordination class as a
     convergence loop; in production the same state machine is
-    per-key applyInPandasWithState. Exact truth for the audit is one
+    per-key transformWithState. Exact truth for the audit is one
     tail-filter SUM in Spark (never inside the Python state).
     """
     import pandas as pd
@@ -6828,7 +6829,7 @@ def elo_rating_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: standings are one month x nation agg; the replay is
     one applyInPandas pass over the ~80-game closure (ratings are
-    inherently sequential state — the same applyInPandasWithState
+    inherently sequential state — the same per-key transformWithState
     shape as streaming sessionization at production scale).
     """
     import pandas as pd

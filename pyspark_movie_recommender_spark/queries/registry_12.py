@@ -4494,8 +4494,8 @@ def token_bucket_conformance(spark: SparkSession, sf_dir: str) -> DataFrame:
     replay in one closure pass with (ts, event_id) order.
 
     Scale shape: per-key buckets shard perfectly (the replay
-    partitions by user at scale — same state machine as
-    applyInPandasWithState); this offline audit runs the global
+    partitions by user at scale — same state machine as per-key
+    transformWithState); this offline audit runs the global
     bucket in one pass.
     """
     import pandas as pd

@@ -174,53 +174,34 @@ def running_user_totals_stream(
     sf_dir: str,
     query_name: str = "stream_user_totals",
 ) -> DataFrame:
-    """Custom stateful operator via ``applyInPandasWithState``: per-user
-    running event count + value total, state carried across micro-batches.
+    """Per-user running event count + value total, state carried across
+    micro-batches by Spark's built-in streaming aggregation (update mode).
 
-    The state dict is tiny (two numbers per user) and keyed by the
+    The state is tiny (a partial count and sum per user) and keyed by the
     shuffle partitioning, so state size scales with |users|, not
-    |events| — the invariant that keeps arbitrary-state operators
-    viable on unbounded streams.
+    |events|; being associative, it stays in the JVM state store with no
+    Python-worker stage.
     """
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    ev = _events_stream(spark, sf_dir).select("user_id", "value")
-
-    out = ev.groupBy("user_id").applyInPandasWithState(
-        _stateful_update_fn(),
-        outputStructType="user_id bigint, n_events bigint, total_value double",
-        stateStructType="n bigint, total double",
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-    _run_to_table(out, query_name, "update")
+    ev = _events_stream(spark, sf_dir)
+    _run_to_table(_user_totals(ev), query_name, "update")
     return spark.table(query_name)
 
 
-def _stateful_update_fn():
-    """The per-user (count, total) update used by both the one-shot and
-    the resumable applyInPandasWithState jobs — one definition so the
-    resume test exercises EXACTLY the production update logic."""
-    import pandas as pd
-
-    def update(key, pdfs, state):
-        n, total = state.get if state.exists else (0, 0.0)
-        for pdf in pdfs:
-            n += len(pdf)
-            total += float(pdf["value"].sum())
-        state.update((n, total))
-        yield pd.DataFrame(
-            {"user_id": [key[0]], "n_events": [n], "total_value": [round(total, 2)]}
-        )
-
-    return update
+def _user_totals(ev: DataFrame) -> DataFrame:
+    """The per-user (count, total) aggregation used by both the one-shot
+    and the resumable running-totals jobs — one definition so the resume
+    test exercises EXACTLY the production update logic."""
+    return ev.groupBy("user_id").agg(
+        F.count(F.lit(1)).alias("n_events"),
+        F.round(F.sum("value"), 2).alias("total_value"),
+    )
 
 
 def _require_protobuf(spark: SparkSession, alternative: str | None = None) -> None:
     """The transformWithState gate: wire up a protobuf runtime for the
     session's Python workers (protobuf_compat), else raise ImportError
-    naming ``alternative``, the applyInPandasWithState job to use
-    where no runtime exists."""
+    naming ``alternative``, the built-in-aggregation job to use where no
+    runtime exists."""
     from pyspark_movie_recommender_spark.streaming.protobuf_compat import (
         enable_for_session,
     )
@@ -230,7 +211,7 @@ def _require_protobuf(spark: SparkSession, alternative: str | None = None) -> No
         return
     hint = ""
     if alternative is not None:
-        hint = f"; use {alternative} (applyInPandasWithState) where it is unavailable"
+        hint = f"; use {alternative} (built-in aggregation) where it is unavailable"
     raise ImportError(
         f"transformWithStateInPandas requires the protobuf package{hint} — {reason}"
     )
@@ -360,23 +341,19 @@ def running_user_totals_resumable(
     the later batches' emitted counts continue from the first run's,
     which is the checkpoint-recovery contract a long-lived 100 TB
     stream restarts on (executor loss, code deploys). Returns the
-    latest update per user across all runs so far."""
-    from pyspark.sql.streaming.state import GroupStateTimeout
+    latest update per user across all runs so far.
 
+    Checkpoint compatibility: the state is the built-in aggregation's
+    partial (count, sum) buffer. A checkpoint written by the earlier
+    pandas-state-function form of this job has a different state schema
+    and cannot resume here; start such a stream on a fresh checkpoint
+    (and sink)."""
     ev = (
         spark.readStream.schema(schema)
         .option("recursiveFileLookup", "true")
         .parquet(source_dir)
-        .select("user_id", "value")
     )
-    out = ev.groupBy("user_id").applyInPandasWithState(
-        _stateful_update_fn(),
-        outputStructType="user_id bigint, n_events bigint, total_value double",
-        stateStructType="n bigint, total double",
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-    _run_updates_to_parquet(out, sink_dir, checkpoint_dir)
+    _run_updates_to_parquet(_user_totals(ev), sink_dir, checkpoint_dir)
     log = _read_update_log(
         spark,
         sink_dir,
@@ -401,7 +378,7 @@ def user_peaks_tws_resumable(
     :func:`running_user_totals_resumable`. Carries the same protobuf
     gate — protobuf_compat wires up the bundled runtime (so this runs
     for real here); only where NO runtime exists does the gate fire,
-    with the applyInPandasWithState twin covering resume semantics.
+    with the built-in-aggregation twin covering resume semantics.
     """
     _require_protobuf(spark, "running_user_totals_resumable")
     ev = (
@@ -438,11 +415,13 @@ def user_peaks_transform_with_state(
     API (SPARK-46815): per-user running event count and peak value kept
     in typed ValueState, updated per micro-batch.
 
-    Compared to ``applyInPandasWithState`` (kept in
-    ``running_user_totals_stream`` as the 3.x-era form), the processor
-    object gets explicit state handles, timers, and schema evolution —
-    and requires the RocksDB state store, the provider that scales state
-    past executor memory (the 100 TB-stream requirement).
+    Unlike the associative per-user totals of
+    ``running_user_totals_stream``, which Spark's built-in streaming
+    aggregation keeps, this job exists to exercise the arbitrary-state
+    API: the processor object gets explicit state handles, timers, and
+    schema evolution — and requires the RocksDB state store, the
+    provider that scales state past executor memory (the 100 TB-stream
+    requirement).
 
     Gated: the TWS protocol speaks protobuf between the JVM and the
     Python driver worker; raises ImportError with guidance when no
@@ -768,9 +747,9 @@ def running_user_stats_tws(
     spark: SparkSession, sf_dir: str, query_name: str = "tws_user_stats"
 ) -> None:
     """transformWithStateInPandas (the Spark 4 arbitrary-state API that
-    supersedes applyInPandasWithState): per-user running (n_events,
-    total_value, max_value) kept in a typed ValueState, updated row
-    emitted per key per micro-batch in Update mode. The state schema
+    supersedes the 3.x grouped-map state function): per-user running
+    (n_events, total_value, max_value) kept in a typed ValueState, updated
+    row emitted per key per micro-batch in Update mode. The state schema
     is declared (not pickled blobs), state lives in the state store
     (RocksDB on a real cluster — checkpointable, rescalable), and the
     processor sees Arrow batches per key. Counts/sums are exact longs

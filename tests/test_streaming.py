@@ -98,11 +98,13 @@ def _arrival_dirs(spark, sf_dir, tmp_path):
 
 
 def test_stateful_resume_from_checkpoint(spark, sf_dir, tmp_path):
-    """applyInPandasWithState state RESTORE: two availableNow runs over
+    """Streaming-aggregation state RESTORE: two availableNow runs over
     a growing source dir sharing one checkpoint — run 2 must continue
     the per-user (count, total) state from run 1, so its final counts
     equal the batch aggregate over ALL events, not just the new file.
-    This is the restart contract of a long-lived stateful stream."""
+    A third run with no new file is a no-op pass: same totals, and no
+    new micro-batch lands in the update log. This is the restart
+    contract of a long-lived stateful stream."""
     from pyspark.sql import functions as F
 
     from pyspark_movie_recommender_spark.streaming.jobs import (
@@ -127,6 +129,35 @@ def test_stateful_resume_from_checkpoint(spark, sf_dir, tmp_path):
     got = {r.user_id: (r.n_events, r.total_value) for r in out2.collect()}
     want = {r.user_id: (r.n_events, r.total_value) for r in batch.collect()}
     assert got == want
+
+    def batch_ids():
+        rows = spark.read.parquet(sink).select("batch_id").distinct().collect()
+        return sorted(r.batch_id for r in rows)
+
+    ids2 = batch_ids()
+    out3 = running_user_totals_resumable(spark, str(src_dir), schema, sink, ckpt)
+    got3 = {r.user_id: (r.n_events, r.total_value) for r in out3.collect()}
+    assert got3 == want
+    assert batch_ids() == ids2
+
+
+def test_running_totals_keep_state_in_builtin_aggregation(spark, sf_dir, tmp_path):
+    """The per-user (count, total) state is associative, so the job keeps
+    it in Spark's built-in streaming aggregation (the JVM state store's
+    ``stateStoreSave``), not in a Python-worker state function. The
+    checkpoint's operator metadata names the state operator that wrote
+    it."""
+    from pyspark_movie_recommender_spark.streaming.jobs import (
+        running_user_totals_resumable,
+    )
+
+    src_dir, schema, _, _ = _arrival_dirs(spark, sf_dir, tmp_path)
+    ckpt = str(tmp_path / "ckpt")
+    running_user_totals_resumable(
+        spark, str(src_dir), schema, str(tmp_path / "sink"), ckpt
+    )
+    ops = spark.read.format("state-metadata").load(ckpt).collect()
+    assert [r.operatorName for r in ops] == ["stateStoreSave"]
 
 
 def test_tws_resume_from_checkpoint(spark, sf_dir, tmp_path):
