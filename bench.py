@@ -32,7 +32,7 @@ def sf_of(path: str) -> float:
 def rig_canary() -> float:
     """Seconds for a fixed single-process NumPy matmul (~0.3 s when the
     host is quiet). The bench box is a shared VM with hour-scale 3-24x
-    throughput swings (BENCH_NOTES_r08.md); carrying the canary in the
+    throughput swings; carrying the canary in the
     output line makes every bench run self-diagnosing — a consumer can
     tell 'engine regressed' from 'host was degraded' without access to
     the builder's median artifacts. ADDITIVE key only: the metric /

@@ -367,8 +367,8 @@ def adaptive_levenshtein_pairs(
     whose candidate volume is driven by shared aligned segments, not
     block population. All branches end in the same banded-DP verify.
 
-    Measured basis for the default cap (round-5 crossover scan on
-    forced block profiles, BENCH_NOTES_r05.md): block join vs
+    Measured basis for the default cap (a crossover scan on forced
+    block profiles): block join vs
     PassJoin = 63s vs 88s at 10 blocks of 5k docs (a_pop~15k), 115s
     vs 107s at 5 blocks of 10k (a_pop~30k), >45 MINUTES (killed) vs
     316s at 2 blocks of 25k (a_pop~75k — key skew additionally

@@ -1670,8 +1670,7 @@ def page_hinkley_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     them into a single sort+window stage, so drift detection over any
     number of series costs one shuffle; in production the identical
     recurrence would run incrementally as per-series arbitrary state
-    (transformWithState, as the per-user jobs in `streaming/jobs.py`
-    use it).
+    (transformWithState).
     """
     ev = load_table(spark, sf_dir, "events")
     d = ev.groupBy("event_type", F.to_date("ts").alias("day")).agg(

@@ -38,19 +38,6 @@ def get_spark(
         cpus = (os.cpu_count() or 8) if _CPUS == "*" else int(_CPUS)
         shuffle_partitions = max(int(cpus), 8)
 
-    # transformWithState speaks protobuf in every Python process Spark
-    # spawns. Fix the DRIVER's import path here (pure sys.path, no env
-    # mutation); the worker-side shim is wired per-session via
-    # sc.environment below — scoping it there (round-6 advice) keeps
-    # the shim sitecustomize out of unrelated subprocesses the driver
-    # spawns. No-op where no runtime exists.
-    from pyspark_movie_recommender_spark.streaming.protobuf_compat import (
-        enable_for_session,
-        ensure_protobuf,
-    )
-
-    ensure_protobuf()
-
     builder = (
         SparkSession.builder.master(f"local[{_CPUS}]")
         .appName(app_name)
@@ -73,5 +60,4 @@ def get_spark(
             builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    enable_for_session(spark)
     return spark

@@ -19,6 +19,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StructField, StructType
 
 
 def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -197,59 +198,13 @@ def _user_totals(ev: DataFrame) -> DataFrame:
     )
 
 
-def _require_protobuf(spark: SparkSession, alternative: str | None = None) -> None:
-    """The transformWithState gate: wire up a protobuf runtime for the
-    session's Python workers (protobuf_compat), else raise ImportError
-    naming ``alternative``, the built-in-aggregation job to use where no
-    runtime exists."""
-    from pyspark_movie_recommender_spark.streaming.protobuf_compat import (
-        enable_for_session,
+def _user_peaks(ev: DataFrame) -> DataFrame:
+    """The per-user (count, peak) aggregation used by both the one-shot
+    and the resumable user-peaks jobs."""
+    return ev.groupBy("user_id").agg(
+        F.count(F.lit(1)).alias("n_events"),
+        F.round(F.max("value"), 2).alias("peak_value"),
     )
-
-    reason = enable_for_session(spark)
-    if reason is None:
-        return
-    hint = ""
-    if alternative is not None:
-        hint = f"; use {alternative} (built-in aggregation) where it is unavailable"
-    raise ImportError(
-        f"transformWithStateInPandas requires the protobuf package{hint} — {reason}"
-    )
-
-
-def _user_peaks_processor():
-    """The per-user (count, peak) transformWithState processor used by
-    both the one-shot and the resumable user-peaks jobs — one
-    definition so the resume test exercises EXACTLY the production
-    update logic."""
-    import pandas as pd
-    from pyspark.sql.streaming import StatefulProcessor, StatefulProcessorHandle
-    from pyspark.sql.types import DoubleType, LongType, StructField, StructType
-
-    state_schema = StructType(
-        [StructField("n", LongType(), True), StructField("peak", DoubleType(), True)]
-    )
-
-    class UserPeaks(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState("peaks", state_schema)
-
-        def handleInputRows(self, key, rows, timerValues):
-            n, peak = 0, float("-inf")
-            if self._state.exists():
-                n, peak = self._state.get()
-            for pdf in rows:
-                n += len(pdf)
-                peak = max(peak, float(pdf["value"].max()))
-            self._state.update((n, peak))
-            yield pd.DataFrame(
-                {"user_id": [key[0]], "n_events": [n], "peak_value": [round(peak, 2)]}
-            )
-
-        def close(self) -> None:
-            pass
-
-    return UserPeaks()
 
 
 def _run_updates_to_parquet(
@@ -277,53 +232,51 @@ def _run_updates_to_parquet(
     q.awaitTermination()
 
 
-def _read_update_log(spark: SparkSession, sink_dir: str, schema_ddl: str) -> DataFrame:
+def _read_update_log(
+    spark: SparkSession, sink_dir: str, schema: StructType
+) -> DataFrame:
     """Read the foreachBatch parquet log, tolerating a sink that never
     materialized: an availableNow pass over an empty source dir runs
     zero micro-batches, foreachBatch never fires, and the path does not
-    exist — that is an empty log, not an error. A sink dir that EXISTS
-    but holds no parquet parts (a crashed run that died before its
-    first batch committed) is equally an empty log: reading it would
-    raise a schema-inference error, so glob first (round-6 advice)."""
+    exist — that is an empty log of ``schema``, not an error. A sink dir
+    that EXISTS but holds no parquet parts (a crashed run that died
+    before its first batch committed) is equally an empty log: reading
+    it would raise a schema-inference error, so glob first."""
     if not os.path.isdir(sink_dir) or not glob.glob(
         os.path.join(sink_dir, "**", "*.parquet"), recursive=True
     ):
-        return spark.createDataFrame([], schema_ddl)
+        return spark.createDataFrame([], schema)
     return spark.read.parquet(sink_dir)
 
 
-_PROVIDER_KEY = "spark.sql.streaming.stateStore.providerClass"
-_ROCKSDB_PROVIDER = (
-    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-)
-
-
-class _rocksdb_state_store:
-    """Scope the RocksDB state-store provider to one streaming run.
-
-    transformWithState requires RocksDB, but setting the provider
-    session-wide would silently switch it for every LATER stateful
-    stream in the session — a checkpoint-compatibility hazard for
-    checkpoints created under the default (HDFS-backed) provider. The
-    conf is read at query START, so set-around-start/restore-after is
-    sufficient scoping.
-    """
-
-    def __init__(self, spark: SparkSession):
-        self._spark = spark
-        self._prior: str | None = None
-
-    def __enter__(self):
-        self._prior = self._spark.conf.get(_PROVIDER_KEY, None)
-        self._spark.conf.set(_PROVIDER_KEY, _ROCKSDB_PROVIDER)
-        return self
-
-    def __exit__(self, *exc):
-        if self._prior is None:
-            self._spark.conf.unset(_PROVIDER_KEY)
-        else:
-            self._spark.conf.set(_PROVIDER_KEY, self._prior)
-        return False
+def _resumable_user_aggregate(
+    spark: SparkSession,
+    source_dir: str,
+    schema,
+    sink_dir: str,
+    checkpoint_dir: str,
+    aggregate,
+) -> DataFrame:
+    """One ``availableNow`` pass of the per-user ``aggregate`` over the
+    events parquet files ARRIVING in ``source_dir``: the aggregation's
+    state lives in ``checkpoint_dir`` and its update rows are appended
+    to the ``sink_dir`` log. Returns the latest update per user across
+    all passes so far."""
+    ev = (
+        spark.readStream.schema(schema)
+        .option("recursiveFileLookup", "true")
+        .parquet(source_dir)
+    )
+    out = aggregate(ev)
+    _run_updates_to_parquet(out, sink_dir, checkpoint_dir)
+    log = _read_update_log(
+        spark,
+        sink_dir,
+        StructType(out.schema.fields + [StructField("batch_id", LongType())]),
+    )
+    return log.groupBy("user_id").agg(
+        *[F.max_by(c, "batch_id").alias(c) for c in out.columns if c != "user_id"]
+    )
 
 
 def running_user_totals_resumable(
@@ -348,98 +301,44 @@ def running_user_totals_resumable(
     pandas-state-function form of this job has a different state schema
     and cannot resume here; start such a stream on a fresh checkpoint
     (and sink)."""
-    ev = (
-        spark.readStream.schema(schema)
-        .option("recursiveFileLookup", "true")
-        .parquet(source_dir)
-    )
-    _run_updates_to_parquet(_user_totals(ev), sink_dir, checkpoint_dir)
-    log = _read_update_log(
-        spark,
-        sink_dir,
-        "user_id bigint, n_events bigint, total_value double, batch_id bigint",
-    )
-    return log.groupBy("user_id").agg(
-        F.expr("max_by(n_events, batch_id)").alias("n_events"),
-        F.expr("max_by(total_value, batch_id)").alias("total_value"),
+    return _resumable_user_aggregate(
+        spark, source_dir, schema, sink_dir, checkpoint_dir, _user_totals
     )
 
 
-def user_peaks_tws_resumable(
+def user_peaks_resumable(
     spark: SparkSession,
     source_dir: str,
     schema,
     sink_dir: str,
     checkpoint_dir: str,
 ) -> DataFrame:
-    """Resume-from-checkpoint form of ``user_peaks_transform_with_state``
-    (Spark 4 transformWithStateInPandas + RocksDB state store): same
-    arriving-files source and checkpoint contract as
-    :func:`running_user_totals_resumable`. Carries the same protobuf
-    gate — protobuf_compat wires up the bundled runtime (so this runs
-    for real here); only where NO runtime exists does the gate fire,
-    with the built-in-aggregation twin covering resume semantics.
-    """
-    _require_protobuf(spark, "running_user_totals_resumable")
-    ev = (
-        spark.readStream.schema(schema)
-        .option("recursiveFileLookup", "true")
-        .parquet(source_dir)
-        .select("user_id", "value")
-    )
-    out = ev.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=_user_peaks_processor(),
-        outputStructType="user_id bigint, n_events bigint, peak_value double",
-        outputMode="Update",
-        timeMode="None",
-    )
-    with _rocksdb_state_store(spark):
-        _run_updates_to_parquet(out, sink_dir, checkpoint_dir)
-    log = _read_update_log(
-        spark,
-        sink_dir,
-        "user_id bigint, n_events bigint, peak_value double, batch_id bigint",
-    )
-    return log.groupBy("user_id").agg(
-        F.expr("max_by(n_events, batch_id)").alias("n_events"),
-        F.expr("max_by(peak_value, batch_id)").alias("peak_value"),
+    """Resume-from-checkpoint form of ``user_peaks_stream``: same
+    arriving-files source, checkpoint contract and update log as
+    :func:`running_user_totals_resumable`, with the per-user
+    (count, peak) state kept by the built-in streaming aggregation.
+
+    Checkpoint compatibility: a checkpoint written by the earlier
+    transformWithState form of this job (RocksDB state store, typed
+    ValueState) has a different state operator and schema and cannot
+    resume here; start such a stream on a fresh checkpoint (and sink)."""
+    return _resumable_user_aggregate(
+        spark, source_dir, schema, sink_dir, checkpoint_dir, _user_peaks
     )
 
 
-def user_peaks_transform_with_state(
+def user_peaks_stream(
     spark: SparkSession,
     sf_dir: str,
     query_name: str = "stream_user_peaks",
 ) -> DataFrame:
-    """Arbitrary stateful streaming on the Spark 4 ``transformWithState``
-    API (SPARK-46815): per-user running event count and peak value kept
-    in typed ValueState, updated per micro-batch.
-
-    Unlike the associative per-user totals of
-    ``running_user_totals_stream``, which Spark's built-in streaming
-    aggregation keeps, this job exists to exercise the arbitrary-state
-    API: the processor object gets explicit state handles, timers, and
-    schema evolution — and requires the RocksDB state store, the
-    provider that scales state past executor memory (the 100 TB-stream
-    requirement).
-
-    Gated: the TWS protocol speaks protobuf between the JVM and the
-    Python driver worker; raises ImportError with guidance when no
-    ``google.protobuf`` runtime can be wired up (protobuf_compat first
-    tries the container's bundled pure-Python runtime — with it, this
-    path runs for real and the stream≡batch test pins it).
-    """
-    _require_protobuf(spark, "running_user_totals_stream")
-
-    ev = _events_stream(spark, sf_dir).select("user_id", "value")
-    out = ev.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=_user_peaks_processor(),
-        outputStructType="user_id bigint, n_events bigint, peak_value double",
-        outputMode="Update",
-        timeMode="None",
-    )
-    with _rocksdb_state_store(spark):
-        _run_to_table(out, query_name, "update")
+    """Per-user running event count and peak value (rounded to 2
+    places), state carried across micro-batches by Spark's built-in
+    streaming aggregation in update mode. Count and max are
+    associative, so the state is a partial (count, max) buffer per user
+    in the JVM state store, with no Python-worker stage; the last update
+    per user equals the batch ``groupBy``."""
+    _run_to_table(_user_peaks(_events_stream(spark, sf_dir)), query_name, "update")
     return spark.table(query_name)
 
 
@@ -743,66 +642,18 @@ def cdc_upsert_stream(
     )
 
 
-def running_user_stats_tws(
-    spark: SparkSession, sf_dir: str, query_name: str = "tws_user_stats"
-) -> None:
-    """transformWithStateInPandas (the Spark 4 arbitrary-state API that
-    supersedes the 3.x grouped-map state function): per-user running
-    (n_events, total_value, max_value) kept in a typed ValueState, updated
-    row emitted per key per micro-batch in Update mode. The state schema
-    is declared (not pickled blobs), state lives in the state store
-    (RocksDB on a real cluster — checkpointable, rescalable), and the
-    processor sees Arrow batches per key. Counts/sums are exact longs
-    + rounded doubles, so the LAST emitted row per user must equal
-    the batch aggregate — the stream≡batch equivalence test pins it.
-
-    Environment gate: the transformWithState protocol speaks protobuf
-    between JVM and the Python driver worker; raises ImportError only
-    when protobuf_compat can wire up no runtime at all (this container
-    carries a bundled pure-Python one, so the path runs for real).
-    """
-    _require_protobuf(spark)
-
-    import pandas as pd
-
-    from pyspark.sql.streaming import StatefulProcessor, StatefulProcessorHandle
-
-    class RunningStats(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState(
-                "stats", "n bigint, total double, mx double"
-            )
-
-        def handleInputRows(self, key, rows, timerValues):
-            n, total, mx = 0, 0.0, float("-inf")
-            if self._state.exists():
-                n, total, mx = self._state.get()
-            for pdf in rows:
-                n += len(pdf)
-                total += float(pdf["value"].sum())
-                mx = max(mx, float(pdf["value"].max()))
-            self._state.update((n, total, mx))
-            yield pd.DataFrame(
-                {
-                    "user_id": [key[0]],
-                    "n_events": [n],
-                    "total_value": [round(total, 6)],
-                    "max_value": [round(mx, 6)],
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    ev = _events_stream(spark, sf_dir).select("user_id", "value")
-    out = ev.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=RunningStats(),
-        outputStructType=(
-            "user_id bigint, n_events bigint,"
-            " total_value double, max_value double"
-        ),
-        outputMode="Update",
-        timeMode="None",
+def running_user_stats_stream(
+    spark: SparkSession, sf_dir: str, query_name: str = "stream_user_stats"
+) -> DataFrame:
+    """Per-user running (n_events, total_value, max_value), with the sum
+    and max rounded to 6 places, kept by Spark's built-in streaming
+    aggregation in update mode: each micro-batch emits the updated row
+    of every user it touched, so the LAST emitted row per user equals
+    the batch aggregate — the stream≡batch equivalence test pins it."""
+    stats = _events_stream(spark, sf_dir).groupBy("user_id").agg(
+        F.count(F.lit(1)).alias("n_events"),
+        F.round(F.sum("value"), 6).alias("total_value"),
+        F.round(F.max("value"), 6).alias("max_value"),
     )
-    with _rocksdb_state_store(spark):
-        _run_to_table(out, query_name, "update")
+    _run_to_table(stats, query_name, "update")
+    return spark.table(query_name)

@@ -20,20 +20,6 @@ def rows(df):
     return sorted(tuple(r) for r in df.collect())
 
 
-def _require_protobuf():
-    """Gate for transformWithState tests: protobuf_compat wires up the
-    container's bundled pure-Python runtime (and the worker-side shim),
-    so on this container the TWS paths RUN; the skip fires only where
-    no runtime exists at all, and carries the compat layer's reason."""
-    from pyspark_movie_recommender_spark.streaming.protobuf_compat import (
-        ensure_protobuf,
-    )
-
-    reason = ensure_protobuf()
-    if reason is not None:
-        pytest.skip(reason)
-
-
 def test_tumbling_stream_equals_batch(spark, sf_dir):
     stream = tumbling_window_stream(
         spark, sf_dir, query_name="t_tumble_eq", output_mode="complete"
@@ -141,43 +127,45 @@ def test_stateful_resume_from_checkpoint(spark, sf_dir, tmp_path):
     assert batch_ids() == ids2
 
 
-def test_running_totals_keep_state_in_builtin_aggregation(spark, sf_dir, tmp_path):
-    """The per-user (count, total) state is associative, so the job keeps
-    it in Spark's built-in streaming aggregation (the JVM state store's
-    ``stateStoreSave``), not in a Python-worker state function. The
+@pytest.mark.parametrize(
+    "job", ["running_user_totals_resumable", "user_peaks_resumable"]
+)
+def test_running_totals_keep_state_in_builtin_aggregation(
+    spark, sf_dir, tmp_path, job
+):
+    """The per-user (count, total) and (count, peak) states are
+    associative, so the resumable jobs keep them in Spark's built-in
+    streaming aggregation (the JVM state store's ``stateStoreSave``),
+    not in a Python-worker state function or transformWithState. The
     checkpoint's operator metadata names the state operator that wrote
     it."""
-    from pyspark_movie_recommender_spark.streaming.jobs import (
-        running_user_totals_resumable,
-    )
+    from pyspark_movie_recommender_spark.streaming import jobs
 
     src_dir, schema, _, _ = _arrival_dirs(spark, sf_dir, tmp_path)
     ckpt = str(tmp_path / "ckpt")
-    running_user_totals_resumable(
-        spark, str(src_dir), schema, str(tmp_path / "sink"), ckpt
-    )
+    getattr(jobs, job)(spark, str(src_dir), schema, str(tmp_path / "sink"), ckpt)
     ops = spark.read.format("state-metadata").load(ckpt).collect()
     assert [r.operatorName for r in ops] == ["stateStoreSave"]
 
 
 def test_tws_resume_from_checkpoint(spark, sf_dir, tmp_path):
-    """transformWithStateInPandas resume twin of the test above —
-    protobuf-gated like every TWS path (the audit artifact records
-    whether this container fired the gate)."""
-    _require_protobuf()
+    """Per-user (count, peak) resume twin of
+    ``test_stateful_resume_from_checkpoint``: run 2 continues run 1's
+    state, so its latest updates equal the batch aggregate over all
+    events."""
     from pyspark.sql import functions as F
 
     from pyspark_movie_recommender_spark.streaming.jobs import (
-        user_peaks_tws_resumable,
+        user_peaks_resumable,
     )
 
     src_dir, schema, half2, all_ev = _arrival_dirs(spark, sf_dir, tmp_path)
-    ckpt = str(tmp_path / "ckpt_tws")
-    sink = str(tmp_path / "sink_tws")
+    ckpt = str(tmp_path / "ckpt")
+    sink = str(tmp_path / "sink")
 
-    user_peaks_tws_resumable(spark, str(src_dir), schema, sink, ckpt)
+    user_peaks_resumable(spark, str(src_dir), schema, sink, ckpt)
     half2.coalesce(1).write.parquet(str(src_dir / "batch2"))
-    out2 = user_peaks_tws_resumable(spark, str(src_dir), schema, sink, ckpt)
+    out2 = user_peaks_resumable(spark, str(src_dir), schema, sink, ckpt)
 
     batch = all_ev.groupBy("user_id").agg(
         F.count(F.lit(1)).alias("n_events"),
@@ -315,14 +303,13 @@ def _events_stream_for_test(spark, sf_dir):
 
 
 def test_transform_with_state_peaks_match_batch(spark, sf_dir):
-    _require_protobuf()
     from pyspark.sql import functions as F
 
     from pyspark_movie_recommender_spark.streaming.jobs import (
-        user_peaks_transform_with_state,
+        user_peaks_stream,
     )
 
-    out = user_peaks_transform_with_state(spark, sf_dir, query_name="t_tws_eq")
+    out = user_peaks_stream(spark, sf_dir, query_name="t_peaks_eq")
     batch = (
         load_table(spark, sf_dir, "events")
         .groupBy("user_id")
@@ -576,23 +563,21 @@ def test_cdc_upsert_stream_equals_batch_latest(spark, sf_dir):
     assert got == want
 
 
-def test_transform_with_state_running_stats(spark, sf_dir):
-    """Spark 4 transformWithStateInPandas: last emitted row per user
-    equals the batch aggregate. Skips only where no protobuf runtime
-    can be wired up (protobuf_compat bundles one on this container)."""
-    _require_protobuf()
-
+def test_running_user_stats_stream_matches_batch(spark, sf_dir):
+    """Per-user running (count, total, max) on the built-in streaming
+    aggregation: the last emitted row per user equals the batch
+    aggregate exactly."""
     import pyspark.sql.functions as F
 
     from pyspark_movie_recommender_spark.sources import load_table
     from pyspark_movie_recommender_spark.streaming.jobs import (
-        running_user_stats_tws,
+        running_user_stats_stream,
     )
 
-    running_user_stats_tws(spark, sf_dir, query_name="t_tws_stats")
+    running_user_stats_stream(spark, sf_dir, query_name="t_user_stats")
     out = spark.sql(
         "SELECT user_id, max_by(struct(n_events, total_value, max_value),"
-        " n_events) AS s FROM t_tws_stats GROUP BY user_id"
+        " n_events) AS s FROM t_user_stats GROUP BY user_id"
     ).select("user_id", "s.n_events", "s.total_value", "s.max_value")
     got = {r.user_id: (r.n_events, r.total_value, r.max_value)
            for r in out.collect()}
@@ -607,8 +592,4 @@ def test_transform_with_state_running_stats(spark, sf_dir):
         )
         .collect()
     }
-    assert set(got) == set(want)
-    for u in want:
-        assert got[u][0] == want[u][0]
-        assert abs(got[u][1] - want[u][1]) < 1e-5
-        assert abs(got[u][2] - want[u][2]) < 1e-9
+    assert got == want

@@ -2,9 +2,8 @@
 
 Round-5's natural-engagement evidence for `adaptive_levenshtein_pairs`
 — the routing census crossing the 40k cap on UN-FORCED data (9 of 64
-keys, max a_pop 59,912) — came from a corpus described only in
-BENCH_NOTES_r05.md and built by hand in /tmp/sf10. This commits the
-generator (round-5 verdict ask #3): a two-level 10x replication of
+keys, max a_pop 59,912) — came from a corpus built by hand. This is
+its generator: a two-level 10x replication of
 sf0.1's documents, each level tagging every 8th word with a distinct
 replica marker (level 1: ``r<k>``, level 2: ``s<k>``), so:
 
@@ -23,7 +22,7 @@ cross-check) reads nothing else.
 
 Usage:
     python tools_make_sf10.py [/tmp/sf10]
-    # then (the ~23 min full receipt, BENCH_NOTES_r05.md):
+    # then (the ~23 min full receipt):
     #   census over /tmp/sf10 -> keys over cap on natural data
     #   adaptive_levenshtein_pairs(docs) end-to-end
     # the <5 min committed equivalent is
