@@ -11,22 +11,25 @@ Re-expresses ``/root/reference/recommender.py`` (RDD-era
   ``predictAll`` silently dropping factorless pairs (ML2,
   ``recommender.py:64,151,155-156``);
 - union-retrain fold-in for a new user (ML4, ``recommender.py:122-125``);
-- a per-model serving catalogue, built once per ``(model, items)`` pair:
-  ``itemFactors ⋈ items`` and the user factors, coalesced to
-  ``defaultParallelism`` and lineage-truncated with ``ckpt``. The factor
-  tables are ``LogicalRDD`` leaves without size statistics, so any plan
-  over them is a shuffle join, and every job over a relation derived
-  from them re-walks the whole ALS training DAG; after truncation a
-  request plans and schedules over a one-stage leaf instead;
-- per-request scoring without ``ALSModel.transform``: the user's factor
-  row, broadcast, cross-joined to the catalogue, with the dot product
-  accumulated in float in ALS ``predict``'s order, so predictions are
-  the ones ``transform`` gives. A factorless user or item yields no row,
-  as with ``coldStartStrategy='drop'``;
-- candidate generation as a broadcast left-anti join over the user's
-  rated items (F1 generalized, ``recommender.py:144-146``);
-- min-max rescale of predictions to [1,5] in pure SQL (ML5,
-  ``recommender.py:199-204`` — no VectorUDT, no Python UDF).
+- a per-model serving index on the driver, built once per
+  ``(model, items, user_ratings)``: the ``items ⋈ itemFactors`` rows
+  (item ids, the items' other columns, a float32 items × rank matrix),
+  the user factors and every user's rated item ids, each collected once
+  through ``driver_scalar.bounded_arrow`` under the ``recommend.serving_index``
+  job tag. It is memoised weakly on the model, so a dropped model frees
+  it, and rebuilt when the model is served with a different ``items``
+  or ``user_ratings`` DataFrame (identity, not content). Driver memory:
+  ``(items + users) × rank × 4 B + rated pairs × 8 B`` plus the items'
+  other columns, with rows bounded by ``MAX_ITEMS``, ``MAX_USERS`` and
+  ``MAX_RATED_PAIRS``;
+- per-request scoring with no Spark job: the dot product accumulated in
+  float32 in ALS ``predict``'s order, so predictions are the ones
+  ``transform`` gives, the user's rated items masked out (F1
+  generalized, ``recommender.py:144-146``), min-max rescale to [1,5]
+  typed as ``minmax_rescale`` types it (ML5, ``recommender.py:199-204``)
+  and the top k. The reply is a ``LocalRelation`` built from Arrow, so
+  collecting it submits no job. A factorless user or item yields no row,
+  as with ``coldStartStrategy='drop'``.
 
 Exact RMSE values are NOT bit-reproducible across mllib→ml ALS
 (different factor initialization); tests assert the ≈0.94 band on a
@@ -38,18 +41,20 @@ from __future__ import annotations
 import weakref
 from dataclasses import dataclass, field
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-from pyspark_movie_recommender_spark.driver_scalar import scalar_row
-from pyspark_movie_recommender_spark.operators.lineage import ckpt
-from pyspark_movie_recommender_spark.operators.relational import (
-    anti_join,
-    global_top_k,
-    minmax_rescale,
-    rmse,
-    union_all,
+from pyspark.sql.types import (
+    DoubleType,
+    FloatType,
+    IntegerType,
+    StructField,
+    StructType,
 )
+
+from pyspark_movie_recommender_spark.driver_scalar import bounded_arrow, scalar_row
+from pyspark_movie_recommender_spark.operators.relational import rmse, union_all
 
 # reference hyperparameters (recommender.py:24-27)
 SEED = 5
@@ -136,39 +141,67 @@ def fold_in_user(
     return _als(rank).fit(union_all(ratings, new_user_ratings))
 
 
-@dataclass(frozen=True)
-class ServingCatalog:
-    """A model's factors, materialised for serving: ``items`` is the
-    items relation's columns plus ``features`` (items without factors
-    dropped), ``users`` is ``(user_id, features)``."""
-
-    source: DataFrame
-    items: DataFrame
-    users: DataFrame
+# Row bounds of the serving index's three collects. At the bounds and
+# rank 12 the index holds (2^20 + 2^20) × 12 × 4 B = 96 MiB of float32
+# factors and 2^24 × 8 B = 128 MiB of (user, item) int32 rated pairs.
+MAX_ITEMS = 1 << 20
+MAX_USERS = 1 << 20
+MAX_RATED_PAIRS = 1 << 24
+INDEX_JOB_TAG = "recommend.serving_index"
 
 
-# model -> its ServingCatalog; weak, so a dropped model frees its catalogue
-_CATALOGS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+def _matrix(table: pa.Table, rank: int) -> np.ndarray:
+    return table["features"].combine_chunks().flatten().to_numpy().reshape(-1, rank)
 
 
-def serving_catalog(model, items: DataFrame) -> ServingCatalog:
-    """The serving catalogue of ``(model, items)``: built and
-    checkpointed on first use, reused while the model lives and is
-    served with the same ``items`` DataFrame."""
-    cat = _CATALOGS.get(model)
-    if cat is not None and cat.source is items:
-        return cat
-    n = items.sparkSession.sparkContext.defaultParallelism
-    factors = model.itemFactors.select(F.col("id").alias("item_id"), "features")
-    cat = ServingCatalog(
-        source=items,
-        items=items.join(factors, "item_id").coalesce(n).transform(ckpt),
-        users=model.userFactors.select(F.col("id").alias("user_id"), "features")
-        .coalesce(n)
-        .transform(ckpt),
-    )
-    _CATALOGS[model] = cat
-    return cat
+class _ServingIndex:
+    """A model's factors and the rated pairs of ``user_ratings``, collected
+    to the driver: ``rows`` is ``items ⋈ itemFactors`` without the factors,
+    ``item_factors`` their rank × items matrix."""
+
+    def __init__(self, model, items: DataFrame, user_ratings: DataFrame):
+        self.items, self.user_ratings = items, user_ratings
+        factors = model.itemFactors.select(F.col("id").alias("item_id"), "features")
+        joined = items.join(factors, "item_id")
+        t = bounded_arrow(joined, MAX_ITEMS, "recommend.serving_index.items")
+        self.rows = t.drop_columns(["features"])
+        self.item_ids = t["item_id"].to_numpy()
+        self.item_factors = _matrix(t, model.rank).T.copy()
+        t = bounded_arrow(model.userFactors, MAX_USERS, "recommend.serving_index.users")
+        self.user_ids = t["id"].to_numpy()
+        self.user_factors = _matrix(t, model.rank)
+        pairs = user_ratings.select("user_id", "item_id")
+        t = bounded_arrow(pairs, MAX_RATED_PAIRS, "recommend.serving_index.rated")
+        self.rated_users = t["user_id"].to_numpy()
+        self.rated_items = t["item_id"].to_numpy()
+        cols = [f for f in joined.schema if f.name != "features"]
+        self.schema = StructType(
+            [
+                cols[0],
+                StructField("user_id", IntegerType(), False),
+                StructField("prediction", FloatType()),
+                *cols[1:],
+            ]
+        )
+
+
+# model -> its _ServingIndex; weak, so a dropped model frees its index
+_INDEXES: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+
+
+def _serving_index(model, items: DataFrame, user_ratings: DataFrame) -> _ServingIndex:
+    """The serving index of ``(model, items, user_ratings)``: built on
+    first use under the ``INDEX_JOB_TAG`` job tag, reused while the model
+    lives and is served with the same ``items`` and ``user_ratings``."""
+    ix = _INDEXES.get(model)
+    if ix is None or ix.items is not items or ix.user_ratings is not user_ratings:
+        sc = items.sparkSession.sparkContext
+        sc.addJobTag(INDEX_JOB_TAG)
+        try:
+            ix = _INDEXES[model] = _ServingIndex(model, items, user_ratings)
+        finally:
+            sc.removeJobTag(INDEX_JOB_TAG)
+    return ix
 
 
 def recommend_for_user(
@@ -182,38 +215,39 @@ def recommend_for_user(
     """Reference entry point 2 (recommender.py:107-178): score every item
     the user has NOT rated, top-k by prediction, optional [1,5] rescale.
 
-    Candidate generation is a left-anti join (not a closure-captured id
-    list); items is expected to carry (item_id, title). Scoring reads the
-    model's serving catalogue (``serving_catalog``), so a request plans
-    no shuffle: the user vector, the rated items and the rescale bounds
-    are broadcast.
+    items is expected to carry (item_id, title). The request reads the
+    model's serving index and runs no Spark job; the reply is
+    ``item_id, user_id, prediction, <items' other columns>[, scaled_rating]``
+    ordered by the score descending, then ``item_id``.
     """
-    cat = serving_catalog(model, items)
-    user = cat.users.filter(F.col("user_id") == user_id).select(
-        F.col("features").alias("__u")
-    )
-    rated = user_ratings.filter(F.col("user_id") == user_id).select("item_id")
-    dot = F.aggregate(
-        F.zip_with("__u", "features", lambda x, y: x * y),
-        F.lit(0).cast("float"),
-        lambda acc, x: acc + x,
-    )
-    preds = (
-        anti_join(cat.items, F.broadcast(rated), "item_id")
-        .crossJoin(F.broadcast(user))
-        .select(
-            "item_id",
-            F.lit(user_id).alias("user_id"),
-            dot.alias("prediction"),
-            *[c for c in items.columns if c != "item_id"],
-        )
-    )
+    if k < 0:
+        raise ValueError(f"k must be >= 0, got {k}")
+    ix = _serving_index(model, items, user_ratings)
+    w = ix.user_factors[ix.user_ids == user_id]  # empty: a factorless user
+    rated = ix.rated_items[ix.rated_users == user_id]
+    cand = np.flatnonzero(~np.isin(ix.item_ids, rated) & (w.size > 0))
+    pred = np.zeros(cand.size, np.float32)
+    for wj, fj in zip(w.ravel(), ix.item_factors):  # ALS predict's float32 sum
+        pred += wj * fj[cand]
+    key = pred
     if rescale:
-        preds = minmax_rescale(preds, "prediction", out_col="scaled_rating")
-        order = [F.desc("scaled_rating"), F.asc("item_id")]
-    else:
-        order = [F.desc("prediction"), F.asc("item_id")]
-    return global_top_k(preds, order, k)
+        lo, hi = (pred.min(), pred.max()) if cand.size else (0, 0)
+        # minmax_rescale's typing: float p - lo and hi - lo, the rest double
+        key = (
+            np.ones(cand.size)
+            if hi == lo
+            else 1.0 + 4.0 * (pred - lo).astype(np.float64) / np.float64(hi - lo)
+        )
+    top = np.lexsort((ix.item_ids[cand], -key))[:k]
+    reply = ix.rows.take(cand[top])
+    user = np.full(top.size, user_id, np.int32)
+    reply = reply.add_column(1, "user_id", pa.array(user))
+    reply = reply.add_column(2, "prediction", pa.array(pred[top]))
+    schema = ix.schema
+    if rescale:
+        reply = reply.append_column("scaled_rating", pa.array(key[top]))
+        schema = StructType([*schema, StructField("scaled_rating", DoubleType())])
+    return items.sparkSession.createDataFrame(reply, schema)
 
 
 def _order_history_als(spark: SparkSession, sf_dir: str):

@@ -101,11 +101,12 @@ def _reference_top_k(model, items, ratings, user_id, k, rescale):
     """The request as ``ALSModel.transform`` composes it: anti_join →
     score → minmax_rescale → global_top_k."""
     from pyspark_movie_recommender_spark.operators.relational import (
+        anti_join,
         global_top_k,
         minmax_rescale,
     )
 
-    cands = REC.anti_join(
+    cands = anti_join(
         items.select("item_id"),
         ratings.filter(F.col("user_id") == user_id).select("item_id"),
         "item_id",
@@ -129,7 +130,7 @@ def model_without_399(movielens_fixture):
 def test_recommend_matches_transform_composition(
     spark, movielens_fixture, model_without_399, rescale
 ):
-    """The serving-catalogue path returns what scoring through
+    """The serving-index path returns what scoring through
     ``ALSModel.transform`` returns: same columns, same item ids in the
     same order, same scores. Item 399 has no factors (trained without
     it) and never appears; user 0 has no factors and gets no row."""
@@ -154,36 +155,111 @@ def test_recommend_matches_transform_composition(
             assert len(g) == 399 - 50
 
 
-def test_request_plan_has_no_shuffle_and_reuses_catalogue(spark, movielens_fixture):
-    """A request plans no shuffle join and no hash exchange; the
-    catalogue is checkpointed once per model and reused after."""
+def _assert_matches_reference(model, items, user_ratings, user_id, k, rescale):
+    got = REC.recommend_for_user(model, items, user_ratings, user_id, k, rescale)
+    want = _reference_top_k(model, items, user_ratings, user_id, k, rescale)
+    assert got.schema.simpleString() == want.schema.simpleString()
+    g, w = got.collect(), want.collect()
+    assert [r.item_id for r in g] == [r.item_id for r in w]
+    value = "scaled_rating" if rescale else "prediction"
+    assert all(abs(a[value] - b[value]) <= 1e-9 for a, b in zip(g, w))
+    return g
+
+
+@pytest.mark.parametrize("rescale", [True, False])
+def test_recommend_single_candidate_matches_reference(
+    spark, movielens_fixture, model_without_399, rescale
+):
+    """A user left with one factored candidate: its min equals its max,
+    so the rescaled score is the constant 1.0 (the ``hi == lo`` branch)."""
+    _, items = movielens_fixture
+    rated = spark.createDataFrame(
+        [(5, m, 3.0) for m in range(399) if m != 17],
+        "user_id int, item_id int, rating double",
+    )
+    g = _assert_matches_reference(model_without_399, items, rated, 5, 10, rescale)
+    assert [r.item_id for r in g] == [17]
+    if rescale:
+        assert g[0].scaled_rating == 1.0
+
+
+@pytest.mark.parametrize("rescale", [True, False])
+def test_recommend_all_rated_is_empty(
+    spark, movielens_fixture, model_without_399, rescale
+):
+    """A user who has rated every factored item gets an empty reply."""
+    _, items = movielens_fixture
+    rated = spark.createDataFrame(
+        [(5, m, 3.0) for m in range(399)], "user_id int, item_id int, rating double"
+    )
+    assert _assert_matches_reference(model_without_399, items, rated, 5, 10, rescale) == []
+
+
+@pytest.mark.parametrize("rescale", [True, False])
+def test_recommend_rated_mask_follows_user_ratings(
+    spark, movielens_fixture, model_without_399, rescale
+):
+    """Serving the same model with a different ``user_ratings`` frame
+    rebuilds the index: items the new frame rates are masked out."""
+    ratings, items = movielens_fixture
+    first = _assert_matches_reference(model_without_399, items, ratings, 2, 10, rescale)
+    more = ratings.unionByName(
+        spark.createDataFrame(
+            [(2, r.item_id, 5.0) for r in first[:5]],
+            "user_id int, item_id int, rating double",
+        )
+    )
+    again = _assert_matches_reference(model_without_399, items, more, 2, 10, rescale)
+    assert not {r.item_id for r in first[:5]} & {r.item_id for r in again}
+    assert [r.item_id for r in again[:5]] == [r.item_id for r in first[5:]]
+
+
+def test_recommend_rejects_negative_k(movielens_fixture, model_without_399):
+    ratings, items = movielens_fixture
+    with pytest.raises(ValueError, match="k must be >= 0"):
+        REC.recommend_for_user(model_without_399, items, ratings, 2, k=-1)
+
+
+def test_request_submits_no_jobs_and_reuses_index(spark, movielens_fixture):
+    """The serving index is built once per model, under its job tag;
+    after that a request submits no Spark job, and a dropped model frees
+    its index."""
     import gc
     import weakref
 
-    from pyspark_movie_recommender_spark.operators.lineage import ckpt_registry
-
     ratings, items = movielens_fixture
+    sc = spark.sparkContext
+    tracker = sc._jsc.sc().statusTracker()
+
+    def jobs():
+        return set(sc.statusTracker().getJobIdsForGroup())
+
+    def build_jobs():
+        return set(tracker.getJobIdsForTag(REC.INDEX_JOB_TAG))
+
     model = REC._als(rank=2).fit(ratings)
+    built = build_jobs()
+    REC.recommend_for_user(model, items, ratings, 2).collect()
+    assert build_jobs() - built  # the build ran under its tag
+    assert REC.INDEX_JOB_TAG not in sc.getJobTags()
+    index = REC._INDEXES[model]
 
-    before = set(ckpt_registry())
-    first = REC.recommend_for_user(model, items, ratings, 2)
-    first.collect()
-    assert len(set(ckpt_registry()) - before) == 2  # item and user catalogues
-    plan = first._jdf.queryExecution().executedPlan().toString()
-    assert "SortMergeJoin" not in plan, plan
-    assert "Exchange hashpartitioning" not in plan, plan
-
-    seen = set(ckpt_registry())
-    REC.recommend_for_user(model, items, ratings, 3).collect()
-    assert set(ckpt_registry()) == seen  # same model: catalogue reused
+    built = build_jobs()
+    second = REC.recommend_for_user(model, items, ratings, 3)
+    before = jobs()
+    assert len(second.collect()) == 10
+    assert jobs() == before  # the request submitted no job
+    assert REC._INDEXES[model] is index  # same model: index reused
+    assert build_jobs() == built
 
     refit = REC._als(rank=2).fit(ratings)
     REC.recommend_for_user(refit, items, ratings, 2).collect()
-    assert len(set(ckpt_registry()) - seen) == 2  # new model, new catalogue
-    catalogue = weakref.ref(REC.serving_catalog(refit, items))
+    assert REC._INDEXES[refit] is not index  # new model, new index
+    assert build_jobs() - built
+    refit_index = weakref.ref(REC._INDEXES[refit])
     del refit
     gc.collect()
-    assert catalogue() is None  # a dropped model drops its catalogue
+    assert refit_index() is None  # a dropped model drops its index
 
 
 # ---------------------------------------------------------------------------
@@ -247,17 +323,18 @@ def test_reference_movielens_full_protocol_parity(spark):
     # is deterministic, not model-dependent: 9,125 movies − the 10
     # rated − 58 movies never rated by anyone (no item factors). Our
     # coldStartStrategy='drop' must land on the same number.
-    cands = REC.anti_join(
+    from pyspark_movie_recommender_spark.operators.relational import (
+        anti_join,
+        minmax_rescale,
+    )
+
+    cands = anti_join(
         movies.select("item_id"), new_user.select("item_id"), "item_id"
     ).select(F.lit(0).alias("user_id"), "item_id")
     scored = REC.score(model, cands)
     assert scored.count() == 9057  # recommender.py:156
     # min-max rescale bounds are EXACT on the full scored set: the min
     # prediction maps to 1.0 and the max to 5.0 (recommender.py:206,243)
-    from pyspark_movie_recommender_spark.operators.relational import (
-        minmax_rescale,
-    )
-
     bounds = (
         minmax_rescale(scored, "prediction", out_col="scaled_rating")
         .agg(
