@@ -96,8 +96,8 @@ def ckpt(df: DataFrame) -> DataFrame:
     ``SPARK_GRAFT_CKPT_DISABLE=1`` makes this a no-op — a TEST-ONLY
     seam: eager materialization truncates the visible plan at every
     fan-out point, so plan-shape pins (dim broadcasts, window counts)
-    set the env var to inspect the full untruncated plan. Production
-    and the round battery never set it.
+    set the env var to inspect the full untruncated plan. Production,
+    perfbench and the registry-wide plan census never set it.
     """
     if os.environ.get("SPARK_GRAFT_CKPT_DISABLE"):
         return df

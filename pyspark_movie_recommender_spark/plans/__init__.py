@@ -382,6 +382,62 @@ def duplicate_fact_subtrees(df: DataFrame) -> tuple[int, int]:
     return dup_fact, reused
 
 
+# Python-stage operators and the tables the duplicate-subtree census
+# counts in an executed plan's tree text.
+_PY_OPS = (
+    "FlatMapCoGroupsInPandas",
+    "FlatMapGroupsInPandas",
+    "MapInPandas",
+    "ArrowEvalPython",
+    "BatchEvalPython",
+)
+_CENSUS_TABLES = (
+    "lineitem",
+    "orders",
+    "customer",
+    "supplier",
+    "part",
+    "events",
+    "documents",
+    "embeddings",
+)
+
+
+def subtree_census(df: DataFrame) -> dict:
+    """Text census of the executed plan for re-executed fan-outs.
+
+    - ``py_ops``: occurrences of Python-stage operators;
+    - ``scans``: per-table parquet scan mentions, for tables seen more
+      than once;
+    - ``cached``: whether the plan holds an ``InMemoryRelation`` (a
+      persist) or a ``Scan ExistingRDD`` leaf (a ``ckpt()``-materialized
+      LogicalRDD); the counts then include cache/checkpoint recipe text
+      that executes only once;
+    - ``over_threshold``: ``py_ops >= 2`` or any table scanned >= 4
+      times.
+
+    An over-threshold plan must be cached, and even then must not hold
+    more fact-sized duplicated subtrees than reused exchanges
+    (:func:`duplicate_fact_subtrees`): recipe text can hide a live
+    fan-out elsewhere in a cached plan.
+    """
+    import re
+
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    scans = {
+        t: c
+        for t in _CENSUS_TABLES
+        if (c := len(re.findall(rf"{t}\.parquet", plan))) > 1
+    }
+    py = sum(plan.count(op) for op in _PY_OPS)
+    return {
+        "py_ops": py,
+        "scans": scans,
+        "cached": "InMemoryRelation" in plan or "Scan ExistingRDD" in plan,
+        "over_threshold": py >= 2 or any(c >= 4 for c in scans.values()),
+    }
+
+
 def unpartitioned_windows(df: DataFrame) -> tuple[int, int]:
     """Count logical Window nodes with an EMPTY partitionSpec — the
     single-task-sort scale cliff — returning (total, fact_sized):

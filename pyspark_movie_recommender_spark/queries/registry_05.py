@@ -1980,8 +1980,11 @@ def link_prediction_resource_alloc(spark: SparkSession, sf_dir: str) -> DataFram
 
     li = load_table(spark, sf_dir, "lineitem")
     # round 9: basket census (one fact exchange) replaces the items
-    # self-join — see operators/graph.copurchase_pairs
-    edges = copurchase_pairs(li, min_support=2).select("u", "v")
+    # self-join — see operators/graph.copurchase_pairs. The edges feed
+    # adj three times (degrees, both wedge sides) and the anti-join, so
+    # they are materialized once rather than re-running the census per
+    # consumer.
+    edges = copurchase_pairs(li, min_support=2).select("u", "v").transform(_ckpt)
     adj = edges.select(F.col("u").alias("s"), F.col("v").alias("t")).unionAll(
         edges.select(F.col("v").alias("s"), F.col("u").alias("t"))
     )
@@ -2072,8 +2075,10 @@ def harmonic_centrality_radius2(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     li = load_table(spark, sf_dir, "lineitem")
     # round 9: basket census (one fact exchange) replaces the items
-    # self-join — see operators/graph.copurchase_pairs
-    edges = copurchase_pairs(li, min_support=2).select("u", "v")
+    # self-join — see operators/graph.copurchase_pairs. adj is read four
+    # times (degrees, both wedge sides, the anti-join), so the edges are
+    # materialized once rather than re-running the census per consumer.
+    edges = copurchase_pairs(li, min_support=2).select("u", "v").transform(_ckpt)
     adj = edges.select(F.col("u").alias("s"), F.col("v").alias("t")).unionAll(
         edges.select(F.col("v").alias("s"), F.col("u").alias("t"))
     )

@@ -10,6 +10,7 @@ from __future__ import annotations
 
 import math
 import os
+import zlib
 from datetime import datetime
 
 import duckdb
@@ -17,12 +18,11 @@ import duckdb
 from pyspark_movie_recommender_spark.sources.tables import TABLES
 
 
-def default_slice(mod: int = 8) -> int:
-    """Default rotating test slice: the ISO week of the HEAD commit,
-    mod ``mod``. A function of the COMMIT, not of today's date, so all
-    slices still cycle through CI week by week but re-running a
-    historical commit is reproducible and a pre-push run exercises the
-    same slice CI will."""
+def _commit_week() -> int:
+    """The ISO week of the HEAD commit: a function of the COMMIT, not of
+    today's date, so the slices still cycle through CI week by week but
+    re-running a historical commit is reproducible and a pre-push run
+    exercises the same slice CI will."""
     import subprocess
 
     try:
@@ -33,9 +33,22 @@ def default_slice(mod: int = 8) -> int:
             cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
             timeout=10,
         ).stdout.strip()
-        return datetime.fromisoformat(ts).isocalendar()[1] % mod
+        return datetime.fromisoformat(ts).isocalendar()[1]
     except Exception:
-        return datetime.now().isocalendar()[1] % mod
+        return datetime.now().isocalendar()[1]
+
+
+def registry_slice(names) -> list[str]:
+    """The rotating 1/8 of the registry a suite run covers: the names
+    with ``crc32(name) % 8 == k``, sorted. ``SPARK_GRAFT_ORACLE_SLICE``
+    pins ``k`` (``0``-``7``) or selects every name (``all``); unset, ``k``
+    is the commit week mod 8. The oracle, plan-census and determinism
+    tests all walk this same slice."""
+    env = os.environ.get("SPARK_GRAFT_ORACLE_SLICE")
+    if env == "all":
+        return sorted(names)
+    k = (int(env) if env is not None else _commit_week()) % 8
+    return sorted(n for n in names if zlib.crc32(n.encode()) % 8 == k)
 
 
 def duck_connection(sf_dir: str) -> duckdb.DuckDBPyConnection:

@@ -1,41 +1,23 @@
-"""Per-round accuracy-law gate for the rows-only registry queries.
+"""Accuracy laws for the rows-only registry queries.
 
-The driver's DuckDB oracle covers 922 of the 1002 registry queries;
-the other 80 (approximate sketches, LSH/ANN, streaming, certified
-optimization replays) are pinned by accuracy/law/equivalence tests in
-pytest instead. Round-6 verdict ask #2: make that law evidence a
-per-round ARTIFACT, gated red, so a silent law-test deletion (or a new
-rows-only query without a law) cannot survive a round.
-
-This tool:
-
-1. recomputes the rows-only set from the live registry and FAILS RED
-   if it differs from the curated ``LAW_TESTS`` map below (new
-   rows-only query with no law entry, or a stale entry);
-2. runs every mapped pytest node in ONE pytest process with
-   ``SPARK_GRAFT_LAW_RECORD`` set, so quantitative tests emit
-   law → measured value → bound lines via ``tests/law_record.py``;
-3. FAILS RED if any node is missing (deleted/renamed law test) or
-   fails;
-4. writes ``LAWS_r{N}.json``: per query — the law statement, its test
-   nodes, pass/fail, and any measured values.
-
-Usage: python tools_laws.py [round_number]
+The DuckDB oracle (``tests/test_queries_oracle.py``) checks every
+registry query that has oracle SQL. The rest (approximate sketches,
+LSH/ANN, streaming, certified optimization replays) are pinned by the
+law tests named below, which run in the same suite. This module keeps
+that map honest without running Spark: every rows-only query has an
+entry, no entry names a query that has oracle SQL or is gone, and every
+named test still exists, so a deleted or renamed law test fails here.
 """
 
 from __future__ import annotations
 
-import json
+import ast
 import os
-import subprocess
-import sys
-import tempfile
-import time
-import xml.etree.ElementTree as ET
+
+from pyspark_movie_recommender_spark import queries as Q
 
 # query -> (one-line law statement, [pytest node ids proving it]).
-# Every rows-only registry query MUST have an entry; the gate diffs
-# this map against the live registry each round.
+# Every rows-only registry query MUST have an entry.
 LAW_TESTS: dict[str, tuple[str, list[str]]] = {
     "abtt_top_pc_removal": (
         "removing the top PC zeroes the corpus-mean projection onto it",
@@ -381,124 +363,31 @@ LAW_TESTS: dict[str, tuple[str, list[str]]] = {
 }
 
 
-def main() -> None:
-    rnd = sys.argv[1] if len(sys.argv) > 1 else "07"
-    from pyspark_movie_recommender_spark import queries as Q
-
-    rows_only = sorted(set(Q.QUERIES) - set(Q.ORACLE_SQL))
-    mapped = sorted(LAW_TESTS)
-    missing_entries = sorted(set(rows_only) - set(mapped))
-    stale_entries = sorted(set(mapped) - set(rows_only))
-    if missing_entries or stale_entries:
-        print(
-            json.dumps(
-                {
-                    "gate": "red",
-                    "reason": "LAW_TESTS map out of sync with registry",
-                    "rows_only_without_law": missing_entries,
-                    "law_entries_not_rows_only": stale_entries,
-                }
-            )
-        )
-        sys.exit(1)
-
-    nodes = sorted({n for _, (_, ts) in LAW_TESTS.items() for n in ts})
-    rec_path = tempfile.mktemp(prefix="laws_", suffix=".jsonl")
-    junit = tempfile.mktemp(prefix="laws_", suffix=".xml")
-    t0 = time.time()
-    env = {
-        **os.environ,
-        "SPARK_GRAFT_LAW_RECORD": rec_path,
+def _module_functions(path: str) -> set[str]:
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    with open(os.path.join(root, path), encoding="utf-8") as fh:
+        tree = ast.parse(fh.read())
+    return {
+        n.name
+        for n in tree.body
+        if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef))
     }
-    proc = subprocess.run(
-        [
-            sys.executable,
-            "-m",
-            "pytest",
-            *nodes,
-            "-q",
-            "--tb=line",
-            f"--junitxml={junit}",
-        ],
-        env=env,
-        capture_output=True,
-        text=True,
+
+
+def test_law_map_covers_rows_only_queries_and_names_live_tests():
+    rows_only = set(Q.QUERIES) - set(Q.ORACLE_SQL)
+    assert set(LAW_TESTS) == rows_only, (
+        f"rows-only queries without a law: {sorted(rows_only - set(LAW_TESTS))}; "
+        f"law entries that are not rows-only: {sorted(set(LAW_TESTS) - rows_only)}"
     )
-    elapsed = time.time() - t0
-
-    # parse junit: node -> pass/fail/error; a node pytest could not even
-    # collect (deleted law test) simply won't appear -> missing
-    outcomes: dict[str, str] = {}
-    if os.path.exists(junit):
-        for tc in ET.parse(junit).getroot().iter("testcase"):
-            cls = tc.get("classname", "").replace(".", "/") + ".py"
-            node = f"{cls}::{tc.get('name')}"
-            if tc.find("failure") is not None or tc.find("error") is not None:
-                outcomes[node] = "fail"
-            elif tc.find("skipped") is not None:
-                outcomes[node] = "skip"
-            else:
-                outcomes[node] = "pass"
-
-    measured: dict[str, list[dict]] = {}
-    if os.path.exists(rec_path):
-        with open(rec_path, encoding="utf-8") as fh:
-            for line in fh:
-                d = json.loads(line)
-                q = d.pop("query", None)
-                if q:
-                    measured.setdefault(q, []).append(d)
-
-    def node_status(node: str) -> str:
-        # junit names parametrized tests node[param]; match prefix
-        if node in outcomes:
-            return outcomes[node]
-        hits = [v for k, v in outcomes.items() if k.startswith(node)]
-        if not hits:
-            return "missing"
-        if "fail" in hits:
-            return "fail"
-        return "pass" if "pass" in hits else hits[0]
-
-    result = {}
-    n_pass = 0
-    failures = {}
-    for q in rows_only:
-        law, tests = LAW_TESTS[q]
-        statuses = {n: node_status(n) for n in tests}
-        ok = all(s == "pass" for s in statuses.values())
-        if ok:
-            n_pass += 1
-        else:
-            failures[q] = {n: s for n, s in statuses.items() if s != "pass"}
-        entry = {"law": law, "tests": statuses, "status": "pass" if ok else "FAIL"}
-        if q in measured:
-            entry["measured"] = measured[q]
-        result[q] = entry
-
-    commit = subprocess.run(
-        ["git", "log", "-1", "--format=%h"], capture_output=True, text=True
-    ).stdout.strip()
-    out = {
-        "total_rows_only": len(rows_only),
-        "laws_pass": n_pass,
-        "failures": failures,
-        "elapsed_sec": round(elapsed, 1),
-        "commit": commit,
-        "queries": result,
-    }
-    path = f"LAWS_r{rnd}.json"
-    with open(path, "w", encoding="utf-8") as fh:
-        json.dump(out, fh, indent=1, sort_keys=False)
-        fh.write("\n")
-    print(
-        f"{path}: {n_pass}/{len(rows_only)} laws pass"
-        f" ({elapsed:.0f}s, pytest rc={proc.returncode})"
-    )
-    if failures:
-        print(json.dumps(failures, indent=1))
-        sys.exit(1)
-
-
-if __name__ == "__main__":
-    main()
+    defined: dict[str, set[str]] = {}
+    missing = []
+    for query, (_, nodes) in LAW_TESTS.items():
+        for node in nodes:
+            path, func = node.split("::")
+            func = func.split("[")[0]
+            if path not in defined:
+                defined[path] = _module_functions(path)
+            if func not in defined[path]:
+                missing.append(f"{query}: {node}")
+    assert not missing, f"law tests not found: {missing}"

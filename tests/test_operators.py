@@ -406,19 +406,9 @@ def test_hll_sketch_rollup_accuracy_and_mergeability(spark, sf_dir):
     }
     exact["ALL"] = orders.select("o_custkey").distinct().count()
     assert set(est) == set(exact)
-    worst = 0.0
     for grain, n in exact.items():
         # lgConfigK=12 → relative error ~1.6%; allow 5%
-        worst = max(worst, abs(est[grain] - n) / max(n, 1))
         assert abs(est[grain] - n) <= max(2, 0.05 * n), (grain, est[grain], n)
-    from tests.law_record import record
-
-    record(
-        "hll_rollup_max_rel_error",
-        worst,
-        "<= 0.05 (and union == direct sketch)",
-        query="hll_sketch_rollup",
-    )
 
     # mergeability: union of per-group sketches == sketch built directly
     direct = (
@@ -552,8 +542,6 @@ def test_snapshot_diff_null_safe(spark):
 def test_countmin_upper_bounds_exact(spark, sf_dir):
     from pyspark_movie_recommender_spark import queries as Q
 
-    from tests.law_record import record
-
     rows = Q.QUERIES["countmin_token_estimates"](spark, sf_dir).collect()
     assert len(rows) == 20
     for r in rows:
@@ -561,12 +549,6 @@ def test_countmin_upper_bounds_exact(spark, sf_dir):
         # tokens here → collisions are rare, overcount stays small
         assert r.est_cnt >= r.exact_cnt
         assert r.est_cnt <= r.exact_cnt * 1.5 + 50
-    record(
-        "countmin_max_overcount_ratio",
-        max((r.est_cnt - r.exact_cnt) / max(r.exact_cnt, 1) for r in rows),
-        "est >= exact and est <= exact*1.5+50",
-        query="countmin_token_estimates",
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -598,22 +580,12 @@ def test_approx_quantiles_within_sketch_error_of_exact(spark, sf_dir):
         .collect()
     }
     assert set(approx) == set(exact)
-    worst = 0.0
     for flag, qs in approx.items():
         assert list(qs) == sorted(qs)  # monotone
         for a, e in zip(qs, exact[flag]):
             # rank-error sketches bound position, not value; prices are
             # dense so value drift stays small — 2% is generous
-            worst = max(worst, abs(a - e) / e)
             assert abs(a - e) <= 0.02 * e, (flag, a, e)
-    from tests.law_record import record
-
-    record(
-        "approx_quantile_max_rel_value_error",
-        worst,
-        "<= 0.02",
-        query="approx_quantiles_prices",
-    )
 
 
 def test_approx_distinct_within_hll_error_of_exact(spark, sf_dir):
@@ -635,25 +607,11 @@ def test_approx_distinct_within_hll_error_of_exact(spark, sf_dir):
     }
     rows = df.collect()
     assert rows
-    worst = 0.0
     for r in rows:
         ep, es = exact[r.l_returnflag]
         # rsd=0.02 → 3 sigma = 6%, plus slack for tiny groups
-        worst = max(
-            worst,
-            abs(r.approx_parts - ep) / max(ep, 1),
-            abs(r.approx_supps - es) / max(es, 1),
-        )
         assert abs(r.approx_parts - ep) <= 0.06 * ep + 3, (r, ep)
         assert abs(r.approx_supps - es) <= 0.06 * es + 3, (r, es)
-    from tests.law_record import record
-
-    record(
-        "hll_approx_distinct_max_rel_error",
-        worst,
-        "<= 0.06 (+3 abs slack)",
-        query="approx_distinct_parts",
-    )
 
 
 def test_stratified_sample_fractions_and_determinism(spark, sf_dir):
@@ -716,27 +674,13 @@ def test_theta_overlap_estimates_near_exact(spark, sf_dir):
         s: {r.g for r in grams.filter(F.col("source") == s).collect()}
         for s in ("src0", "src1", "src2")
     }
-    worst = 0.0
     for r in rows:
         a, b = sets[r.source_a], sets[r.source_b]
         assert r.distinct_a == len(a) and r.distinct_b == len(b)
-        worst = max(
-            worst,
-            abs(r.union_est - len(a | b)) / len(a | b),
-            abs(r.intersect_est - len(a & b)) / len(a | b),
-        )
         assert abs(r.union_est - len(a | b)) <= 0.05 * len(a | b)
         assert abs(r.intersect_est - len(a & b)) <= 0.05 * len(a | b)
         # partial overlap is the point of the fixture: strict subset
         assert len(a & b) < min(len(a), len(b))
-    from tests.law_record import record
-
-    record(
-        "theta_sketch_max_rel_error",
-        worst,
-        "<= 0.05 of union size",
-        query="theta_token_overlap",
-    )
 
 
 def test_kll_quantiles_within_rank_error(spark, sf_dir):
@@ -756,7 +700,6 @@ def test_kll_quantiles_within_rank_error(spark, sf_dir):
 
         return bisect.bisect_right(vals, x) / len(vals)
 
-    worst = 0.0
     for grp, r in rows.items():
         vals = (
             vals_all
@@ -768,22 +711,9 @@ def test_kll_quantiles_within_rank_error(spark, sf_dir):
                 .collect()
             )
         )
-        worst = max(
-            worst,
-            abs(true_rank(vals, r.p50_est) - 0.5),
-            abs(true_rank(vals, r.p95_est) - 0.95),
-        )
         assert abs(true_rank(vals, r.p50_est) - 0.5) <= 0.03, (grp, r.p50_est)
         assert abs(true_rank(vals, r.p95_est) - 0.95) <= 0.03, (grp, r.p95_est)
     assert "ALL" in rows and len(rows) == 6
-    from tests.law_record import record
-
-    record(
-        "kll_max_rank_error",
-        worst,
-        "<= 0.03",
-        query="kll_quantile_rollup",
-    )
 
 
 def test_operators_tolerate_empty_inputs(spark):
@@ -1229,12 +1159,12 @@ def test_adaptive_levenshtein_natural_engagement(spark, sf_oracle_dir):
 
 
 def test_ivf_topk_recall_against_bruteforce(spark, sf_oracle_dir):
-    """Accuracy law for the rows-only ANN path (LAWS gate): IVF with
-    nprobe=4 of n_cells=16 must recall a healthy share of the EXACT
-    cosine top-5 — cell routing trades recall for the ~n_cells/nprobe
-    scan reduction, so the law pins the trade at >= 0.5 overall."""
+    """Accuracy law for the rows-only ANN path (mapped in test_laws.py):
+    IVF with nprobe=4 of n_cells=16 must recall a healthy share of the
+    EXACT cosine top-5 — cell routing trades recall for the
+    ~n_cells/nprobe scan reduction, so the law pins the trade at >= 0.5
+    overall."""
     from pyspark_movie_recommender_spark import queries as Q
-    from tests.law_record import record
 
     approx = {
         (r.probe_id, r.neighbor_id)
@@ -1246,5 +1176,4 @@ def test_ivf_topk_recall_against_bruteforce(spark, sf_oracle_dir):
     }
     assert exact, "exact top-k must be nonempty"
     recall = len(approx & exact) / len(exact)
-    record("ivf_recall_at_5", recall, ">= 0.5", query="ann_ivf_topk")
     assert recall >= 0.5, recall

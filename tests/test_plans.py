@@ -845,33 +845,41 @@ def test_no_fact_sized_unpartitioned_windows(spark, sf_dir):
 
 
 def test_registry_slice_no_fact_sized_windows(spark, sf_dir):
-    """Registry-WIDE fact_sized == 0 pin, sliced like the oracle suite:
-    a rotating ~1/8 of all registered queries per commit-week (pin with
-    SPARK_GRAFT_AUDIT_SLICE=k, or SPARK_GRAFT_AUDIT_SLICE=all for the
-    FULL registry, the census gate to run before a change to query
-    plans). Together with the named reroute pin above this keeps the
-    single-task global-sort cliff out of every plan, not just the 29
-    rewritten ones."""
-    import os
-    import zlib
+    """Registry-WIDE plan census over the oracle suite's rotating slice
+    (``tests.oracle.registry_slice``; ``SPARK_GRAFT_ORACLE_SLICE=all``
+    walks the FULL registry, the census to run before a change to query
+    plans). Per query:
 
-    from pyspark_movie_recommender_spark.plans import unpartitioned_windows
-    from tests.oracle import default_slice
+    - fact_sized == 0: together with the named reroute pin above this
+      keeps the single-task global-sort cliff out of every plan, not
+      just the 29 rewritten ones;
+    - duplicate-subtree gate: a plan the text census flags over
+      threshold must be cached, and must not hold more fact-sized
+      duplicated subtrees than reused exchanges. Only flagged plans are
+      classified: unflagged plans with dup > reused exist (a second
+      scan of a small subtree is often the cheapest plan).
+    """
+    from pyspark_movie_recommender_spark.plans import (
+        duplicate_fact_subtrees,
+        subtree_census,
+        unpartitioned_windows,
+    )
+    from tests.oracle import registry_slice
 
-    env = os.environ.get("SPARK_GRAFT_AUDIT_SLICE")
-    if env == "all":
-        names = sorted(Q.QUERIES)
-        k = "all"
-    else:
-        k = int(env) % 8 if env is not None else default_slice()
-        names = [n for n in sorted(Q.QUERIES) if zlib.crc32(n.encode()) % 8 == k]
     offenders = {}
-    for name in names:
+    fanouts = {}
+    for name in registry_slice(Q.QUERIES):
         df = Q.QUERIES[name](spark, sf_dir)
         _, fact_sized = unpartitioned_windows(df)
         if fact_sized:
             offenders[name] = fact_sized
-    assert not offenders, f"fact-sized global windows (slice {k}): {offenders}"
+        census = subtree_census(df)
+        if census["over_threshold"]:
+            dup, reused = duplicate_fact_subtrees(df)
+            if not census["cached"] or dup > reused:
+                fanouts[name] = {**census, "dup_fact": dup, "reused": reused}
+    assert not offenders, f"fact-sized global windows: {offenders}"
+    assert not fanouts, f"re-executed fan-outs: {fanouts}"
 
 
 def test_unpartitioned_windows_flags_fact_sized_global_window(spark, sf_dir):

@@ -84,14 +84,6 @@ def test_planted_dups_recovered_at_scale(spark):
     ).count()
     release_all()
     expected = n // 20 - 1
-    from tests.law_record import record
-
-    record(
-        "minhash_lsh_planted_recall",
-        planted / expected,
-        ">= 0.99",
-        query="dedup_minhash_lsh",
-    )
     assert planted >= 0.99 * expected, (planted, expected)
 
 

@@ -275,16 +275,8 @@ def test_sketch_errors_within_bounds(spark):
         "approx_percentile_p50",
         "approx_percentile_p90",
     }
-    from tests.law_record import record
-
     for x in r:
         assert x.within_bound == 1, (x.metric, x.abs_error)
-        record(
-            f"sketch_audit_{x.metric}_abs_error",
-            float(x.abs_error),
-            "within_bound == 1 (published sketch bound)",
-            query="sketch_accuracy_audit",
-        )
 
 
 # --- wave 135: Soundex reference cross-check --------------------------------

@@ -629,20 +629,12 @@ def test_haar_synopsis(spark):
 
 
 def test_dgim_guarantee(spark):
-    from tests.law_record import record
-
     (r,) = rows(spark, "dgim_sliding_count")
     assert r.window == 1000
     assert r.n_buckets <= r.bucket_bound
     # 50% error guarantee
     if r.exact_ones > 0:
         assert abs(r.dgim_estimate - r.exact_ones) * 2 <= r.exact_ones + 1
-        record(
-            "dgim_rel_error",
-            abs(r.dgim_estimate - r.exact_ones) / r.exact_ones,
-            "<= 0.5",
-            query="dgim_sliding_count",
-        )
 
 
 def test_mg_merge_guarantee(spark):

@@ -292,14 +292,6 @@ def test_misra_gries_containment_and_lower_bounds(spark):
     for tok, c in exact.items():
         if c > threshold:
             assert tok in got, (tok, c, threshold)
-    from tests.law_record import record
-
-    record(
-        "misra_gries_max_undercount",
-        max(exact[t] - lb for t, (lb, _) in got.items()) if got else 0,
-        f"<= merged threshold {threshold:.0f}",
-        query="misra_gries_heavy_hitters",
-    )
 
 
 # --- wave 117: approx_top_k exactness at low cardinality --------------------
