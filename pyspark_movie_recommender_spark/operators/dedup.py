@@ -15,7 +15,8 @@ Six tiers, each with a different cost/recall point at 100 TB:
 5. MinHash + LSH banding — the sub-quadratic scale path: constant-size
    signature per doc, band-bucket equi-join, verify candidates only;
 6. SimHash — 64-bit fingerprint; near-dups differ in few bits, bucketed
-   by (max_hamming+1) bit chunks (pigeonhole-exact recall).
+   by (max_hamming+1) bit chunks (pigeonhole-exact recall) in
+   ``hamming_pairs``, which the image aHash signatures share.
 
 The exact forms (1-4) are DuckDB-oracle-checkable; the probabilistic
 forms (5-6) are deterministic given fixed hash seeds but engine-specific,
@@ -716,67 +717,55 @@ def simhash64_udf(seed: int = 42):
     return _sim
 
 
-def simhash_neardup_pairs(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    max_hamming: int = 3,
-    seed: int = 42,
-) -> DataFrame:
-    """SimHash near-dup pairs bucketed by ``max_hamming + 1`` bit chunks.
+def hamming_pairs(sigs: DataFrame, max_hamming: int) -> DataFrame:
+    """Pairs of 64-bit signatures ``(id, sig)`` within ``max_hamming``
+    bits — the one pigeonhole pair join, shared by SimHash (text) and
+    aHash (image) signatures.
 
     Pigeonhole guarantee: two signatures within Hamming distance h
-    differ in at most h chunks, so they agree exactly on at least one of
-    h+1 — recall is 100% for ANY ``max_hamming`` (the chunk count is
-    derived from it, not fixed). The cost side: larger h → narrower
-    chunks → smaller bucket key space → more candidate collisions, so
-    keep h modest (≤ ~8 for a 64-bit signature); beyond that, use
-    multi-chunk combination keys (Manku et al., WWW'07 §3) or the
-    MinHash path.
+    differ in at most h of ``h + 1`` near-equal chunks, so they agree
+    exactly on at least one — recall is 100% for ANY budget (the chunk
+    count is derived from it, not fixed). Larger h → narrower chunks →
+    more candidate collisions, so keep h modest (≤ ~8); beyond that,
+    use multi-chunk keys (Manku et al., WWW'07 §3) or the MinHash path.
+    Candidates come from (chunk, key) equi-join buckets, never
+    all-pairs; multi-chunk agreements collapse before the one
+    ``bit_count`` verify.
 
-    Returns (id_a, id_b, hamming) pairs with hamming <= max_hamming.
+    Returns (id_a, id_b, hamming) with id_a < id_b.
     """
-    n_chunks = max_hamming + 1
-    if n_chunks > 32:
+    if not 0 <= max_hamming <= 31:
         raise ValueError(
-            f"max_hamming={max_hamming} needs {n_chunks} chunks of a 64-bit "
-            "signature; chunks below 2 bits bucket everything together — "
-            "use minhash_lsh_pairs for that similarity regime"
+            f"max_hamming={max_hamming} must be in [0, 31]: chunks below "
+            "2 bits bucket everything together — use minhash_lsh_pairs"
         )
+    n_chunks = max_hamming + 1
     starts = [c * 64 // n_chunks for c in range(n_chunks)]
     widths = [(c + 1) * 64 // n_chunks - starts[c] for c in range(n_chunks)]
-    from pyspark_movie_recommender_spark.operators.lineage import ckpt
 
-    # materialize the (id, sim) signatures: both self-join sides consume
-    # them, and without the ckpt the Python SimHash stage (the expensive
-    # part — it reads the full text column) executes twice
-    sig = ckpt(
-        df.select(
-            F.col(id_col).alias("id"),
-            simhash64_udf(seed)(F.col(text_col)).alias("sim"),
+    def key(c: int) -> Column:
+        if widths[c] == 64:  # one chunk: the whole signature
+            return F.col("sig")
+        return F.shiftrightunsigned("sig", starts[c]).bitwiseAND(
+            F.lit((1 << widths[c]) - 1)
         )
-    )
-    chunks = sig.select(
+
+    chunks = sigs.select(
         "id",
-        "sim",
+        "sig",
         F.explode(
             F.array(
                 *[
-                    F.struct(
-                        F.lit(c).alias("chunk"),
-                        F.shiftrightunsigned("sim", starts[c])
-                        .bitwiseAND(F.lit((1 << widths[c]) - 1))
-                        .alias("key"),
-                    )
+                    F.struct(F.lit(c).alias("chunk"), key(c).alias("key"))
                     for c in range(n_chunks)
                 ]
             )
         ).alias("ck"),
-    ).select("id", "sim", F.col("ck.chunk").alias("chunk"), F.col("ck.key").alias("key"))
+    ).select("id", "sig", F.col("ck.chunk").alias("chunk"), F.col("ck.key").alias("key"))
 
-    a = chunks.select(F.col("id").alias("id_a"), F.col("sim").alias("sim_a"), "chunk", "key")
-    b = chunks.select(F.col("id").alias("id_b"), F.col("sim").alias("sim_b"), "chunk", "key")
-    ham = F.bit_count(F.col("sim_a").bitwiseXOR(F.col("sim_b")))
+    a = chunks.select(F.col("id").alias("id_a"), F.col("sig").alias("sig_a"), "chunk", "key")
+    b = chunks.select(F.col("id").alias("id_b"), F.col("sig").alias("sig_b"), "chunk", "key")
+    ham = F.bit_count(F.col("sig_a").bitwiseXOR(F.col("sig_b")))
     return (
         a.join(b, on=["chunk", "key"])
         .filter(F.col("id_a") < F.col("id_b"))
@@ -785,6 +774,29 @@ def simhash_neardup_pairs(
         .filter(F.col("hamming") <= max_hamming)
         .select("id_a", "id_b", "hamming")
     )
+
+
+def simhash_neardup_pairs(
+    df: DataFrame,
+    text_col: str,
+    id_col: str,
+    max_hamming: int = 3,
+    seed: int = 42,
+) -> DataFrame:
+    """SimHash near-dup pairs (id_a, id_b, hamming): :func:`simhash64_udf`
+    signatures through the pigeonhole :func:`hamming_pairs` join."""
+    from pyspark_movie_recommender_spark.operators.lineage import ckpt
+
+    # materialize the (id, sig) signatures: both self-join sides consume
+    # them, and without the ckpt the Python SimHash stage (the expensive
+    # part — it reads the full text column) executes twice
+    sig = ckpt(
+        df.select(
+            F.col(id_col).alias("id"),
+            simhash64_udf(seed)(F.col(text_col)).alias("sig"),
+        )
+    )
+    return hamming_pairs(sig, max_hamming)
 
 
 def prefix_filtered_jaccard_pairs(

@@ -19,10 +19,9 @@ min reachable vertex id):
   SoCC'14): converges in O(log² n) rounds regardless of diameter, so
   adversarial long chains can't blow the round budget.
 
-Both accept ``checkpoint_dir``: set it on a real cluster to truncate
-lineage with RELIABLE checkpoints (HDFS/object store — survives executor
-loss); unset, they fall back to ``localCheckpoint`` (executor-memory
-blocks: fine on local[N], not fault-tolerant on a cluster).
+Every loop here truncates lineage once per round through
+``operators.lineage.ckpt``: an eager ``localCheckpoint`` locally, a
+reliable checkpoint when ``SPARK_GRAFT_CHECKPOINT_DIR`` is set.
 """
 
 from __future__ import annotations
@@ -31,22 +30,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from pyspark_movie_recommender_spark.driver_scalar import scalar_row
-
-
-def _checkpointer(df_example: DataFrame, checkpoint_dir: str | None):
-    """Returns a fn that truncates a DataFrame's lineage each round."""
-    if checkpoint_dir is not None:
-        df_example.sparkSession.sparkContext.setCheckpointDir(checkpoint_dir)
-
-        def ckpt(df: DataFrame) -> DataFrame:
-            return df.checkpoint(eager=True)
-
-    else:
-
-        def ckpt(df: DataFrame) -> DataFrame:
-            return df.localCheckpoint()
-
-    return ckpt
+from pyspark_movie_recommender_spark.operators.lineage import ckpt
 
 
 def connected_components(
@@ -54,7 +38,6 @@ def connected_components(
     src: str = "id_a",
     dst: str = "id_b",
     max_rounds: int = 20,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Connected components by iterative min-label propagation.
 
@@ -65,7 +48,6 @@ def connected_components(
     labels are silently-wrong cluster assignments; long-diameter graphs
     should use :func:`connected_components_star` instead.
     """
-    ckpt = _checkpointer(edges, checkpoint_dir)
     bi = (
         edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
         .unionByName(edges.select(F.col(dst).alias("u"), F.col(src).alias("v")))
@@ -113,7 +95,6 @@ def connected_components_star(
     src: str = "id_a",
     dst: str = "id_b",
     max_rounds: int = 25,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Connected components by alternating large-star/small-star.
 
@@ -131,7 +112,6 @@ def connected_components_star(
     and exact on the distinct edge set up to a 2⁻⁶⁴-ish collision
     probability, negligible next to hardware fault rates.
     """
-    ckpt = _checkpointer(edges, checkpoint_dir)
 
     def star(e: DataFrame, large: bool) -> DataFrame:
         # neighborhood view: (u, v) in both directions
@@ -255,7 +235,6 @@ def kcore_nodes(
     src: str = "u",
     dst: str = "v",
     max_rounds: int = 30,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """k-core decomposition by iterative peeling: repeatedly delete
     every vertex whose degree (within the surviving subgraph) is < k
@@ -274,11 +253,9 @@ def kcore_nodes(
     (edges are never rewritten, only filtered through the live-node
     semi-joins); rounds are O(peeling depth), capped by ``max_rounds``
     with a loud failure rather than silently-wrong cores. Lineage is
-    truncated per round — reliable ``checkpoint_dir`` on clusters,
-    ``localCheckpoint`` locally.
+    truncated per round with ``ckpt``.
     """
     e = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-    ckpt = _checkpointer(e, checkpoint_dir)
     live = ckpt(
         e.select(F.col("u").alias("n"))
         .unionAll(e.select(F.col("v").alias("n")))
@@ -315,7 +292,6 @@ def bfs_hops(
     src: str = "u",
     dst: str = "v",
     max_hops: int = 4,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Breadth-first shortest hop counts from the minimum vertex id.
 
@@ -325,9 +301,8 @@ def bfs_hops(
     survivors with hop h — first visit IS the minimum hop count, so no
     per-node min needs recomputing. Driver-coordinated loop like the
     CC/PageRank operators: one join per round, O(max_hops) rounds,
-    lineage truncated per round (reliable ``checkpoint_dir`` on real
-    clusters, ``localCheckpoint`` locally), early exit when a frontier
-    empties.
+    lineage truncated per round with ``ckpt``, early exit when a
+    frontier empties.
 
     Scale shape: each round shuffles only frontier ∪ edges on the
     vertex key; ``visited`` grows monotonically but stays (node, hops)
@@ -337,7 +312,6 @@ def bfs_hops(
     und = edges.select(F.col(src).alias("u"), F.col(dst).alias("v")).union(
         edges.select(F.col(dst).alias("u"), F.col(src).alias("v"))
     )
-    ckpt = _checkpointer(und, checkpoint_dir)
 
     seed = und.agg(F.min("u")).first()[0]  # driver-side scalar, O(1)
     visited = und.sparkSession.createDataFrame(

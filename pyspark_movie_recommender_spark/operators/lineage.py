@@ -7,12 +7,15 @@ no filesystem round-trip. On a real cluster localCheckpoint is
 lost-executor-fatal — the blocks live only in executor storage — so
 production runs set ``SPARK_GRAFT_CHECKPOINT_DIR`` (HDFS/object-store
 path) and every truncation point becomes a RELIABLE ``checkpoint``
-that survives executor loss, matching the ``checkpoint_dir`` pattern
-``operators/graph.py`` already exposes for its BSP loops.
+that survives executor loss.
 
 Usage: ``df.transform(ckpt)`` anywhere a bare
-``df.localCheckpoint(eager=True)`` would appear — one flag flips the
-whole engine.
+``df.localCheckpoint(eager=True)`` would appear. This is the engine's
+only truncation path — the query registry, the operators and the
+graph loops' per-round truncation (``operators/graph.py``) all call
+it, and ``tests/test_driver_scalar_contract.py`` fails on a
+``localCheckpoint(``/``.checkpoint(`` anywhere else — so one flag
+flips the whole engine.
 
 Reliable-checkpoint hygiene: the checkpoint dir is set ONCE per
 SparkContext (memoized — not re-invoked at each of the ~290 call

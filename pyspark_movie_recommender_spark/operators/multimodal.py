@@ -475,7 +475,8 @@ def image_ahash(
     changes only the buffer construction, not the Arrow batch shape.
 
     Output: (id, sig BIGINT, n_set_bits INT) — one row per image, no
-    fan-out; payload bytes never leave the map side.
+    fan-out; payload bytes never leave the map side. Near-dup pairs
+    come from ``operators.dedup.hamming_pairs`` over ``(id, sig)``.
     """
     import numpy as np
     import pandas as pd
@@ -518,59 +519,3 @@ def image_ahash(
         F.col(f"{meta_col}.height").alias("h"),
     )
     return src.mapInPandas(batches, schema=schema)
-
-
-def ahash_neardup_pairs(
-    sigs: DataFrame,
-    max_hamming: int = 6,
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Image near-duplicate pairs: hamming(sig_a, sig_b) <= max_hamming
-    over 64-bit aHash signatures, found via PIGEONHOLE chunk bucketing —
-    the signature is split into ``max_hamming + 1`` chunks, so any pair
-    within the hamming budget shares at least one identical chunk
-    (guaranteed recall, the lesson the SimHash operator's contract
-    encodes: chunks must be derived FROM the budget, never fixed).
-
-    Scale shape: candidates come from equi-joining chunk buckets — never
-    all-pairs; the join carries (id, sig) where sig is 8 bytes, so
-    re-attachment joins are unnecessary; exact verification is one
-    ``bit_count(a ^ b)`` per candidate; duplicate candidates from
-    multi-chunk agreement collapse with a pair-level dedup BEFORE
-    verification. Raises if the budget can't be guaranteed with >=2-bit
-    chunks (max_hamming > 31).
-    """
-    if max_hamming < 0 or max_hamming > 31:
-        raise ValueError("max_hamming must be in [0, 31] for 64-bit chunking")
-    chunks = max_hamming + 1
-    width = 64 // chunks
-
-    def chunk_expr(i: int) -> str:
-        lo = i * width
-        nbits = width if i < chunks - 1 else 64 - lo
-        if nbits >= 64:  # single-chunk case: the whole signature
-            return f"struct({i} AS ci, sig AS cv)"
-        mask = (1 << nbits) - 1
-        return f"struct({i} AS ci, (shiftrightunsigned(sig, {lo}) & {mask}L) AS cv)"
-
-    arr = "array(" + ", ".join(chunk_expr(i) for i in range(chunks)) + ")"
-    banded = sigs.select(
-        F.col(id_col).alias("id"), "sig", F.explode(F.expr(arr)).alias("c")
-    ).select("id", "sig", "c.ci", "c.cv")
-    a = banded.select(
-        F.col("id").alias("id_a"), F.col("sig").alias("sig_a"), "ci", "cv"
-    )
-    b = banded.select(
-        F.col("id").alias("id_b"), F.col("sig").alias("sig_b"), "ci", "cv"
-    )
-    cand = (
-        a.join(b, ["ci", "cv"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b", "sig_a", "sig_b")
-        .distinct()
-    )
-    return cand.select(
-        "id_a",
-        "id_b",
-        F.expr("bit_count(sig_a ^ sig_b)").cast("int").alias("hamming"),
-    ).filter(F.col("hamming") <= max_hamming)

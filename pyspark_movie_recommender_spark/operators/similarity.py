@@ -67,7 +67,6 @@ def cosine_topk_bruteforce(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
     k: int = 5,
-    sim_decimals: int | None = 6,
 ) -> DataFrame:
     """Exact cosine top-k neighbours for each probe (excluding self-matches).
 
@@ -76,7 +75,7 @@ def cosine_topk_bruteforce(
     row_number window over (probe_id), which shuffles only
     |probes| * |corpus-partition top-k| rows.
 
-    ``sim_decimals`` rounds the similarity BEFORE ranking so that rank
+    The similarity is rounded to 6 decimals BEFORE ranking so that rank
     order is reproducible across engines/summation orders (ties break
     by neighbour id).
     """
@@ -86,9 +85,7 @@ def cosine_topk_bruteforce(
     c = corpus.select(
         F.col(id_col).alias("neighbor_id"), _as_double(vec_col).alias("__cv")
     )
-    sim = cosine_arrow()(F.col("__pv"), F.col("__cv"))
-    if sim_decimals is not None:
-        sim = F.round(sim, sim_decimals)
+    sim = F.round(cosine_arrow()(F.col("__pv"), F.col("__cv")), 6)
     scored = (
         c.crossJoin(F.broadcast(p))
         .filter(F.col("probe_id") != F.col("neighbor_id"))

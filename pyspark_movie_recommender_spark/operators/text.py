@@ -27,11 +27,6 @@ _STOPWORDS = {
 }
 
 
-def n_tokens(text: Column | str) -> Column:
-    """Whitespace token count (BIGINT)."""
-    return token_count(text)
-
-
 def avg_token_len(text: Column | str) -> Column:
     """Mean token length; NULL for empty documents."""
     toks = ws_tokens(text)
@@ -61,7 +56,7 @@ def quality_score(text: Column | str) -> Column:
     Deliberately simple and fully SQL-expressible: docs score higher for
     having 20-500 tokens, diverse vocabulary, and sane mean token length.
     """
-    nt = n_tokens(text)
+    nt = token_count(text)
     ttr = F.coalesce(type_token_ratio(text), F.lit(0.0))
     atl = F.coalesce(avg_token_len(text), F.lit(0.0))
     len_score = F.when((nt >= 20) & (nt <= 500), 1.0).when(nt > 0, 0.5).otherwise(0.0)
@@ -209,7 +204,7 @@ def doc_profile(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -
     return df.select(
         id_col,
         F.length(text_col).cast("long").alias("n_chars"),
-        n_tokens(text_col).alias("n_tokens"),
+        token_count(text_col).alias("n_tokens"),
         F.round(avg_token_len(text_col), 4).alias("avg_token_len"),
         F.round(type_token_ratio(text_col), 4).alias("ttr"),
         F.round(stopword_ratio(text_col, "en"), 4).alias("en_stopword_ratio"),

@@ -1133,11 +1133,10 @@ def doc_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     the whitespace token array, zero Python. At 100 TB this runs as a
     single scan stage with no shuffle at all.
     """
-    from pyspark_movie_recommender_spark.functions import ws_tokens
+    from pyspark_movie_recommender_spark.functions import token_count, ws_tokens
     from pyspark_movie_recommender_spark.operators.text import (
         avg_token_len,
         bpe_ish_token_count,
-        n_tokens,
         stopword_ratio,
         type_token_ratio,
     )
@@ -1146,7 +1145,7 @@ def doc_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     return docs.select(
         "doc_id",
         F.length("text").cast("long").alias("n_chars_calc"),
-        n_tokens("text").alias("n_tokens"),
+        token_count("text").alias("n_tokens"),
         F.round(avg_token_len("text"), 4).alias("avg_token_len"),
         F.round(type_token_ratio("text"), 4).alias("ttr"),
         F.round(stopword_ratio("text", "en"), 4).alias("en_stopword_ratio"),

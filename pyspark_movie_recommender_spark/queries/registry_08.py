@@ -7470,7 +7470,7 @@ def p_median_nations(spark: SparkSession, sf_dir: str) -> DataFrame:
     , thr AS (
         SELECT PERCENTILE_DISC(0.5) WITHIN GROUP (ORDER BY w) AS r
         FROM und
-    ), covm AS (
+    ), covm AS MATERIALIZED (
         SELECT dmat.j AS h, dmat.i AS nk
         FROM dmat, thr WHERE dmat.w <= thr.r
     ), hubs AS (SELECT DISTINCT i AS h FROM dmat

@@ -25,23 +25,21 @@ _CPUS = os.environ.get("SPARK_GRAFT_CPUS", "*")
 
 def get_spark(
     app_name: str = "pyspark_movie_recommender_spark",
-    shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or reuse) the engine's SparkSession.
 
-    ``shuffle_partitions`` defaults to the local parallelism — on a real
-    cluster, pass ~2-3x the total executor cores; AQE coalesces small
+    Shuffle partitions default to the local parallelism (at least 8) —
+    on a real cluster, set ``spark.sql.shuffle.partitions`` to ~2-3x the
+    total executor cores through ``extra_conf``; AQE coalesces small
     post-shuffle partitions automatically either way.
     """
-    if shuffle_partitions is None:
-        cpus = (os.cpu_count() or 8) if _CPUS == "*" else int(_CPUS)
-        shuffle_partitions = max(int(cpus), 8)
+    cpus = (os.cpu_count() or 8) if _CPUS == "*" else int(_CPUS)
 
     builder = (
         SparkSession.builder.master(f"local[{_CPUS}]")
         .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        .config("spark.sql.shuffle.partitions", str(max(cpus, 8)))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")

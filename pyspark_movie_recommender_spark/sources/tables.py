@@ -14,6 +14,7 @@ those map to :mod:`..sources.movielens` and
 
 from __future__ import annotations
 
+import glob
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -37,6 +38,22 @@ TABLES: tuple[str, ...] = (
 BROADCAST_DIMS: frozenset[str] = frozenset({"region", "nation"})
 
 
+def _table_path(sf_dir: str, name: str) -> str:
+    """Parquet path of one driver table; ``KeyError`` for an unknown name."""
+    if name not in TABLES:
+        raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
+    return os.path.join(sf_dir, f"{name}.parquet")
+
+
+def _parquet_files(sf_dir: str, name: str) -> list[str]:
+    """The parquet files of one table: the part files of a dataset
+    directory, sorted, or the single file."""
+    path = _table_path(sf_dir, name)
+    if os.path.isdir(path):
+        return sorted(glob.glob(os.path.join(path, "*.parquet")))
+    return [path]
+
+
 def table_row_hint(sf_dir: str, name: str) -> int:
     """Row count of one table from parquet FOOTER metadata — an O(file
     footers) driver-side read, NOT a Spark action, so queries that size
@@ -44,19 +61,9 @@ def table_row_hint(sf_dir: str, name: str) -> int:
     time (round-4 advice: ``emb.count()`` at construction made every
     plan dump trigger a full scan). At cluster scale the same number
     comes from table statistics / catalog metadata."""
-    if name not in TABLES:
-        raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
-    import glob
-
     import pyarrow.parquet as pq
 
-    path = os.path.join(sf_dir, f"{name}.parquet")
-    files = (
-        sorted(glob.glob(os.path.join(path, "*.parquet")))
-        if os.path.isdir(path)
-        else [path]
-    )
-    return sum(pq.ParquetFile(f).metadata.num_rows for f in files)
+    return sum(pq.ParquetFile(f).metadata.num_rows for f in _parquet_files(sf_dir, name))
 
 
 def column_minmax_hint(sf_dir: str, name: str, column: str):
@@ -79,20 +86,10 @@ def column_minmax_hint(sf_dir: str, name: str, column: str):
     truncated, so None+numeric is accepted, but None on a BYTE_ARRAY
     column falls back too.)
     """
-    if name not in TABLES:
-        raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
-    import glob
-
     import pyarrow.parquet as pq
 
-    path = os.path.join(sf_dir, f"{name}.parquet")
-    files = (
-        sorted(glob.glob(os.path.join(path, "*.parquet")))
-        if os.path.isdir(path)
-        else [path]
-    )
     lo = hi = None
-    for f in files:
+    for f in _parquet_files(sf_dir, name):
         md = pq.ParquetFile(f).metadata
         try:
             ci = next(
@@ -134,9 +131,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     divide would lose precision at 1.7e18 nanos, ulp ≈ 256 ns), which
     matches DuckDB's truncate-to-micros behaviour bit-for-bit.
     """
-    if name not in TABLES:
-        raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
-    path = os.path.join(sf_dir, f"{name}.parquet")
+    path = _table_path(sf_dir, name)
     if name == "events":
         from pyspark.sql import functions as F
 

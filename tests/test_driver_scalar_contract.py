@@ -6,6 +6,12 @@ which assert the site's declared k-bound at runtime. This test greps
 the package so a refactor cannot silently reintroduce an unbounded
 (corpus-sized) driver collect — the one pattern that cannot survive a
 1000-executor / 100 TB deployment.
+
+The same grep keeps lineage truncation on one path: a
+``localCheckpoint(`` or ``.checkpoint(`` outside ``operators/lineage.py``
+would bypass ``lineage.ckpt`` — it would ignore
+``SPARK_GRAFT_CHECKPOINT_DIR`` (executor-local blocks on a cluster)
+and never record in ``ckpt_registry()``.
 """
 
 from __future__ import annotations
@@ -20,34 +26,41 @@ PKG = os.path.join(
     "pyspark_movie_recommender_spark",
 )
 
-# the only file allowed to collect a DataFrame to the driver directly
-_ALLOWED = {os.path.join(PKG, "driver_scalar.py")}
-
 _COLLECT = re.compile(r"\.(collect|toArrow|toPandas)\(\)")
+_TRUNCATE = re.compile(r"localCheckpoint\(|\.checkpoint\(")
 
 
-def _source_files():
+def _offenders(pattern: re.Pattern, allowed: str) -> list[str]:
+    """``path:line: code`` of every package line outside the one
+    ``allowed`` file whose code (comments stripped) matches ``pattern``."""
+    out = []
     for root, _dirs, files in os.walk(PKG):
         for f in files:
-            if f.endswith(".py"):
-                yield os.path.join(root, f)
+            path = os.path.join(root, f)
+            if not f.endswith(".py") or path == os.path.join(PKG, allowed):
+                continue
+            with open(path, encoding="utf-8") as fh:
+                for lineno, line in enumerate(fh, 1):
+                    if pattern.search(line.split("#", 1)[0]):
+                        out.append(f"{path}:{lineno}: {line.strip()}")
+    return out
 
 
 def test_no_raw_collect_outside_driver_scalar():
-    offenders = []
-    for path in _source_files():
-        if path in _ALLOWED:
-            continue
-        with open(path, encoding="utf-8") as fh:
-            for lineno, line in enumerate(fh, 1):
-                code = line.split("#", 1)[0]
-                if _COLLECT.search(code):
-                    offenders.append(f"{path}:{lineno}: {line.strip()}")
+    offenders = _offenders(_COLLECT, "driver_scalar.py")
     assert not offenders, (
         "raw .collect()/.toArrow()/.toPandas() outside driver_scalar.py — "
         "route through bounded_collect/bounded_arrow/scalar_row with a "
         "declared k-bound:\n"
         + "\n".join(offenders)
+    )
+
+
+def test_no_lineage_truncation_outside_lineage_ckpt():
+    offenders = _offenders(_TRUNCATE, os.path.join("operators", "lineage.py"))
+    assert not offenders, (
+        "localCheckpoint(/.checkpoint( outside operators/lineage.py — "
+        "truncate lineage with operators.lineage.ckpt:\n" + "\n".join(offenders)
     )
 
 

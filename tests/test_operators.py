@@ -372,19 +372,35 @@ def test_star_cc_handles_long_chain_within_log_rounds(spark):
     assert star == lp
 
 
-def test_star_cc_reliable_checkpoint_dir(spark, tmp_path):
+def _checkpoint_dir(spark) -> str:
+    """Local path of the context's reliable-checkpoint dir. ``ckpt`` sets
+    it once per application, so it may be an earlier test's tmp_path."""
+    d = spark.sparkContext.getCheckpointDir()
+    assert d, "no reliable checkpoint dir was set"
+    return d.removeprefix("file:")
+
+
+def test_star_cc_reliable_checkpoint_when_env_set(spark, tmp_path, monkeypatch):
+    # the graph loops truncate every round through lineage.ckpt: with
+    # SPARK_GRAFT_CHECKPOINT_DIR set the rounds are reliable checkpoints
+    # on disk, each recorded for the plan auditor
+    import os
+
     from pyspark_movie_recommender_spark.operators.graph import (
         connected_components_star,
     )
+    from pyspark_movie_recommender_spark.operators.lineage import ckpt_registry
 
+    monkeypatch.setenv("SPARK_GRAFT_CHECKPOINT_DIR", str(tmp_path / "ckpt"))
+    before = set(ckpt_registry())
     edges = spark.createDataFrame([(5, 1), (5, 9), (2, 9)], "id_a int, id_b int")
-    comp = {
-        r.id: r.component
-        for r in connected_components_star(
-            edges, checkpoint_dir=str(tmp_path / "ckpt")
-        ).collect()
-    }
-    assert comp == {1: 1, 2: 1, 5: 1, 9: 1}
+    out = connected_components_star(edges)
+    assert {r.id: r.component for r in out.collect()} == {1: 1, 2: 1, 5: 1, 9: 1}
+    rounds = set(ckpt_registry()) - before
+    assert len(rounds) >= 2  # the input edges plus at least one star round
+    # the last round backs ``out``, so its files cannot have been cleaned
+    on_disk = set(os.listdir(_checkpoint_dir(spark)))
+    assert {f"rdd-{i}" for i in rounds} & on_disk
 
 
 def test_hll_sketch_rollup_accuracy_and_mergeability(spark, sf_dir):
@@ -862,16 +878,19 @@ def test_bfs_hops_on_known_graph(spark):
 
 def test_ckpt_reliable_checkpoint_when_env_set(spark, tmp_path, monkeypatch):
     # SPARK_GRAFT_CHECKPOINT_DIR flips every lineage truncation in the
-    # engine from executor-local to reliable (survives executor loss)
-    from pyspark_movie_recommender_spark.operators.lineage import ckpt
-
-    target = str(tmp_path / "ckpt")
-    monkeypatch.setenv("SPARK_GRAFT_CHECKPOINT_DIR", target)
-    df = ckpt(spark.range(100).withColumn("x", F.col("id") * 2))
-    assert df.count() == 100
+    # engine — ckpt is its only path, graph loops included — from
+    # executor-local to reliable (survives executor loss). The dir is set
+    # once per application, so check the context's dir, not tmp_path.
     import os
 
-    assert os.path.isdir(target) and os.listdir(target)
+    from pyspark_movie_recommender_spark.operators.lineage import ckpt
+
+    monkeypatch.setenv("SPARK_GRAFT_CHECKPOINT_DIR", str(tmp_path / "ckpt"))
+    df = ckpt(spark.range(100).withColumn("x", F.col("id") * 2))
+    assert df.count() == 100
+    assert f"rdd-{df._jdf.queryExecution().analyzed().rdd().id()}" in os.listdir(
+        _checkpoint_dir(spark)
+    )
     monkeypatch.delenv("SPARK_GRAFT_CHECKPOINT_DIR")
     df2 = ckpt(spark.range(10))
     assert df2.count() == 10

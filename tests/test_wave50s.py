@@ -215,9 +215,7 @@ def test_ahash_neardup_pairs_equal_bruteforce(spark):
     the chunked join equal brute-force all-pairs on planted variants."""
     import itertools
 
-    from pyspark_movie_recommender_spark.operators.multimodal import (
-        ahash_neardup_pairs,
-    )
+    from pyspark_movie_recommender_spark.operators.dedup import hamming_pairs
 
     base = 0x0123456789ABCDEF
     variants = [base]
@@ -228,11 +226,11 @@ def test_ahash_neardup_pairs_equal_bruteforce(spark):
     rows = [
         (i, v - (1 << 64) if v >= 1 << 63 else v) for i, v in enumerate(variants)
     ]
-    sigs = spark.createDataFrame(rows, "doc_id long, sig long")
+    sigs = spark.createDataFrame(rows, "id long, sig long")
     for budget in (0, 3, 6):
         got = {
             (r.id_a, r.id_b, r.hamming)
-            for r in ahash_neardup_pairs(sigs, max_hamming=budget).collect()
+            for r in hamming_pairs(sigs, max_hamming=budget).collect()
         }
         want = set()
         for (ia, va), (ib, vb) in itertools.combinations(enumerate(variants), 2):
@@ -245,13 +243,12 @@ def test_ahash_neardup_pairs_equal_bruteforce(spark):
 def test_ahash_rejects_unguaranteeable_budget(spark):
     import pytest as _pytest
 
-    from pyspark_movie_recommender_spark.operators.multimodal import (
-        ahash_neardup_pairs,
-    )
+    from pyspark_movie_recommender_spark.operators.dedup import hamming_pairs
 
-    sigs = spark.createDataFrame([(1, 0)], "doc_id long, sig long")
-    with _pytest.raises(ValueError):
-        ahash_neardup_pairs(sigs, max_hamming=32)
+    sigs = spark.createDataFrame([(1, 0)], "id long, sig long")
+    for budget in (-1, 32):
+        with _pytest.raises(ValueError):
+            hamming_pairs(sigs, max_hamming=budget)
 
 
 # --- wave 59-65 invariants and pins ----------------------------------------
