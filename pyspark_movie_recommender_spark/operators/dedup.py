@@ -16,7 +16,8 @@ Six tiers, each with a different cost/recall point at 100 TB:
    signature per doc, band-bucket equi-join, verify candidates only;
 6. SimHash — 64-bit fingerprint; near-dups differ in few bits, bucketed
    by (max_hamming+1) bit chunks (pigeonhole-exact recall) in
-   ``hamming_pairs``, which the image aHash signatures share.
+   ``hamming_chunks``/``hamming_pairs``, which the image aHash
+   signatures share.
 
 The exact forms (1-4) are DuckDB-oracle-checkable; the probabilistic
 forms (5-6) are deterministic given fixed hash seeds but engine-specific,
@@ -717,22 +718,18 @@ def simhash64_udf(seed: int = 42):
     return _sim
 
 
-def hamming_pairs(sigs: DataFrame, max_hamming: int) -> DataFrame:
-    """Pairs of 64-bit signatures ``(id, sig)`` within ``max_hamming``
-    bits — the one pigeonhole pair join, shared by SimHash (text) and
-    aHash (image) signatures.
+def hamming_chunks(sigs: DataFrame, max_hamming: int) -> DataFrame:
+    """The pigeonhole buckets of 64-bit signatures ``(id, sig)``: one
+    ``(id, sig, chunk, key)`` row per chunk of ``max_hamming + 1``
+    near-equal chunks (``key`` is the chunk's bits).
 
     Pigeonhole guarantee: two signatures within Hamming distance h
-    differ in at most h of ``h + 1`` near-equal chunks, so they agree
-    exactly on at least one — recall is 100% for ANY budget (the chunk
-    count is derived from it, not fixed). Larger h → narrower chunks →
-    more candidate collisions, so keep h modest (≤ ~8); beyond that,
-    use multi-chunk keys (Manku et al., WWW'07 §3) or the MinHash path.
-    Candidates come from (chunk, key) equi-join buckets, never
-    all-pairs; multi-chunk agreements collapse before the one
-    ``bit_count`` verify.
-
-    Returns (id_a, id_b, hamming) with id_a < id_b.
+    differ in at most h of ``h + 1`` chunks, so they agree exactly on
+    at least one — a ``(chunk, key)`` equi-join finds every such pair
+    for ANY budget (the chunk count is derived from it, not fixed).
+    Larger h → narrower chunks → more candidate collisions, so keep h
+    modest (≤ ~8); beyond that, use multi-chunk keys (Manku et al.,
+    WWW'07 §3) or the MinHash path.
     """
     if not 0 <= max_hamming <= 31:
         raise ValueError(
@@ -750,7 +747,7 @@ def hamming_pairs(sigs: DataFrame, max_hamming: int) -> DataFrame:
             F.lit((1 << widths[c]) - 1)
         )
 
-    chunks = sigs.select(
+    return sigs.select(
         "id",
         "sig",
         F.explode(
@@ -763,6 +760,18 @@ def hamming_pairs(sigs: DataFrame, max_hamming: int) -> DataFrame:
         ).alias("ck"),
     ).select("id", "sig", F.col("ck.chunk").alias("chunk"), F.col("ck.key").alias("key"))
 
+
+def hamming_pairs(sigs: DataFrame, max_hamming: int) -> DataFrame:
+    """Pairs of 64-bit signatures ``(id, sig)`` within ``max_hamming``
+    bits — the one pigeonhole pair join, shared by SimHash (text) and
+    aHash (image) signatures. Candidates come from the
+    :func:`hamming_chunks` equi-join buckets (recall is exact), never
+    all-pairs; multi-chunk agreements collapse before the one
+    ``bit_count`` verify.
+
+    Returns (id_a, id_b, hamming) with id_a < id_b.
+    """
+    chunks = hamming_chunks(sigs, max_hamming)
     a = chunks.select(F.col("id").alias("id_a"), F.col("sig").alias("sig_a"), "chunk", "key")
     b = chunks.select(F.col("id").alias("id_b"), F.col("sig").alias("sig_b"), "chunk", "key")
     ham = F.bit_count(F.col("sig_a").bitwiseXOR(F.col("sig_b")))

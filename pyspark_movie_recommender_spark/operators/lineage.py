@@ -100,7 +100,10 @@ def ckpt(df: DataFrame) -> DataFrame:
     seam: eager materialization truncates the visible plan at every
     fan-out point, so plan-shape pins (dim broadcasts, window counts)
     set the env var to inspect the full untruncated plan. Production,
-    perfbench and the registry-wide plan census never set it.
+    perfbench and the registry-wide plan census never set it. It also
+    removes the per-round truncation of the iterative loops in
+    ``operators.graph``, whose plans then grow every round, so it must
+    not be set around anything that runs a graph loop.
     """
     if os.environ.get("SPARK_GRAFT_CKPT_DISABLE"):
         return df

@@ -4909,6 +4909,7 @@ def multimodal_ahash_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffles); the peer census equi-joins 8-byte chunk buckets — the
     sub-quadratic LSH shape, never all-pairs.
     """
+    from pyspark_movie_recommender_spark.operators.dedup import hamming_chunks
     from pyspark_movie_recommender_spark.operators.multimodal import (
         attach_fake_payload,
         image_ahash,
@@ -4919,29 +4920,18 @@ def multimodal_ahash_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the final signature join — ckpt the narrow signature relation so
     # the payload decode runs once, not 3x
     sigs = _ckpt(image_ahash(attach_fake_payload(docs)))
-    chunks = 7  # max_hamming 6 budget → 7 chunks
-    width = 64 // chunks
-
-    def chunk_expr(i: int) -> str:
-        lo = i * width
-        nbits = width if i < chunks - 1 else 64 - lo
-        mask = (1 << nbits) - 1
-        return f"struct({i} AS ci, (shiftrightunsigned(sig, {lo}) & {mask}) AS cv)"
-
-    arr = "array(" + ", ".join(chunk_expr(i) for i in range(chunks)) + ")"
-    banded = sigs.select("doc_id", F.explode(F.expr(arr)).alias("c")).select(
-        "doc_id", "c.ci", "c.cv"
-    )
+    # the near-dup join's buckets at a max_hamming 6 budget (7 chunks)
+    banded = hamming_chunks(sigs.select(F.col("doc_id").alias("id"), "sig"), 6)
     peers = (
         banded.alias("a")
         .join(
             banded.alias("b"),
-            (F.col("a.ci") == F.col("b.ci"))
-            & (F.col("a.cv") == F.col("b.cv"))
-            & (F.col("a.doc_id") != F.col("b.doc_id")),
+            (F.col("a.chunk") == F.col("b.chunk"))
+            & (F.col("a.key") == F.col("b.key"))
+            & (F.col("a.id") != F.col("b.id")),
         )
-        .groupBy(F.col("a.doc_id").alias("doc_id"))
-        .agg(F.countDistinct("b.doc_id").cast("long").alias("n_bucket_peers"))
+        .groupBy(F.col("a.id").alias("doc_id"))
+        .agg(F.countDistinct("b.id").cast("long").alias("n_bucket_peers"))
     )
     return sigs.join(peers, "doc_id", "left").select(
         "doc_id",

@@ -38,17 +38,23 @@ def _commit_week() -> int:
         return datetime.now().isocalendar()[1]
 
 
+# Run by default next to the commit-week slice, so part of every default
+# run (its queries and test ids) is the same from commit to commit.
+FIXED_SLICE = 2
+
+
 def registry_slice(names) -> list[str]:
-    """The rotating 1/8 of the registry a suite run covers: the names
-    with ``crc32(name) % 8 == k``, sorted. ``SPARK_GRAFT_ORACLE_SLICE``
-    pins ``k`` (``0``-``7``) or selects every name (``all``); unset, ``k``
-    is the commit week mod 8. The oracle, plan-census and determinism
-    tests all walk this same slice."""
+    """The part of the registry a suite run covers: the names with
+    ``crc32(name) % 8`` in a set of slices, sorted. ``SPARK_GRAFT_ORACLE_SLICE``
+    pins one slice ``k`` (``0``-``7``) or selects every name (``all``);
+    unset, the run covers the commit-week slice (week mod 8, so all eight
+    cycle through CI week by week) plus ``FIXED_SLICE``. The oracle,
+    plan-census and determinism tests all walk this same selection."""
     env = os.environ.get("SPARK_GRAFT_ORACLE_SLICE")
     if env == "all":
         return sorted(names)
-    k = (int(env) if env is not None else _commit_week()) % 8
-    return sorted(n for n in names if zlib.crc32(n.encode()) % 8 == k)
+    ks = {int(env) % 8} if env is not None else {_commit_week() % 8, FIXED_SLICE}
+    return sorted(n for n in names if zlib.crc32(n.encode()) % 8 in ks)
 
 
 def duck_connection(sf_dir: str) -> duckdb.DuckDBPyConnection:

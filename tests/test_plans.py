@@ -845,7 +845,7 @@ def test_no_fact_sized_unpartitioned_windows(spark, sf_dir):
 
 
 def test_registry_slice_no_fact_sized_windows(spark, sf_dir):
-    """Registry-WIDE plan census over the oracle suite's rotating slice
+    """Registry-WIDE plan census over the oracle suite's slices
     (``tests.oracle.registry_slice``; ``SPARK_GRAFT_ORACLE_SLICE=all``
     walks the FULL registry, the census to run before a change to query
     plans). Per query:

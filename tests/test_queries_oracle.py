@@ -5,10 +5,10 @@ caught locally first. Queries without oracle SQL get a rows-materialize
 smoke check here; their accuracy laws live in ``tests/test_laws.py``.
 
 With ~1000 registered queries a full dual-engine pass takes ~20 min,
-so one run checks the rotating ~1/8 slice of ``tests.oracle.registry_slice``
-(``crc32(name) % 8``, rotating with the ISO week of the HEAD commit, so
-all eight slices cycle through CI and a historical commit re-runs the
-same slice). Pin a slice with ``SPARK_GRAFT_ORACLE_SLICE=k`` or run the
+so one run checks ~2/8 of ``tests.oracle.registry_slice``
+(``crc32(name) % 8``): the slice rotating with the ISO week of the HEAD
+commit, so all eight slices cycle through CI and a historical commit
+re-runs the same slice, plus the fixed slice ``FIXED_SLICE``. Pin a slice with ``SPARK_GRAFT_ORACLE_SLICE=k`` or run the
 full sweep with ``SPARK_GRAFT_ORACLE_SLICE=all``. The per-wave test files
 are rows-only property checks, NOT oracle compares; this module and
 ``tests/test_determinism.py`` are the suite's Spark-vs-DuckDB
