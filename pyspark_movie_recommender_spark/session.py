@@ -6,9 +6,15 @@ session and pin the configs that matter for both local correctness runs
 and a 1000-executor / 100 TB deployment:
 
 - AQE on (runtime re-planning, skew-join splitting, partition coalescing);
-- shuffle partitions sized to the local core count (not the 200 default) —
-  on a real cluster this would be ~2-3x total executor cores, and AQE
-  coalesces down from there;
+- one shuffle partition per local core (not the 200 default): more
+  only queue on this host, and a stateful stream pays for each state
+  partition on every micro-batch (a task, a state ``.delta`` and
+  checksum file, a sink part), with no AQE coalescing and a count its
+  checkpoint fixes at the first batch. On a real cluster this would be
+  ~2-3x total executor cores, and AQE coalesces batch shuffles down
+  from there;
+- parquet nanosecond timestamps read as INT64 (``nanosAsLong``), which
+  ``sources.load_table`` converts for the events table;
 - UTC session timezone so timestamp semantics match the DuckDB oracle;
 - Arrow enabled for every pandas-UDF boundary.
 """
@@ -29,21 +35,25 @@ def get_spark(
 ) -> SparkSession:
     """Build (or reuse) the engine's SparkSession.
 
-    Shuffle partitions default to the local parallelism (at least 8) —
-    on a real cluster, set ``spark.sql.shuffle.partitions`` to ~2-3x the
-    total executor cores through ``extra_conf``; AQE coalesces small
-    post-shuffle partitions automatically either way.
+    Shuffle partitions default to one per local core. More partitions
+    than cores only queue tasks on this host, and a stateful stream's
+    checkpoint keeps the count it starts with, so each extra partition
+    is one more task, state file and sink part on every later
+    micro-batch. On a real cluster, set ``spark.sql.shuffle.partitions``
+    to ~2-3x the total executor cores through ``extra_conf``; AQE
+    coalesces small post-shuffle partitions automatically either way.
     """
     cpus = (os.cpu_count() or 8) if _CPUS == "*" else int(_CPUS)
 
     builder = (
         SparkSession.builder.master(f"local[{_CPUS}]")
         .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(max(cpus, 8)))
+        .config("spark.sql.shuffle.partitions", str(cpus))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
+        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "false")

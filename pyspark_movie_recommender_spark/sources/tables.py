@@ -18,6 +18,7 @@ import glob
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 # The driver-generated tables (TESTDATA.md). Order: dims first.
 TABLES: tuple[str, ...] = (
@@ -121,26 +122,57 @@ def column_minmax_hint(sf_dir: str, name: str, column: str):
     return None if lo is None else (lo, hi)
 
 
+# path -> (stamp, inferred schema); one entry per table path, replaced
+# when its stamp changes (see ``table_schema``)
+_SCHEMAS: dict[str, tuple[tuple, StructType]] = {}
+
+
+def table_schema(spark: SparkSession, sf_dir: str, name: str) -> StructType:
+    """The schema Spark infers for one parquet table, inferred once per
+    file set. Inference runs a footer-reading Spark job; a memo keyed
+    by the table's path answers again for as long as its stamp holds:
+    ``(st_ino, st_size, st_mtime_ns)`` of each of its parquet files,
+    plus the session's ``spark.sql.legacy.parquet.nanosAsLong``, which
+    decides whether a nanosecond timestamp infers as ``bigint``. A
+    rewritten table (new files, a new column) has a new stamp and is
+    inferred again."""
+    path = _table_path(sf_dir, name)
+    stamp = (
+        tuple(
+            (st.st_ino, st.st_size, st.st_mtime_ns)
+            for st in map(os.stat, _parquet_files(sf_dir, name))
+        ),
+        spark.conf.get("spark.sql.legacy.parquet.nanosAsLong"),
+    )
+    hit = _SCHEMAS.get(path)
+    if hit is None or hit[0] != stamp:
+        hit = _SCHEMAS[path] = (stamp, spark.read.parquet(path).schema)
+    return hit[1]
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one parquet table from a scale-factor directory.
 
-    The events table is written with nanosecond parquet timestamps,
-    which Spark's vectorized reader rejects ([PARQUET_TYPE_ILLEGAL]).
-    We read nanos as INT64 (legacy conf) and convert to a proper
+    The read carries the schema :func:`table_schema` memoizes, so only
+    the first read of a file set runs Spark's schema inference; later
+    reads of the unchanged files submit no Spark job.
+
+    An events table written with nanosecond parquet timestamps, which
+    Spark's reader rejects ([PARQUET_TYPE_ILLEGAL]), reads as INT64 in a
+    session from ``get_spark`` (it sets ``nanosAsLong``; another session
+    must set it to read such a table), and we convert it to a proper
     TIMESTAMP with exact integer division (``div 1000`` — a double
     divide would lose precision at 1.7e18 nanos, ulp ≈ 256 ns), which
     matches DuckDB's truncate-to-micros behaviour bit-for-bit.
     """
-    path = _table_path(sf_dir, name)
-    if name == "events":
+    df = spark.read.schema(table_schema(spark, sf_dir, name)).parquet(
+        _table_path(sf_dir, name)
+    )
+    if name == "events" and dict(df.dtypes).get("ts") == "bigint":
         from pyspark.sql import functions as F
 
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(path)
-        if dict(df.dtypes).get("ts") == "bigint":
-            df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-        return df
-    return spark.read.parquet(path)
+        df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+    return df
 
 
 def load_tables(spark: SparkSession, sf_dir: str, *names: str) -> dict[str, DataFrame]:

@@ -23,11 +23,12 @@ from pyspark.sql.types import LongType, StructField, StructType
 
 
 def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming source over the events parquet (nanos ts handled as in
-    the batch loader — see sources/tables.py)."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    path = os.path.join(sf_dir, "events.parquet")
-    schema = spark.read.parquet(path).schema
+    """Streaming source over the events parquet, with the schema the
+    batch loader memoizes (nanos ts handled as in the batch loader — see
+    sources/tables.py)."""
+    from pyspark_movie_recommender_spark.sources.tables import table_schema
+
+    schema = table_schema(spark, sf_dir, "events")
     # file stream sources want a directory; glob-filter to the one table
     src = (
         spark.readStream.schema(schema)
@@ -218,9 +219,8 @@ def _run_updates_to_parquet(
     state per key after any number of resumes."""
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.withColumn("batch_id", F.lit(batch_id)).write.mode(
-            "append"
-        ).parquet(sink_dir)
+        stamped = batch_df.withColumn("batch_id", F.lit(batch_id).cast("long"))
+        stamped.write.mode("append").parquet(sink_dir)
 
     q = (
         out.writeStream.foreachBatch(sink)
@@ -240,13 +240,17 @@ def _read_update_log(
     zero micro-batches, foreachBatch never fires, and the path does not
     exist — that is an empty log of ``schema``, not an error. A sink dir
     that EXISTS but holds no parquet parts (a crashed run that died
-    before its first batch committed) is equally an empty log: reading
-    it would raise a schema-inference error, so glob first."""
+    before its first batch committed) is equally an empty log, so glob
+    first. The log is read with ``schema``, not an inferred one: inference
+    is a Spark job over every part file, and the log grows by a part per
+    state partition on each micro-batch. Logs written before ``batch_id``
+    was stamped as ``bigint`` hold it as int32, which the parquet reader
+    widens."""
     if not os.path.isdir(sink_dir) or not glob.glob(
         os.path.join(sink_dir, "**", "*.parquet"), recursive=True
     ):
         return spark.createDataFrame([], schema)
-    return spark.read.parquet(sink_dir)
+    return spark.read.schema(schema).parquet(sink_dir)
 
 
 def _resumable_user_aggregate(
@@ -295,6 +299,12 @@ def running_user_totals_resumable(
     which is the checkpoint-recovery contract a long-lived 100 TB
     stream restarts on (executor loss, code deploys). Returns the
     latest update per user across all runs so far.
+
+    State partitions: the checkpoint records the session's
+    ``spark.sql.shuffle.partitions`` when it is created, at the first
+    batch, and every resume keeps that count whatever the session's
+    setting is then; each state partition costs a task, a state file
+    and a sink part per micro-batch.
 
     Checkpoint compatibility: the state is the built-in aggregation's
     partial (count, sum) buffer. A checkpoint written by the earlier

@@ -12,6 +12,11 @@ The same grep keeps lineage truncation on one path: a
 would bypass ``lineage.ckpt`` — it would ignore
 ``SPARK_GRAFT_CHECKPOINT_DIR`` (executor-local blocks on a cluster)
 and never record in ``ckpt_registry()``.
+
+It also keeps parquet schema inference in one place: a
+``.read.parquet(`` outside ``sources/tables.py`` infers the schema with
+a Spark job on every call, where ``sources.tables.table_schema``
+infers it once per file set.
 """
 
 from __future__ import annotations
@@ -28,6 +33,7 @@ PKG = os.path.join(
 
 _COLLECT = re.compile(r"\.(collect|toArrow|toPandas)\(\)")
 _TRUNCATE = re.compile(r"localCheckpoint\(|\.checkpoint\(")
+_INFER = re.compile(r"\.read\.parquet\(")
 
 
 def _offenders(pattern: re.Pattern, allowed: str) -> list[str]:
@@ -61,6 +67,16 @@ def test_no_lineage_truncation_outside_lineage_ckpt():
     assert not offenders, (
         "localCheckpoint(/.checkpoint( outside operators/lineage.py — "
         "truncate lineage with operators.lineage.ckpt:\n" + "\n".join(offenders)
+    )
+
+
+def test_no_parquet_schema_inference_outside_sources_tables():
+    offenders = _offenders(_INFER, os.path.join("sources", "tables.py"))
+    assert not offenders, (
+        ".read.parquet( outside sources/tables.py infers the schema on every "
+        "call — read with a known schema (.read.schema(s).parquet) or "
+        "through sources.tables.load_table / table_schema:\n"
+        + "\n".join(offenders)
     )
 
 

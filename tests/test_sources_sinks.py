@@ -163,6 +163,39 @@ def test_schema_evolution_merge_read(spark, tmp_path):
     assert got[1] is None and got[7] == 70
 
 
+def test_load_table_infers_schema_once_per_file_set(spark, tmp_path):
+    """``load_table`` infers a table's schema once per file set: a
+    second read of the unchanged files submits no Spark job, and a
+    table rewritten with an added column is inferred again and returns
+    the new column."""
+    from pyspark.sql import functions as F
+
+    from pyspark_movie_recommender_spark.sources import load_table
+
+    sc = spark.sparkContext
+
+    def jobs():
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return set(sc.statusTracker().getJobIdsForGroup())
+
+    path = str(tmp_path / "region.parquet")
+    spark.range(3).select(F.col("id").alias("r_regionkey")).write.parquet(path)
+    before = jobs()
+    load_table(spark, str(tmp_path), "region")
+    assert jobs() - before  # the first read inferred the schema
+    before = jobs()
+    df = load_table(spark, str(tmp_path), "region")
+    assert jobs() == before
+    assert df.columns == ["r_regionkey"]
+
+    spark.range(3).select(
+        F.col("id").alias("r_regionkey"), F.lit("x").alias("r_name")
+    ).write.mode("overwrite").parquet(path)
+    df = load_table(spark, str(tmp_path), "region")
+    assert df.columns == ["r_regionkey", "r_name"]
+    assert {r.r_name for r in df.collect()} == {"x"}
+
+
 def test_compact_parquet_reduces_file_count(spark, sf_dir, tmp_path):
     from pyspark_movie_recommender_spark.sources import load_table
     from pyspark_movie_recommender_spark.sources.tables import compact_parquet

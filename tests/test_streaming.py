@@ -127,6 +127,66 @@ def test_stateful_resume_from_checkpoint(spark, sf_dir, tmp_path):
     assert batch_ids() == ids2
 
 
+def test_resume_keeps_the_checkpoints_state_partitions(spark, sf_dir, tmp_path):
+    """A stateful stream's state-partition count is fixed in its
+    checkpoint at the first batch: a checkpoint begun under 8 shuffle
+    partitions resumes under a session set to 4 on its own 8 state
+    partitions, each of which commits the resumed batch, and the totals
+    still equal the batch aggregate."""
+    import os
+
+    from pyspark.sql import functions as F
+
+    from pyspark_movie_recommender_spark.streaming.jobs import (
+        running_user_totals_resumable,
+    )
+
+    src_dir, schema, half2, all_ev = _arrival_dirs(spark, sf_dir, tmp_path)
+    ckpt = str(tmp_path / "ckpt")
+    sink = str(tmp_path / "sink")
+    key = "spark.sql.shuffle.partitions"
+    setting = spark.conf.get(key)
+    try:
+        spark.conf.set(key, "8")
+        running_user_totals_resumable(spark, str(src_dir), schema, sink, ckpt)
+        half2.coalesce(1).write.parquet(str(src_dir / "batch2"))
+        spark.conf.set(key, "4")
+        out = running_user_totals_resumable(spark, str(src_dir), schema, sink, ckpt)
+        got = {r.user_id: (r.n_events, r.total_value) for r in out.collect()}
+    finally:
+        spark.conf.set(key, setting)
+
+    batch = all_ev.groupBy("user_id").agg(
+        F.count(F.lit(1)).alias("n_events"),
+        F.round(F.sum("value"), 2).alias("total_value"),
+    )
+    assert got == {r.user_id: (r.n_events, r.total_value) for r in batch.collect()}
+    state = os.path.join(ckpt, "state", "0")
+    parts = sorted(int(d) for d in os.listdir(state) if d.isdigit())
+    assert parts == list(range(8))
+    for p in parts:  # version 2 is the resumed batch's commit
+        assert os.path.exists(os.path.join(state, str(p), "2.delta"))
+
+
+def test_update_log_reads_int32_batch_ids_as_bigint(spark, tmp_path):
+    """Update logs written before ``batch_id`` was stamped as bigint
+    hold it as int32; the log reader widens it to its bigint schema."""
+    from pyspark.sql.types import LongType, StructField, StructType
+
+    from pyspark_movie_recommender_spark.streaming.jobs import _read_update_log
+
+    sink = str(tmp_path / "sink")
+    spark.createDataFrame([(1, 0), (2, 1)], "user_id long, batch_id int").write.parquet(
+        sink
+    )
+    schema = StructType(
+        [StructField("user_id", LongType()), StructField("batch_id", LongType())]
+    )
+    log = _read_update_log(spark, sink, schema)
+    assert dict(log.dtypes)["batch_id"] == "bigint"
+    assert sorted(tuple(r) for r in log.collect()) == [(1, 0), (2, 1)]
+
+
 @pytest.mark.parametrize(
     "job", ["running_user_totals_resumable", "user_peaks_resumable"]
 )
