@@ -56,12 +56,13 @@ def token_count(text: Column | str) -> Column:
     return F.size(ws_tokens(text)).cast("long")
 
 
-def char_ngrams(text: Column | str, n: int = 3) -> Column:
-    """Distinct character n-gram shingles of a string → ARRAY<STRING>.
+def char_ngrams(text: Column | str) -> Column:
+    """Distinct character 3-gram shingles of a string → ARRAY<STRING>.
 
     Built from sequence+transform+substring (pure SQL, codegen'd);
     the shingle set feeds MinHash / Jaccard dedup.
     """
+    n = 3
     c = F.col(text) if isinstance(text, str) else text
     starts = F.sequence(F.lit(1), F.greatest(F.length(c) - (n - 1), F.lit(1)))
     grams = F.transform(starts, lambda i: c.substr(i, F.lit(n)))

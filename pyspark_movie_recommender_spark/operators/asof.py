@@ -82,10 +82,9 @@ def merge_asof_pandas(
     right: DataFrame,
     on: str,
     key: str,
-    direction: str = "backward",
-    tolerance=None,
 ) -> DataFrame:
-    """``pd.merge_asof`` per key group via applyInPandas (Arrow-batched).
+    """Backward ``pd.merge_asof`` per key group via applyInPandas
+    (Arrow-batched), with no tolerance.
 
     Fallback for as-of variants the window form can't express. Requires
     both sides to fit per-group in executor memory — acceptable because
@@ -118,8 +117,7 @@ def merge_asof_pandas(
             lp,
             rp.drop(columns=[key]),
             on=on,
-            direction=direction,
-            tolerance=tolerance,
+            direction="backward",
         )
         return merged[[f.name for f in schema.fields]]
 

@@ -60,13 +60,13 @@ def shingle_candidates(
     df: DataFrame,
     text_col: str,
     id_col: str,
-    n: int = 3,
     max_shingle_df: int | None = None,
 ):
     """Shared candidate machinery for the exact-Jaccard family: returns
     (shared, sizes) where ``shared`` is (id_a, id_b, n_shared) from the
-    shingle self-equi-join (df-capped when ``max_shingle_df`` is set)
-    and ``sizes`` is (id, n_shingles) over the SAME filtered sets.
+    character 3-gram shingle self-equi-join (df-capped when
+    ``max_shingle_df`` is set) and ``sizes`` is (id, n_shingles) over
+    the SAME filtered sets.
     Used by ngram_jaccard_pairs and the threshold-sweep report so both
     run the identical candidate pass.
 
@@ -79,7 +79,7 @@ def shingle_candidates(
     from pyspark_movie_recommender_spark.operators.lineage import ckpt
 
     base = df.select(
-        F.col(id_col).alias("id"), char_ngrams(text_col, n).alias("shingles")
+        F.col(id_col).alias("id"), char_ngrams(text_col).alias("shingles")
     ).filter(F.size("shingles") > 0)
     exploded = base.select("id", F.explode("shingles").alias("shingle"))
     if max_shingle_df is not None:
@@ -110,11 +110,10 @@ def ngram_jaccard_pairs(
     df: DataFrame,
     text_col: str,
     id_col: str,
-    n: int = 3,
     threshold: float = 0.8,
     max_shingle_df: int | None = None,
 ) -> DataFrame:
-    """Exact Jaccard-similar pairs over character n-gram shingle sets.
+    """Exact Jaccard-similar pairs over character 3-gram shingle sets.
 
     Distributed shape: explode distinct shingles → self-equi-join on
     shingle → count shared shingles per pair → Jaccard from
@@ -136,7 +135,7 @@ def ngram_jaccard_pairs(
     (``minhash_lsh_pairs``) is the candidate generator.
     """
     shared, sizes = shingle_candidates(
-        df, text_col, id_col, n=n, max_shingle_df=max_shingle_df
+        df, text_col, id_col, max_shingle_df=max_shingle_df
     )
     out = (
         shared.join(sizes.select(F.col("id").alias("id_a"), F.col("n_shingles").alias("size_a")), "id_a")
@@ -151,22 +150,23 @@ def ngram_jaccard_pairs(
     return out
 
 
-def _lev_base(
-    docs: DataFrame,
-    text_col: str,
-    id_col: str,
-    lang_col: str,
-    len_col: str,
-    bucket_size: int,
-    prefix_len: int,
-) -> DataFrame:
-    """The narrow (doc_id, lang, bucket, prefix) projection that every
+# Edit-distance blocking and verify: documents block on (lang,
+# n_chars DIV BUCKET_SIZE) and pair when their first PREFIX_LEN chars
+# are within MAX_DIST edits.
+BUCKET_SIZE = 50
+PREFIX_LEN = 40
+MAX_DIST = 8
+
+
+def _lev_base(docs: DataFrame) -> DataFrame:
+    """The narrow (doc_id, lang, bucket, prefix) projection of
+    ``(doc_id, lang, n_chars, text)`` documents that every
     edit-distance route blocks on and verifies."""
     return docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.col(lang_col).alias("lang"),
-        F.floor(F.col(len_col) / bucket_size).alias("bucket"),
-        F.substring(text_col, 1, prefix_len).alias("prefix"),
+        "doc_id",
+        "lang",
+        F.floor(F.col("n_chars") / BUCKET_SIZE).alias("bucket"),
+        F.substring("text", 1, PREFIX_LEN).alias("prefix"),
     )
 
 
@@ -205,23 +205,21 @@ def _block_join(a: DataFrame, b: DataFrame) -> DataFrame:
     return a.join(b, ["lang", "jbucket"]).filter(F.col("left_id") < F.col("right_id"))
 
 
-def _verify(pairs: DataFrame, max_dist: int) -> DataFrame:
+def _verify(pairs: DataFrame) -> DataFrame:
     """Exact verify of candidate pairs: the 3-arg
     ``levenshtein(l, r, threshold)`` (SPARK-44510) runs the banded
-    early-abandon DP — O(len·max_dist) per pair instead of O(len²) —
+    early-abandon DP — O(len·MAX_DIST) per pair instead of O(len²) —
     and returns -1 when the distance exceeds the bound."""
     return pairs.select(
         "left_id",
         "right_id",
-        F.levenshtein("prefix_a", "prefix_b", max_dist)
+        F.levenshtein("prefix_a", "prefix_b", MAX_DIST)
         .cast("long")
         .alias("edit_distance"),
     ).filter(F.col("edit_distance") >= 0)
 
 
-def _blocked_pairs(
-    base: DataFrame, max_dist: int, probe_repartition: int | None = None
-) -> DataFrame:
+def _blocked_pairs(base: DataFrame, probe_repartition: int | None = None) -> DataFrame:
     """Block join + verify over a :func:`_lev_base` projection.
 
     ``probe_repartition``: the pair-enumeration + banded-DP stage is
@@ -237,31 +235,29 @@ def _blocked_pairs(
     a, b = _block_sides(base)
     if probe_repartition:
         a = a.repartition(probe_repartition)
-    return _verify(_block_join(a, b), max_dist)
+    return _verify(_block_join(a, b))
 
 
-def _passjoin_candidates(
-    full: DataFrame, keys: DataFrame, prefix_len: int, max_dist: int
-) -> DataFrame:
+def _passjoin_candidates(full: DataFrame, keys: DataFrame) -> DataFrame:
     """PassJoin candidate pairs (Li, Deng, Feng, PVLDB 2011) among the
     full-length prefixes of ``full`` whose (lang, jbucket) block is in
     ``keys``; returns distinct (left_id, right_id) with left_id < right_id.
 
-    The pigeonhole: split one side's prefix into ``max_dist + 1``
-    segments; ≤ max_dist edits can destroy at most max_dist of them, so
+    The pigeonhole: split one side's prefix into ``MAX_DIST + 1``
+    segments; ≤ MAX_DIST edits can destroy at most MAX_DIST of them, so
     at least one segment survives EXACTLY in any partner within
-    distance, at a position shifted by at most max_dist. Candidates
+    distance, at a position shifted by at most MAX_DIST. Candidates
     therefore come from an equi-join on (lang, bucket, segment index,
     segment content) between one side's exact segments (exploded to
-    bucket±1) and the other side's substrings at the ±max_dist position
+    bucket±1) and the other side's substrings at the ±MAX_DIST position
     window — never from enumerating whole blocks. Both explodes are
-    constant fan-out per doc (27 segment keys, ~135 windowed substrings
-    at the defaults), so candidate volume is driven by shared aligned
+    constant fan-out per doc (27 segment keys, ~135 windowed
+    substrings), so candidate volume is driven by shared aligned
     segments, not by block population. Lossless: every pair within
     distance is a candidate, and :func:`_verify` then drops the rest.
     """
-    nseg = max_dist + 1
-    seg_len, rem = divmod(prefix_len, nseg)
+    nseg = MAX_DIST + 1
+    seg_len, rem = divmod(PREFIX_LEN, nseg)
     lens = [seg_len + 1 if i < rem else seg_len for i in range(nseg)]
     starts = [1 + sum(lens[:i]) for i in range(nseg)]
 
@@ -271,14 +267,14 @@ def _passjoin_candidates(
         )
 
     segs = [seg(i, starts[i]) for i in range(nseg)]
-    # every position a surviving segment can land on after ≤ max_dist
+    # every position a surviving segment can land on after ≤ MAX_DIST
     # insertions/deletions before it
     subs = [
         seg(i, p)
         for i in range(nseg)
         for p in range(
-            max(1, starts[i] - max_dist),
-            min(prefix_len - lens[i] + 1, starts[i] + max_dist) + 1,
+            max(1, starts[i] - MAX_DIST),
+            min(PREFIX_LEN - lens[i] + 1, starts[i] + MAX_DIST) + 1,
         )
     ]
 
@@ -308,20 +304,12 @@ def _passjoin_candidates(
     )
 
 
-def blocked_levenshtein_pairs(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    lang_col: str = "lang",
-    len_col: str = "n_chars",
-    bucket_size: int = 50,
-    prefix_len: int = 40,
-    max_dist: int = 8,
-) -> DataFrame:
-    """Edit-distance near-dup pairs with (lang, length-bucket) blocking:
-    (left_id, right_id, edit_distance) for every same-lang pair in
-    adjacent length buckets whose ``prefix_len``-char prefixes are
-    within ``max_dist`` edits, left_id < right_id.
+def blocked_levenshtein_pairs(docs: DataFrame) -> DataFrame:
+    """Edit-distance near-dup pairs of ``(doc_id, lang, n_chars, text)``
+    documents with (lang, length-bucket) blocking: (left_id, right_id,
+    edit_distance) for every same-lang pair in adjacent
+    ``BUCKET_SIZE``-char length buckets whose ``PREFIX_LEN``-char
+    prefixes are within ``MAX_DIST`` edits, left_id < right_id.
 
     The probe side explodes each doc to blocks {bucket-1, bucket,
     bucket+1} so pairs straddling a bucket boundary still meet — plain
@@ -336,33 +324,23 @@ def blocked_levenshtein_pairs(
     per-key routing; this plain form is its small-key route and the
     reference the router is tested against.
     """
-    base = _lev_base(docs, text_col, id_col, lang_col, len_col, bucket_size, prefix_len)
-    return _blocked_pairs(base, max_dist)
+    return _blocked_pairs(_lev_base(docs))
 
 
 def adaptive_levenshtein_pairs(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    lang_col: str = "lang",
-    len_col: str = "n_chars",
-    bucket_size: int = 50,
-    prefix_len: int = 40,
-    max_dist: int = 8,
-    block_cap: int = 40_000,
-    row_hint: int | None = None,
+    docs: DataFrame, block_cap: int = 40_000, row_hint: int | None = None
 ) -> DataFrame:
     """Edit-distance near-dups with PER-KEY routing between the block
     join and the PassJoin segment join — BOUNDS the block join's
     within-block quadratic term instead of hoping blocks stay small.
 
     Same result set as :func:`blocked_levenshtein_pairs` (same lang /
-    bucket±1 / prefix-levenshtein ≤ max_dist semantics, oracle
+    bucket±1 / prefix-levenshtein ≤ MAX_DIST semantics, oracle
     hash-equal). The block join surfaces each unordered pair exactly
     once, at the join key (lang, bucket-of-the-GREATER-id doc) — so
     that key is the exact routing unit. A tiny (lang, bucket) census
     (one hash-agg over the corpus, rows bounded by |langs| ×
-    length-range/bucket_size) classifies each key by its a-side
+    length-range/BUCKET_SIZE) classifies each key by its a-side
     population (the bucket±1 sum): keys at or under ``block_cap`` run
     the enumeration-cheap block join — per-key pair count ≤
     block_cap² — and oversized keys run :func:`_passjoin_candidates`,
@@ -389,7 +367,7 @@ def adaptive_levenshtein_pairs(
     what keeps the operator alive on corpora whose
     (lang, length-bucket) profile concentrates.
 
-    Short-prefix docs (< prefix_len, where the fixed segment layout
+    Short-prefix docs (< PREFIX_LEN, where the fixed segment layout
     doesn't apply) pair via a short×block join on both routes; the
     short side is a corpus-dependent minority, so that term stays
     linear in |short| × block population.
@@ -413,7 +391,7 @@ def adaptive_levenshtein_pairs(
     from pyspark_movie_recommender_spark.operators.cache import track
     from pyspark_movie_recommender_spark.operators.lineage import ckpt
 
-    base = _lev_base(docs, text_col, id_col, lang_col, len_col, bucket_size, prefix_len)
+    base = _lev_base(docs)
     # ~1M rows of 40-char prefixes stays well under the broadcast
     # threshold, so a hint-proven corpus that small gets the probe
     # repartition (2x the cores; see _blocked_pairs)
@@ -421,7 +399,7 @@ def adaptive_levenshtein_pairs(
     if row_hint is not None and row_hint <= 1_000_000:
         probe_par = docs.sparkSession.sparkContext.defaultParallelism * 2
     if row_hint is not None and row_hint <= block_cap:
-        return _blocked_pairs(base, max_dist, probe_par)
+        return _blocked_pairs(base, probe_par)
 
     def a_pop(census: DataFrame) -> DataFrame:
         return (
@@ -432,7 +410,7 @@ def adaptive_levenshtein_pairs(
 
     # --- routing census: a-side population per join key -------------
     # one construction-time aggregate over the corpus, bounded output
-    # (|langs| x length-range/bucket_size) — the same priced cold-path
+    # (|langs| x length-range/BUCKET_SIZE) — the same priced cold-path
     # pattern as rank.py's range-bucket boundaries. When NO key is
     # oversized (every profile seen at bench scales) the plan is
     # byte-identical to blocked_levenshtein_pairs: no persist, no
@@ -441,9 +419,9 @@ def adaptive_levenshtein_pairs(
     # a bounded quadratic.
     census0 = base.groupBy("lang", "bucket").agg(F.count(F.lit(1)).alias("n"))
     if a_pop(census0).filter(F.col("a_pop") > block_cap).limit(1).count() == 0:
-        return _blocked_pairs(base, max_dist, probe_par)
+        return _blocked_pairs(base, probe_par)
 
-    base = track(base.withColumn("short", F.length("prefix") < prefix_len))
+    base = track(base.withColumn("short", F.length("prefix") < PREFIX_LEN))
     # tiny relation; ckpt materializes it once so small_keys/big_keys
     # and their broadcast semi-join consumers don't each rescan
     census = ckpt(census0)
@@ -475,9 +453,7 @@ def adaptive_levenshtein_pairs(
     # GREATER id's (lang, bucket) — is big (a pair discovered via the
     # lesser doc's big bucket belongs to branch 1 when the greater
     # doc's bucket is small, and to branch 2 when a side is short)
-    cand = _passjoin_candidates(
-        base.filter(~F.col("short")), big_keys, prefix_len, max_dist
-    )
+    cand = _passjoin_candidates(base.filter(~F.col("short")), big_keys)
     prefix_a = base.select(
         F.col("doc_id").alias("left_id"), F.col("prefix").alias("prefix_a")
     )
@@ -486,15 +462,16 @@ def adaptive_levenshtein_pairs(
     )
 
     return (
-        _verify(small_pairs, max_dist)
-        .unionByName(_verify(big_short_pairs, max_dist))
-        .unionByName(_verify(big_full_pairs, max_dist))
+        _verify(small_pairs)
+        .unionByName(_verify(big_short_pairs))
+        .unionByName(_verify(big_full_pairs))
     )
 
 
-def minhash_signature_udf(n: int = 3, num_hashes: int = 64, seed: int = 42):
-    """Arrow-batched MinHash: text → distinct char n-gram hashes →
-    ``num_hashes`` universal rehashes → positionwise min, all NumPy.
+def minhash_signature_udf(num_hashes: int):
+    """Arrow-batched MinHash: text → distinct char 3-gram hashes →
+    ``num_hashes`` universal rehashes (seed 42) → positionwise min, all
+    NumPy.
 
     Base n-gram hash is an FNV-style wrapping polynomial over
     codepoints; the hash family is multiply-add in uint64 (wrapping
@@ -504,14 +481,15 @@ def minhash_signature_udf(n: int = 3, num_hashes: int = 64, seed: int = 42):
     burning cores in interpreted lambda evaluation.
 
     Returns a pandas UDF: (text: Series[str]) -> Series[list[int64]].
-    Deterministic for a given (n, num_hashes, seed).
+    Deterministic for a given ``num_hashes``.
     """
     import random
 
     import numpy as np
     from pyspark.sql.functions import pandas_udf
 
-    rng = random.Random(seed)
+    n = 3
+    rng = random.Random(42)
     A = np.array(
         [rng.randrange(1, 2**64, 2) for _ in range(num_hashes)], dtype=np.uint64
     )  # odd multipliers
@@ -575,13 +553,12 @@ def minhash_lsh_pairs(
     df: DataFrame,
     text_col: str,
     id_col: str,
-    n: int = 3,
     num_hashes: int = 64,
     bands: int = 16,
-    seed: int = 42,
     verify_threshold: float | None = 0.5,
 ) -> DataFrame:
-    """Sub-quadratic near-dup candidate pairs: shingle → MinHash → band →
+    """Sub-quadratic near-dup candidate pairs: 3-gram shingles → MinHash
+    (:func:`minhash_signature_udf`) → band →
     bucket-join → (optionally) verify with the estimated Jaccard.
 
     Scale shape: each doc contributes ``bands`` (band_id, band_hash) keys;
@@ -596,14 +573,14 @@ def minhash_lsh_pairs(
     from pyspark_movie_recommender_spark.operators.cache import track
 
     rows_per_band = num_hashes // bands
-    sig_udf = minhash_signature_udf(n, num_hashes, seed)
+    sig_udf = minhash_signature_udf(num_hashes)
     base = track(
         # the signature table feeds three plan branches (band keys + two
         # re-attach joins); tracked persist = the single-query stand-in
         # for the checkpointed signature table a 100 TB pipeline would
         # write (cache.release_all() frees the blocks once consumed)
         df.select(F.col(id_col).alias("id"), F.col(text_col).alias("__t"))
-        .filter(F.length("__t") >= n)
+        .filter(F.length("__t") >= 3)
         .select("id", sig_udf(F.col("__t")).alias("sig"))
     )
     # Band join + pair-dedup shuffle ONLY (id, band, bucket): 24 bytes
@@ -655,10 +632,10 @@ def minhash_lsh_pairs(
     return est
 
 
-def simhash64_udf(seed: int = 42):
+def simhash64_udf():
     """Arrow-batched 64-bit SimHash over whitespace tokens.
 
-    Whitespace tokens → FNV-style wrapping token hash → for each bit
+    Whitespace tokens → FNV-style wrapping token hash (seed 42) → for each bit
     position b, the sum over tokens of ±1 according to bit b of the
     token hash; bit b is set iff that sum is positive, and the sign-bits
     are packed to int64. Near-duplicate documents land within small
@@ -668,7 +645,7 @@ def simhash64_udf(seed: int = 42):
     from pyspark.sql.functions import pandas_udf
 
     FNV = np.uint64(1099511628211)
-    SEED = np.uint64(seed * 2 + 1)
+    SEED = np.uint64(42 * 2 + 1)
 
     @pandas_udf("long")
     def _sim(texts: pd.Series) -> pd.Series:
@@ -790,7 +767,6 @@ def simhash_neardup_pairs(
     text_col: str,
     id_col: str,
     max_hamming: int = 3,
-    seed: int = 42,
 ) -> DataFrame:
     """SimHash near-dup pairs (id_a, id_b, hamming): :func:`simhash64_udf`
     signatures through the pigeonhole :func:`hamming_pairs` join."""
@@ -802,20 +778,16 @@ def simhash_neardup_pairs(
     sig = ckpt(
         df.select(
             F.col(id_col).alias("id"),
-            simhash64_udf(seed)(F.col(text_col)).alias("sig"),
+            simhash64_udf()(F.col(text_col)).alias("sig"),
         )
     )
     return hamming_pairs(sig, max_hamming)
 
 
-def prefix_filtered_jaccard_pairs(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    threshold_pct: int = 70,
-) -> DataFrame:
+def prefix_filtered_jaccard_pairs(df: DataFrame) -> DataFrame:
     """Set-similarity join with PREFIX FILTERING (Chaudhuri/Bayardo
-    ppjoin family): exact word-set Jaccard ≥ threshold, generating
+    ppjoin family) over ``(doc_id, text)``: exact word-set Jaccard ≥
+    0.70, generating
     candidates only from each document's RAREST tokens instead of all
     of them.
 
@@ -835,11 +807,12 @@ def prefix_filtered_jaccard_pairs(
 
     Returns (id_a, id_b, inter, n_a, n_b, jaccard_ppm), id_a < id_b.
     """
+    threshold_pct = 70
     tok = (
         df.select(
-            F.col(id_col).alias("id"),
+            F.col("doc_id").alias("id"),
             F.explode(
-                F.array_distinct(F.split(F.trim(F.col(text_col)), "\\s+"))
+                F.array_distinct(F.split(F.trim(F.col("text")), "\\s+"))
             ).alias("w"),
         )
         .filter(F.col("w") != "")

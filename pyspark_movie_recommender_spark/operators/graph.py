@@ -90,13 +90,9 @@ def connected_components(
     return labels.select("id", F.col("label").alias("component"))
 
 
-def connected_components_star(
-    edges: DataFrame,
-    src: str = "id_a",
-    dst: str = "id_b",
-    max_rounds: int = 25,
-) -> DataFrame:
-    """Connected components by alternating large-star/small-star.
+def connected_components_star(edges: DataFrame, max_rounds: int = 25) -> DataFrame:
+    """Connected components of an ``(id_a, id_b)`` edge list by
+    alternating large-star/small-star.
 
     Each round rewires edges toward the per-neighborhood minimum:
     large-star hangs every larger neighbor of u under min(Γ(u) ∪ {u});
@@ -140,8 +136,8 @@ def connected_components_star(
 
     e = ckpt(
         edges.select(
-            F.greatest(F.col(src), F.col(dst)).alias("child"),
-            F.least(F.col(src), F.col(dst)).alias("parent"),
+            F.greatest(F.col("id_a"), F.col("id_b")).alias("child"),
+            F.least(F.col("id_a"), F.col("id_b")).alias("parent"),
         )
         .filter(F.col("child") != F.col("parent"))
         .distinct()
@@ -181,12 +177,11 @@ def connected_components_star(
     )
 
 
-def dedup_keepers(
-    df: DataFrame, pairs: DataFrame, id_col: str, src: str = "id_a", dst: str = "id_b"
-) -> DataFrame:
-    """Rows of ``df`` that survive near-dup clustering: the min-id member
-    of each component plus every row not in any pair."""
-    comp = connected_components(pairs, src, dst)
+def dedup_keepers(df: DataFrame, pairs: DataFrame, id_col: str) -> DataFrame:
+    """Rows of ``df`` that survive near-dup clustering of the
+    ``(id_a, id_b)`` pairs: the min-id member of each component plus
+    every row not in any pair."""
+    comp = connected_components(pairs)
     losers = comp.filter(F.col("id") != F.col("component")).select(
         F.col("id").alias(id_col)
     )
@@ -287,20 +282,17 @@ def kcore_nodes(
     )
 
 
-def bfs_hops(
-    edges: DataFrame,
-    src: str = "u",
-    dst: str = "v",
-    max_hops: int = 4,
-) -> DataFrame:
-    """Breadth-first shortest hop counts from the minimum vertex id.
+def bfs_hops(edges: DataFrame) -> DataFrame:
+    """Breadth-first shortest hop counts, up to 4 hops, from the minimum
+    vertex id of a ``(u, v)`` edge list; an empty edge list gives an
+    empty ``(node, hops)`` frame.
 
     Frontier-expansion BFS over an undirected edge list (stored one
     direction, expanded to both): round h joins the hop-(h-1) frontier
     to the edges, anti-joins out already-visited nodes, and tags
     survivors with hop h — first visit IS the minimum hop count, so no
     per-node min needs recomputing. Driver-coordinated loop like the
-    CC/PageRank operators: one join per round, O(max_hops) rounds,
+    CC/PageRank operators: one join per round, at most 4 rounds,
     lineage truncated per round with ``ckpt``, early exit when a
     frontier empties.
 
@@ -309,16 +301,18 @@ def bfs_hops(
     narrow. The oracle twin is DuckDB's recursive CTE with UNION-dedup
     termination.
     """
-    und = edges.select(F.col(src).alias("u"), F.col(dst).alias("v")).union(
-        edges.select(F.col(dst).alias("u"), F.col(src).alias("v"))
+    und = edges.select("u", "v").union(
+        edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
     )
 
-    seed = und.agg(F.min("u")).first()[0]  # driver-side scalar, O(1)
+    seed = scalar_row(und.agg(F.min("u").alias("seed")), "graph.bfs_seed")["seed"]
+    if seed is None:  # no edges, no vertices
+        return und.sparkSession.createDataFrame([], "node long, hops long")
     visited = und.sparkSession.createDataFrame(
         [(int(seed), 0)], "node long, hops long"
     )
     frontier = visited
-    for h in range(1, max_hops + 1):
+    for h in range(1, 5):
         nxt = (
             frontier.join(und, frontier["node"] == und["u"])
             .select(und["v"].alias("node"))

@@ -28,16 +28,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-MEDIA_META = T.StructType(
-    [
-        T.StructField("modality", T.StringType(), False),  # image|audio|video
-        T.StructField("mime", T.StringType(), True),
-        T.StructField("width", T.IntegerType(), True),
-        T.StructField("height", T.IntegerType(), True),
-        T.StructField("duration_ms", T.LongType(), True),
-    ]
-)
-
 FEATURE_SCHEMA = T.StructType(
     [
         T.StructField("doc_id", T.LongType(), False),
@@ -48,30 +38,32 @@ FEATURE_SCHEMA = T.StructType(
 )
 
 
-def attach_fake_payload(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """Manufacture a deterministic binary payload + metadata from text.
+def attach_fake_payload(df: DataFrame) -> DataFrame:
+    """Manufacture a deterministic binary payload + metadata from each
+    ``(doc_id, text)`` row.
 
     Stands in for 'read image bytes from object storage': payload =
-    UTF-8 bytes, metadata derived deterministically. Gives every
-    downstream operator a real BinaryType column to chew on.
+    UTF-8 bytes of ``text``, metadata derived deterministically. Gives
+    every downstream operator a real BinaryType column to chew on.
     """
     return df.select(
-        id_col,
-        F.encode(F.col(text_col), "UTF-8").alias("payload"),
+        "doc_id",
+        F.encode(F.col("text"), "UTF-8").alias("payload"),
         F.struct(
             F.lit("image").alias("modality"),
             F.lit("application/octet-stream").alias("mime"),
-            (F.length(text_col) % 1024 + 16).cast("int").alias("width"),
-            (F.length(text_col) % 768 + 16).cast("int").alias("height"),
+            (F.length("text") % 1024 + 16).cast("int").alias("width"),
+            (F.length("text") % 768 + 16).cast("int").alias("height"),
             F.lit(None).cast("long").alias("duration_ms"),
         ).alias("media_meta"),
     )
 
 
-def payload_stats(df: DataFrame, payload_col: str = "payload") -> DataFrame:
-    """Payload-level stats without leaving the JVM: byte length + hashes."""
-    return df.withColumn("n_bytes", F.length(payload_col).cast("long")).withColumn(
-        "payload_sha256", F.sha2(F.col(payload_col), 256)
+def payload_stats(df: DataFrame) -> DataFrame:
+    """Stats of the ``payload`` column without leaving the JVM: byte
+    length + hashes."""
+    return df.withColumn("n_bytes", F.length("payload").cast("long")).withColumn(
+        "payload_sha256", F.sha2(F.col("payload"), 256)
     )
 
 
@@ -156,10 +148,9 @@ def decode_wav_pcm16(payload: bytes):
     return rate, arr
 
 
-def decode_and_featurize(
-    df: DataFrame, id_col: str = "doc_id", decoder: str = "fake"
-) -> DataFrame:
-    """Decode each payload and emit a fixed-width feature vector.
+def decode_and_featurize(df: DataFrame, decoder: str = "fake") -> DataFrame:
+    """Decode each ``(doc_id, payload)`` row and emit a fixed-width
+    feature vector.
 
     Real pipeline: decode image → resize → CNN/CLIP features. The
     featurizer here is an 8-bin histogram, L1-normalized; ``decoder``
@@ -202,7 +193,7 @@ def decode_and_featurize(
             feats = [decode(p) for p in pdf["payload"]]
             yield pd.DataFrame(
                 {
-                    "doc_id": pdf[id_col].astype("int64"),
+                    "doc_id": pdf["doc_id"].astype("int64"),
                     "n_bytes": pdf["payload"].map(lambda p: 0 if p is None else len(p)).astype("int64"),
                     "content_hash": pdf["payload"].map(
                         lambda p: hashlib.sha256(p or b"").hexdigest()
@@ -211,38 +202,32 @@ def decode_and_featurize(
                 }
             )
 
-    return df.select(id_col, "payload").mapInPandas(batches, schema=FEATURE_SCHEMA)
+    return df.select("doc_id", "payload").mapInPandas(batches, schema=FEATURE_SCHEMA)
 
 
-def attach_fake_video_payload(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id", ms_per_char: int = 40
-) -> DataFrame:
+def attach_fake_video_payload(df: DataFrame) -> DataFrame:
     """Deterministic fake VIDEO payloads: like ``attach_fake_payload``
-    but modality='video' with a duration derived from text length, so
-    the frame-sampling plumbing has real metadata to chew on."""
+    but modality='video' with a duration of 40 ms per text character,
+    so the frame-sampling plumbing has real metadata to chew on."""
     return df.select(
-        id_col,
-        F.encode(F.col(text_col), "UTF-8").alias("payload"),
+        "doc_id",
+        F.encode(F.col("text"), "UTF-8").alias("payload"),
         F.struct(
             F.lit("video").alias("modality"),
             F.lit("video/mp4").alias("mime"),
             F.lit(640).alias("width"),
             F.lit(360).alias("height"),
-            (F.length(text_col).cast("long") * ms_per_char).alias("duration_ms"),
+            (F.length("text").cast("long") * 40).alias("duration_ms"),
         ).alias("media_meta"),
     )
 
 
-def frame_sample(
-    df: DataFrame,
-    every_ms: int = 1000,
-    id_col: str = "doc_id",
-    meta_col: str = "media_meta",
-) -> DataFrame:
-    """Sample one frame every ``every_ms`` from each video payload.
+def frame_sample(df: DataFrame) -> DataFrame:
+    """Sample one frame every second from each video payload
+    (``doc_id``, ``payload``, ``media_meta``).
 
     The Spark side is fully real: filter to video rows, explode a frame
-    INDEX per sampling instant (``sequence(0, (duration_ms-1) / every_ms)``
+    INDEX per sampling instant (``sequence(0, (duration_ms-1) / 1000)``
     — pure JVM, no Python), and emit (doc_id, frame_idx, ts_ms,
     frame_payload). Only the codec byte-decode is faked: frame_payload =
     sha256(payload ‖ frame_idx) as 32 deterministic bytes, standing in
@@ -256,24 +241,24 @@ def frame_sample(
     the payload column itself is dropped before any shuffle can see it.
     """
     vids = df.filter(
-        (F.col(f"{meta_col}.modality") == "video")
-        & F.col(f"{meta_col}.duration_ms").isNotNull()
-        & (F.col(f"{meta_col}.duration_ms") > 0)
+        (F.col("media_meta.modality") == "video")
+        & F.col("media_meta.duration_ms").isNotNull()
+        & (F.col("media_meta.duration_ms") > 0)
     )
     frames = vids.select(
-        id_col,
+        "doc_id",
         "payload",
         F.explode(
             F.sequence(
                 F.lit(0).cast("long"),
-                ((F.col(f"{meta_col}.duration_ms") - 1) / every_ms).cast("long"),
+                ((F.col("media_meta.duration_ms") - 1) / 1000).cast("long"),
             )
         ).alias("frame_idx"),
     )
     return frames.select(
-        id_col,
+        "doc_id",
         "frame_idx",
-        (F.col("frame_idx") * every_ms).alias("ts_ms"),
+        (F.col("frame_idx") * 1000).alias("ts_ms"),
         F.unhex(
             F.sha2(
                 F.concat(
@@ -286,37 +271,32 @@ def frame_sample(
     )
 
 
-def attach_fake_audio_payload(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id", sample_rate: int = 8000
-) -> DataFrame:
-    """Deterministic fake AUDIO payloads: UTF-8 text bytes reinterpreted
-    as a PCM16 little-endian stream, with sample-count metadata derived
-    from byte length — real Spark plumbing (binary column + typed
-    struct), fake codec, same pattern as the image/video twins."""
+def attach_fake_audio_payload(df: DataFrame) -> DataFrame:
+    """Deterministic fake AUDIO payloads: UTF-8 ``text`` bytes
+    reinterpreted as an 8 kHz PCM16 little-endian stream, with
+    sample-count metadata derived from byte length — real Spark plumbing
+    (binary column + typed struct), fake codec, same pattern as the
+    image/video twins."""
     return df.select(
-        id_col,
-        F.encode(F.col(text_col), "UTF-8").alias("payload"),
+        "doc_id",
+        F.encode(F.col("text"), "UTF-8").alias("payload"),
         F.struct(
             F.lit("audio").alias("modality"),
             F.lit("audio/pcm").alias("mime"),
-            F.lit(sample_rate).alias("sample_rate"),
-            (F.octet_length(F.encode(F.col(text_col), "UTF-8")) / 2)
+            F.lit(8000).alias("sample_rate"),
+            (F.octet_length(F.encode(F.col("text"), "UTF-8")) / 2)
             .cast("long")
             .alias("n_samples"),
         ).alias("media_meta"),
     )
 
 
-def audio_window_rms(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    window_samples: int = 256,
-    codec: str = "pcm16",
-) -> DataFrame:
-    """Windowed RMS energy over audio payloads via ``mapInPandas``.
+def audio_window_rms(df: DataFrame, codec: str = "pcm16") -> DataFrame:
+    """Windowed RMS energy over ``(doc_id, payload)`` audio rows via
+    ``mapInPandas``.
 
     The Arrow batch shape is the point: payload bytes decode to a
-    sample array per row, RMS is computed per fixed-size window
+    sample array per row, RMS is computed per 256-sample window
     vectorized, and each input row fans out to one row per window —
     the same explode-through-Python contract a real feature extractor
     (spectrogram, VAD) would use. ``codec`` picks the decode seam:
@@ -336,14 +316,13 @@ def audio_window_rms(
     if codec not in ("pcm16", "wav"):
         raise ValueError(f"unknown audio codec {codec!r}")
 
-    out_schema = (
-        f"{id_col} long, window_idx long, n_samples long, rms double"
-    )
+    window_samples = 256
+    out_schema = "doc_id long, window_idx long, n_samples long, rms double"
 
     def batches(it):
         for pdf in it:
             ids, widx, ns, rms = [], [], [], []
-            for doc_id, payload in zip(pdf[id_col], pdf["payload"]):
+            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
                 buf = bytes(payload)
                 if codec == "wav":
                     _, samples = decode_wav_pcm16(buf)
@@ -366,14 +345,14 @@ def audio_window_rms(
                     )
             yield pd.DataFrame(
                 {
-                    id_col: pd.Series(ids, dtype="int64"),
+                    "doc_id": pd.Series(ids, dtype="int64"),
                     "window_idx": pd.Series(widx, dtype="int64"),
                     "n_samples": pd.Series(ns, dtype="int64"),
                     "rms": pd.Series(rms, dtype="float64"),
                 }
             )
 
-    return df.select(id_col, "payload").mapInPandas(batches, schema=out_schema)
+    return df.select("doc_id", "payload").mapInPandas(batches, schema=out_schema)
 
 
 def _decode_raster(payload, w: int, h: int, decoder: str):
@@ -394,40 +373,32 @@ def _decode_raster(payload, w: int, h: int, decoder: str):
     return px.reshape(h, w)
 
 
-def image_resize_thumbnail(
-    df: DataFrame,
-    out_w: int = 8,
-    out_h: int = 8,
-    id_col: str = "doc_id",
-    meta_col: str = "media_meta",
-    decoder: str = "wrap",
-) -> DataFrame:
-    """Nearest-neighbour thumbnail resize over image payloads via
-    ``mapInPandas`` — the resize leg of the decode/featurize/resize/
-    frame-sample multimodal family.
+def image_resize_thumbnail(df: DataFrame, decoder: str = "wrap") -> DataFrame:
+    """Nearest-neighbour 8×8 thumbnail resize over image payloads
+    (``doc_id``, ``payload``, ``media_meta``) via ``mapInPandas`` — the
+    resize leg of the decode/featurize/resize/frame-sample multimodal
+    family.
 
     The fake raster is the payload byte stream wrapped row-major to the
     metadata (width, height), padded with zeros — standing in for a real
     decoder's pixel array; the NEAREST-NEIGHBOUR GATHER (index grid
     ``floor(i*H/out_h), floor(j*W/out_w)``) is exactly what a real
     uint8 luma resize does, vectorized with NumPy fancy indexing. Output
-    is the out_h×out_w thumbnail re-encoded as BINARY plus dims — a
+    is the 8×8 thumbnail re-encoded as BINARY plus dims — a
     row-per-image (no fan-out) Arrow batch shape, complementing the
     fan-out shapes of frame_sample (1→N) and audio_window_rms (1→N).
     """
     import numpy as np
     import pandas as pd
 
-    schema = (
-        f"{id_col} long, src_w int, src_h int, thumb binary, "
-        "thumb_mean double"
-    )
+    out_w = out_h = 8
+    schema = "doc_id long, src_w int, src_h int, thumb binary, thumb_mean double"
 
     def batches(it):
         for pdf in it:
             ids, ws, hs, thumbs, means = [], [], [], [], []
             for doc_id, payload, w, h in zip(
-                pdf[id_col], pdf["payload"], pdf["w"], pdf["h"]
+                pdf["doc_id"], pdf["payload"], pdf["w"], pdf["h"]
             ):
                 img = _decode_raster(payload, int(w), int(h), decoder)
                 h, w = img.shape  # real dims when decoder='bmp'
@@ -441,7 +412,7 @@ def image_resize_thumbnail(
                 means.append(round(float(thumb.mean()), 4))
             yield pd.DataFrame(
                 {
-                    id_col: pd.Series(ids, dtype="int64"),
+                    "doc_id": pd.Series(ids, dtype="int64"),
                     "src_w": pd.Series(ws, dtype="int32"),
                     "src_h": pd.Series(hs, dtype="int32"),
                     "thumb": thumbs,
@@ -450,21 +421,17 @@ def image_resize_thumbnail(
             )
 
     src = df.select(
-        id_col,
+        "doc_id",
         "payload",
-        F.col(f"{meta_col}.width").alias("w"),
-        F.col(f"{meta_col}.height").alias("h"),
+        F.col("media_meta.width").alias("w"),
+        F.col("media_meta.height").alias("h"),
     )
     return src.mapInPandas(batches, schema=schema)
 
 
-def image_ahash(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    meta_col: str = "media_meta",
-    decoder: str = "wrap",
-) -> DataFrame:
-    """64-bit average-hash (aHash) perceptual signature per image.
+def image_ahash(df: DataFrame, decoder: str = "wrap") -> DataFrame:
+    """64-bit average-hash (aHash) perceptual signature per image
+    (``doc_id``, ``payload``, ``media_meta``).
 
     Classic aHash: resize to 8×8, threshold each pixel against the
     thumbnail mean, pack the 64 bits row-major into a BIGINT. Near-
@@ -481,13 +448,13 @@ def image_ahash(
     import numpy as np
     import pandas as pd
 
-    schema = f"{id_col} long, sig long, n_set_bits int"
+    schema = "doc_id long, sig long, n_set_bits int"
 
     def batches(it):
         for pdf in it:
             ids, sigs, bits = [], [], []
             for doc_id, payload, w, h in zip(
-                pdf[id_col], pdf["payload"], pdf["w"], pdf["h"]
+                pdf["doc_id"], pdf["payload"], pdf["w"], pdf["h"]
             ):
                 img = _decode_raster(payload, int(w), int(h), decoder)
                 h, w = img.shape  # real dims when decoder='bmp'
@@ -506,16 +473,16 @@ def image_ahash(
                 bits.append(int(mask.sum()))
             yield pd.DataFrame(
                 {
-                    id_col: pd.Series(ids, dtype="int64"),
+                    "doc_id": pd.Series(ids, dtype="int64"),
                     "sig": pd.Series(sigs, dtype="int64"),
                     "n_set_bits": pd.Series(bits, dtype="int32"),
                 }
             )
 
     src = df.select(
-        id_col,
+        "doc_id",
         "payload",
-        F.col(f"{meta_col}.width").alias("w"),
-        F.col(f"{meta_col}.height").alias("h"),
+        F.col("media_meta.width").alias("w"),
+        F.col("media_meta.height").alias("h"),
     )
     return src.mapInPandas(batches, schema=schema)

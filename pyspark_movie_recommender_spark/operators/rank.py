@@ -7,15 +7,16 @@ dedup blocking, pagination, rank-based sampling. This module computes the
 identical rank with bounded per-task input:
 
 1. range-bucket rows on the (numeric) sort key — boundaries come from
-   ``approxQuantile``, a driver-side list of at most ``n_buckets`` doubles;
+   ``approxQuantile``, a driver-side list of at most 31 doubles at the
+   default 32 buckets;
 2. ``row_number()`` inside each bucket (a parallel, partitioned window);
 3. add the exclusive prefix sum of bucket counts, broadcast back as a tiny
    literal map.
 
 Total order is ``(key_col, id_col)`` — the unique id tie-break makes the
 rank deterministic and engine-comparable. Cost: one narrow shuffle on the
-bucket id plus one |n_buckets|-row aggregate; the two driver actions
-(quantiles, bucket counts) are O(n_buckets) scalars, the same legitimate
+bucket id plus one aggregate with a row per bucket; the two driver
+actions (quantiles, bucket counts) are O(buckets) scalars, the same legitimate
 driver-side-scalar class as a convergence check. No task ever sorts more
 than one bucket.
 
@@ -34,6 +35,7 @@ from pyspark_movie_recommender_spark.driver_scalar import bounded_collect
 
 _BUCKET = "__rank_bucket"
 _LOCAL = "__rank_local"
+_N_BUCKETS = 32
 
 
 def distributed_global_rank(
@@ -292,7 +294,6 @@ def distributed_ntile(
     key_col: str,
     id_col: str | list[str],
     n_tiles: int,
-    n_buckets: int = 32,
     out_col: str = "tile",
 ) -> DataFrame:
     """Append ``out_col`` = NTILE(n_tiles) over the global
@@ -305,9 +306,7 @@ def distributed_ntile(
     list of tie-break columns.
     """
     ties = [id_col] if isinstance(id_col, str) else list(id_col)
-    ranked = distributed_order_stats(
-        df, key_col, ties, n_buckets=n_buckets, rank_col="__rn"
-    )
+    ranked = distributed_order_stats(df, key_col, ties, rank_col="__rn")
     n = ranked.count()
     q, r = divmod(n, n_tiles)
     if q == 0:
@@ -327,12 +326,10 @@ def distributed_reflected_walk(
     key_col: str,
     tie_cols: list[str],
     val_col: str,
-    n_buckets: int = 32,
-    out_cumsum: str = "c",
     out_runmin: str = "m",
 ) -> DataFrame:
-    """Cumulative sum C of ``val_col`` over the total order
-    (key, *ties) PLUS the running minimum of C — the reflected-walk
+    """Cumulative sum C (column ``c``) of ``val_col`` over the total
+    order (key, *ties) PLUS the running minimum of C — the reflected-walk
     primitive behind Lindley's queueing recursion
     (W_i = C_i − min_{k≤i} C_k), drawdown curves, and reset-at-idle
     accumulators — with bounded per-task input (no single-task
@@ -344,10 +341,10 @@ def distributed_reflected_walk(
     local running min). Within a bucket the min-at-current case
     reproduces C's float bit-for-bit (same expression), so
     W == 0.0 tests behave exactly as in the single-window form.
-    Driver actions: the quantile probe plus two O(n_buckets) scalar
+    Driver actions: the quantile probe plus two O(buckets) scalar
     collects (bucket sums, bucket mins).
     """
-    probs = [i / n_buckets for i in range(1, n_buckets)]
+    probs = [i / _N_BUCKETS for i in range(1, _N_BUCKETS)]
     bounds = sorted(set(df.approxQuantile(key_col, probs, 0.001)))
     if bounds:
         arr = F.array(*[F.lit(float(b)) for b in bounds])
@@ -395,7 +392,7 @@ def distributed_reflected_walk(
     )
     out = (
         local.withColumn(
-            out_cumsum, F.element_at(s_map, F.col(_BUCKET)) + F.col("__lc")
+            "c", F.element_at(s_map, F.col(_BUCKET)) + F.col("__lc")
         )
         .withColumn(
             "__lm",
@@ -422,9 +419,6 @@ def distributed_global_neighbors(
     id_col: str,
     mark_col: str,
     value_cols: list[str],
-    n_buckets: int = 32,
-    prefix_prev: str = "prev_",
-    prefix_next: str = "next_",
 ) -> DataFrame:
     """For every row, the ``value_cols`` of the LAST row strictly
     before it in the global (key, id) order whose ``mark_col`` is true
@@ -434,14 +428,14 @@ def distributed_global_neighbors(
     single-task ``Window.orderBy`` sort: range-bucket on the numeric
     key, per-bucket ignorenulls windows (parallel), then carry each
     bucket's last/first marked values across bucket boundaries as a
-    driver-side when-chain over at most ``n_buckets`` scalar rows.
+    driver-side when-chain over at most 32 scalar rows.
     All prev_/next_ fields of one row come from the SAME marked row
     (struct-packed through the windows), matching the single-window
     form bit-for-bit. ``id_col`` must be unique (total order);
     ``key_col`` numeric. Driver actions: the quantile probe plus one
-    O(n_buckets) collect of marked-boundary rows.
+    O(buckets) collect of marked-boundary rows.
     """
-    probs = [i / n_buckets for i in range(1, n_buckets)]
+    probs = [i / _N_BUCKETS for i in range(1, _N_BUCKETS)]
     bounds = sorted(set(df.approxQuantile(key_col, probs, 0.001)))
     if bounds:
         arr = F.array(*[F.lit(float(b)) for b in bounds])
@@ -454,7 +448,7 @@ def distributed_global_neighbors(
         F.col(mark_col), F.struct(*[F.col(c).alias(c) for c in value_cols])
     )
     order_key = F.struct(F.col(key_col), F.col(id_col))
-    # last / first marked row per bucket (tiny: ≤ n_buckets rows)
+    # last / first marked row per bucket (tiny: ≤ 32 rows)
     edge = bounded_collect(
         bucketed.filter(F.col(mark_col))
         .groupBy(_BUCKET)
@@ -508,10 +502,10 @@ def distributed_global_neighbors(
     ).withColumn("__nv", F.first(packed, ignorenulls=True).over(wnext))
     for c in value_cols:
         out = out.withColumn(
-            f"{prefix_prev}{c}",
+            f"prev_{c}",
             F.coalesce(F.col("__pv")[c], chain(carry_prev, c)),
         ).withColumn(
-            f"{prefix_next}{c}",
+            f"next_{c}",
             F.coalesce(F.col("__nv")[c], chain(carry_next, c)),
         )
     return out.drop("__pv", "__nv", _BUCKET)
@@ -521,7 +515,6 @@ def distributed_percent_rank(
     df: DataFrame,
     key_col: str,
     tie_cols: list[str],
-    n_buckets: int = 32,
     out_col: str = "pr",
 ) -> DataFrame:
     """Append ``out_col`` = PERCENT_RANK() over the global
@@ -530,9 +523,7 @@ def distributed_percent_rank(
     ROW_NUMBER and percent_rank = (rn − 1) / (n − 1) exactly matches
     the windowed form. One extra driver scalar (the total count).
     """
-    ranked = distributed_order_stats(
-        df, key_col, tie_cols, n_buckets=n_buckets, rank_col="__rn"
-    )
+    ranked = distributed_order_stats(df, key_col, tie_cols, rank_col="__rn")
     n = ranked.count()
     denom = float(n - 1) if n > 1 else 1.0
     return ranked.withColumn(
@@ -540,17 +531,15 @@ def distributed_percent_rank(
     ).drop("__rn")
 
 
-def rrf_fuse(
-    rankings: list[DataFrame], id_col: str = "doc_id", k: int = 60
-) -> DataFrame:
-    """Reciprocal-rank fusion over any number of (id, rank) relations:
-    rrf(id) = Σ_lists 1/(k + rank_i), ids absent from a list contribute
+def rrf_fuse(rankings: list[DataFrame]) -> DataFrame:
+    """Reciprocal-rank fusion over any number of (doc_id, rank) relations:
+    rrf(id) = Σ_lists 1/(60 + rank_i), ids absent from a list contribute
     only the lists that ranked them (Cormack & Clarke 2009). Score
     calibration-free — only RANKS cross lists, which is why RRF is the
     default way to fuse lexical and vector retrieval.
 
-    Each input must carry ``id_col`` and a ``rank`` column (1-based,
-    deterministically tie-broken by the producer). Output: (id, rrf,
+    Each input must carry ``doc_id`` and a ``rank`` column (1-based,
+    deterministically tie-broken by the producer). Output: (doc_id, rrf,
     rank_0..rank_{n-1}) — one row per id seen anywhere; full outer
     joins keep the fusion lossless. RRF values are sums of reciprocals
     of small integers: IEEE-identical across engines.
@@ -559,17 +548,17 @@ def rrf_fuse(
         raise ValueError("rrf_fuse needs at least one ranking")
     fused = None
     for i, r in enumerate(rankings):
-        ri = r.select(id_col, F.col("rank").alias(f"rank_{i}"))
-        fused = ri if fused is None else fused.join(ri, id_col, "full")
+        ri = r.select("doc_id", F.col("rank").alias(f"rank_{i}"))
+        fused = ri if fused is None else fused.join(ri, "doc_id", "full")
     terms = [
-        F.coalesce(1.0 / (F.col(f"rank_{i}") + k), F.lit(0.0))
+        F.coalesce(1.0 / (F.col(f"rank_{i}") + 60), F.lit(0.0))
         for i in range(len(rankings))
     ]
     score = terms[0]
     for t in terms[1:]:
         score = score + t
     return fused.select(
-        id_col, *[f"rank_{i}" for i in range(len(rankings))], score.alias("rrf")
+        "doc_id", *[f"rank_{i}" for i in range(len(rankings))], score.alias("rrf")
     )
 
 
@@ -578,7 +567,6 @@ def distributed_prefix_sum(
     key_col: str,
     id_col: str,
     val_col: str,
-    n_buckets: int = 32,
     out_col: str = "cumsum",
 ) -> DataFrame:
     """Append ``out_col`` = running SUM(val) over the global (key, id)
@@ -589,11 +577,11 @@ def distributed_prefix_sum(
     Same three steps: range-bucket on the numeric key (approxQuantile
     boundaries), per-bucket windowed cumsum (parallel), then add each
     bucket's exclusive prefix of the per-bucket VALUE sums, broadcast
-    as a literal map. The two driver actions are O(n_buckets) scalars.
+    as a literal map. The two driver actions are O(buckets) scalars.
     Sweep-line algorithms (peak concurrency, inventory running
     balance, audience accumulation) are the motivating consumers.
     """
-    probs = [i / n_buckets for i in range(1, n_buckets)]
+    probs = [i / _N_BUCKETS for i in range(1, _N_BUCKETS)]
     bounds = sorted(set(df.approxQuantile(key_col, probs, 0.001)))
 
     if bounds:

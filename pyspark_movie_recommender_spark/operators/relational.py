@@ -71,17 +71,17 @@ def top_k_per_group(
     group_by: Sequence[str],
     order_by: Sequence[Column],
     k: int,
-    rank_col: str = "rnk",
 ) -> DataFrame:
-    """Per-group top-k via ``row_number`` over a window.
+    """Per-group top-k via ``row_number`` over a window, numbered in
+    column ``rnk``.
 
     One shuffle on the group key; Spark's WindowGroupLimit pushes the
     k-limit below the sort so each partition only keeps k rows per group.
     """
     w = Window.partitionBy(*group_by).orderBy(*order_by)
     return (
-        df.withColumn(rank_col, F.row_number().over(w))
-        .filter(F.col(rank_col) <= k)
+        df.withColumn("rnk", F.row_number().over(w))
+        .filter(F.col("rnk") <= k)
     )
 
 
@@ -96,14 +96,9 @@ def rmse(df: DataFrame, actual: str, predicted: str) -> DataFrame:
     )
 
 
-def minmax_rescale(
-    df: DataFrame,
-    col: str,
-    out_col: str = "scaled",
-    lo: float = 1.0,
-    hi: float = 5.0,
-) -> DataFrame:
-    """Min-max rescale to [lo, hi] in pure SQL (reference ML5 without the UDF).
+def minmax_rescale(df: DataFrame, col: str, out_col: str = "scaled") -> DataFrame:
+    """Min-max rescale to the rating range [1, 5] in pure SQL (reference
+    ML5 without the UDF).
 
     The reference wrapped each double in a 1-d vector via a Python UDF to
     feed ``MinMaxScaler`` (``recommender.py:199-204``); the same semantics
@@ -111,6 +106,7 @@ def minmax_rescale(
     global agg reduces to 2 doubles, broadcast back via a cross join of a
     1-row frame (no window-over-unpartitioned pitfall).
     """
+    lo, hi = 1.0, 5.0
     bounds = df.agg(
         F.min(col).alias("__lo"), F.max(col).alias("__hi")
     )

@@ -21,16 +21,10 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 
-def scd2_apply(
-    current: DataFrame,
-    updates: DataFrame,
-    key: str,
-    effective_col: str = "valid_from",
-    end_col: str = "valid_to",
-    open_end: str = "9999-12-31",
-) -> DataFrame:
-    """Fold ``updates`` (one row per key, carrying ``effective_col``)
-    into the type-2 ``current`` history.
+def scd2_apply(current: DataFrame, updates: DataFrame, key: str) -> DataFrame:
+    """Fold ``updates`` (one row per key, carrying ``valid_from``)
+    into the type-2 ``current`` history; the open version's
+    ``valid_to`` is 9999-12-31.
 
     Scale shape: union + ONE window over (key ORDER BY valid_from) to
     re-derive every row's ``valid_to`` as lead(valid_from) — closing the
@@ -38,31 +32,26 @@ def scd2_apply(
     shuffle on the key; history length per key only affects its own
     partition's sort.
     """
-    unioned = current.drop(end_col).unionByName(updates)
-    w = Window.partitionBy(key).orderBy(F.col(effective_col))
+    unioned = current.drop("valid_to").unionByName(updates)
+    w = Window.partitionBy(key).orderBy(F.col("valid_from"))
     return unioned.withColumn(
-        end_col,
+        "valid_to",
         F.coalesce(
-            F.lead(effective_col).over(w),
-            F.lit(open_end).cast(unioned.schema[effective_col].dataType),
+            F.lead("valid_from").over(w),
+            F.lit("9999-12-31").cast(unioned.schema["valid_from"].dataType),
         ),
     )
 
 
-def snapshot_diff(
-    old: DataFrame,
-    new: DataFrame,
-    key: str,
-    compare_cols: list[str] | None = None,
-) -> DataFrame:
+def snapshot_diff(old: DataFrame, new: DataFrame, key: str) -> DataFrame:
     """Classify every key across two snapshots: 'added', 'removed',
-    'changed', or 'unchanged'.
+    'changed', or 'unchanged', comparing every non-key column of ``old``.
 
     Scale shape: one full outer join on the key; change detection is a
     null-safe struct comparison (``<=>``) so NULL field values compare
     equal — no per-column driver logic, no second pass.
     """
-    cols = compare_cols or [c for c in old.columns if c != key]
+    cols = [c for c in old.columns if c != key]
 
     def packed(df: DataFrame) -> Column:
         return F.struct(*[F.col(c) for c in cols])

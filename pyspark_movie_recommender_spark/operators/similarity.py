@@ -11,7 +11,7 @@ Three tiers:
   sketches bucketed by bands; sub-quadratic all-pairs candidates.
 - ``ivf_topk`` — IVF-style two-stage search: k-means-lite centroids
   (deterministic seeded sample), assign corpus to nearest centroid
-  (one pass), probe only the ``nprobe`` nearest cells. The 100 TB path
+  (one pass), probe only the 4 nearest of 16 cells. The 100 TB path
   for large probe sets.
 
 Vector math on hot paths is Arrow-batched NumPy (``cosine_arrow``) —
@@ -61,14 +61,9 @@ def cosine_arrow():
     return _cos
 
 
-def cosine_topk_bruteforce(
-    corpus: DataFrame,
-    probes: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    k: int = 5,
-) -> DataFrame:
-    """Exact cosine top-k neighbours for each probe (excluding self-matches).
+def cosine_topk_bruteforce(corpus: DataFrame, probes: DataFrame, k: int = 5) -> DataFrame:
+    """Exact cosine top-k neighbours for each probe (excluding
+    self-matches); corpus and probes are ``(vec_id, embedding)`` rows.
 
     Plan shape: probes broadcast → BroadcastNestedLoopJoin (corpus
     scanned once, no shuffle of the corpus) → per-probe top-k via
@@ -80,10 +75,10 @@ def cosine_topk_bruteforce(
     by neighbour id).
     """
     p = probes.select(
-        F.col(id_col).alias("probe_id"), _as_double(vec_col).alias("__pv")
+        F.col("vec_id").alias("probe_id"), _as_double("embedding").alias("__pv")
     )
     c = corpus.select(
-        F.col(id_col).alias("neighbor_id"), _as_double(vec_col).alias("__cv")
+        F.col("vec_id").alias("neighbor_id"), _as_double("embedding").alias("__cv")
     )
     sim = F.round(cosine_arrow()(F.col("__pv"), F.col("__cv")), 6)
     scored = (
@@ -99,21 +94,22 @@ def cosine_topk_bruteforce(
     )
 
 
-def _hyperplanes(dim: int, bits: int, seed: int) -> list[list[float]]:
-    """Deterministic pseudo-random hyperplanes (driver-side constants).
+def _hyperplanes(dim: int, bits: int) -> list[list[float]]:
+    """Deterministic pseudo-random hyperplanes, seed 42 (driver-side
+    constants).
 
     Tiny (bits x dim doubles) — shipped in the plan as literals, the
     moral equivalent of a broadcast variable.
     """
     import random
 
-    rng = random.Random(seed)
+    rng = random.Random(42)
     return [[rng.gauss(0.0, 1.0) for _ in range(dim)] for _ in range(bits)]
 
 
-def band_bucket_udf(dim: int, bits: int, bands: int, seed: int):
+def band_bucket_udf(dim: int, bits: int):
     """Arrow-batched sketch: sign bits via one NumPy matmul, packed into
-    one integer bucket per band.
+    one integer bucket per band (8 bands of ``bits / 8`` bits).
 
     The (bits x dim) plane matrix is a closure constant (~24 KB — the
     moral equivalent of a broadcast variable, shipped once per task, not
@@ -124,7 +120,8 @@ def band_bucket_udf(dim: int, bits: int, bands: int, seed: int):
     """
     from pyspark.sql.functions import pandas_udf
 
-    planes = np.array(_hyperplanes(dim, bits, seed))  # (bits, dim)
+    bands = 8
+    planes = np.array(_hyperplanes(dim, bits))  # (bits, dim)
     rows_per_band = bits // bands
     weights = 1 << np.arange(rows_per_band, dtype=np.int64)
 
@@ -145,26 +142,20 @@ def band_bucket_udf(dim: int, bits: int, bands: int, seed: int):
 
 
 def lsh_neardup_pairs(
-    df: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    dim: int = 64,
-    bits: int = 32,
-    bands: int = 8,
-    seed: int = 42,
-    cos_threshold: float = 0.8,
+    df: DataFrame, dim: int = 64, bits: int = 32, cos_threshold: float = 0.8
 ) -> DataFrame:
-    """All-pairs near-duplicate candidates via random-hyperplane LSH,
-    verified with exact cosine on the candidates only.
+    """All-pairs near-duplicate candidates over ``(vec_id, embedding)``
+    via random-hyperplane LSH, verified with exact cosine on the
+    candidates only.
 
-    Sub-quadratic: pairs meet only when a whole band of sign bits
-    matches. Returns (id_a, id_b, cos_sim) with id_a < id_b and
-    cos_sim >= threshold.
+    Sub-quadratic: pairs meet only when a whole band of sign bits (8
+    bands of ``bits / 8``) matches. Returns (id_a, id_b, cos_sim) with
+    id_a < id_b and cos_sim >= threshold.
     """
     from pyspark_movie_recommender_spark.operators.cache import track
 
-    buckets = band_bucket_udf(dim, bits, bands, seed)
-    v = df.select(F.col(id_col).alias("id"), _as_double(vec_col).alias("v"))
+    buckets = band_bucket_udf(dim, bits)
+    v = df.select(F.col("vec_id").alias("id"), _as_double("embedding").alias("v"))
     # Band join and pair-dedup shuffle ONLY (id, band, bucket) — never
     # the vectors. At 100 TB the candidate set dwarfs the corpus, so a
     # wide row through explode+join+distinct is the difference between
@@ -195,19 +186,10 @@ def lsh_neardup_pairs(
     )
 
 
-def ivf_topk(
-    corpus: DataFrame,
-    probes: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    k: int = 5,
-    n_cells: int = 16,
-    nprobe: int = 4,
-    seed: int = 42,
-) -> DataFrame:
-    """IVF-style approximate top-k: partition the corpus into Voronoi
-    cells around sampled centroids, search only the ``nprobe`` cells
-    nearest each probe.
+def ivf_topk(corpus: DataFrame, probes: DataFrame) -> DataFrame:
+    """IVF-style approximate top-5 over ``(vec_id, embedding)`` rows:
+    partition the corpus into 16 Voronoi cells around sampled centroids,
+    search only the ``nprobe`` = 4 cells nearest each probe.
 
     Centroids = deterministic sample of corpus vectors (cheap k-means
     substitute that needs no iteration — good enough for cell routing).
@@ -225,11 +207,12 @@ def ivf_topk(
     """
     from pyspark.sql.functions import pandas_udf
 
+    k, n_cells, nprobe = 5, 16, 4
     # deterministic centroid sample: ~n_cells vectors, driver-side once
     # driver-scalar contract: k-bounded by construction (limit(n_cells))
     cent_rows = bounded_collect(
-        corpus.select(F.col(id_col).alias("cid"), _as_double(vec_col).alias("cv"))
-        .withColumn("h", F.xxhash64(F.col("cid"), F.lit(seed)))
+        corpus.select(F.col("vec_id").alias("cid"), _as_double("embedding").alias("cv"))
+        .withColumn("h", F.xxhash64(F.col("cid"), F.lit(42)))
         .orderBy("h")
         .limit(n_cells)
         .orderBy("cid"),  # cell id = rank of centroid's vec_id (stable)
@@ -254,14 +237,14 @@ def ivf_topk(
 
         return _top
 
-    c = corpus.select(F.col(id_col).alias("neighbor_id"), _as_double(vec_col).alias("nv"))
+    c = corpus.select(F.col("vec_id").alias("neighbor_id"), _as_double("embedding").alias("nv"))
     # coalesce with a literal makes `cell` provably non-null, so the join
     # does NOT infer an isnotnull(cell) filter — which would re-evaluate
     # the argmax UDF a second time over the whole corpus scan
     assigned = c.withColumn(
         "cell", F.coalesce(F.element_at(top_cells_udf(1)(F.col("nv")), 1), F.lit(-1))
     )
-    p = probes.select(F.col(id_col).alias("probe_id"), _as_double(vec_col).alias("pv"))
+    p = probes.select(F.col("vec_id").alias("probe_id"), _as_double("embedding").alias("pv"))
     probed = p.withColumn(
         "cell", F.explode(top_cells_udf(nprobe)(F.col("pv")))
     )
@@ -286,17 +269,14 @@ def ivf_topk(
 
 
 def kmeans_assign(
-    corpus: DataFrame,
-    centroid_ids: list[int],
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    top2: bool = False,
+    corpus: DataFrame, centroid_ids: list[int], top2: bool = False
 ) -> DataFrame:
-    """One Lloyd ASSIGNMENT step of k-means over an embedding column,
-    with centroids fixed to named corpus vectors (``centroid_ids``) so
-    the step is deterministic and cross-engine checkable.
+    """One Lloyd ASSIGNMENT step of k-means over the ``embedding`` column
+    of ``(vec_id, embedding)`` rows, with centroids fixed to named corpus
+    vectors (``centroid_ids``) so the step is deterministic and
+    cross-engine checkable.
 
-    Returns ``(id_col, cell, sim_ppm)`` — each vector's nearest
+    Returns ``(vec_id, cell, sim_ppm)`` — each vector's nearest
     centroid by cosine (ties break to the lowest cell index) and the
     similarity as exact ppm (``round(cos*1e6)`` BIGINT, so downstream
     aggregation is integer arithmetic, immune to summation order).
@@ -308,7 +288,7 @@ def kmeans_assign(
     routing. Iterating Lloyd = re-calling this with recomputed means;
     each round stays one scan + one tiny agg.
 
-    With ``top2=True`` returns ``(id_col, cell, a_dist, b_dist)``
+    With ``top2=True`` returns ``(vec_id, cell, a_dist, b_dist)``
     instead: the ppm cosine DISTANCES (1e6 − sim_ppm) to the nearest
     and second-nearest centroid (ties to the lower cell) — the exact
     integer inputs the centroid-silhouette quality metric needs.
@@ -317,8 +297,8 @@ def kmeans_assign(
 
     # driver-scalar contract: k-bounded by the caller's centroid id list
     cent_rows = bounded_collect(
-        corpus.filter(F.col(id_col).isin(*centroid_ids))
-        .select(F.col(id_col).alias("cid"), _as_double(vec_col).alias("cv"))
+        corpus.filter(F.col("vec_id").isin(*centroid_ids))
+        .select(F.col("vec_id").alias("cid"), _as_double("embedding").alias("cv"))
         .orderBy("cid"),
         len(centroid_ids),
         "similarity.kmeans_centroids",
@@ -370,16 +350,16 @@ def kmeans_assign(
 
     if top2:
         out = corpus.select(
-            F.col(id_col), _assign2(_as_double(vec_col)).alias("a")
+            F.col("vec_id"), _assign2(_as_double("embedding")).alias("a")
         )
         return out.select(
-            id_col,
+            "vec_id",
             F.col("a.cell").alias("cell"),
             F.col("a.a_dist").alias("a_dist"),
             F.col("a.b_dist").alias("b_dist"),
         )
 
     out = corpus.select(
-        F.col(id_col), _assign(_as_double(vec_col)).alias("a")
+        F.col("vec_id"), _assign(_as_double("embedding")).alias("a")
     )
-    return out.select(id_col, F.col("a.cell").alias("cell"), F.col("a.sim_ppm").alias("sim_ppm"))
+    return out.select("vec_id", F.col("a.cell").alias("cell"), F.col("a.sim_ppm").alias("sim_ppm"))

@@ -26,8 +26,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 
-def misra_gries(df: DataFrame, col: str, k: int = 50) -> DataFrame:
-    """Heavy-hitter candidates for ``df[col]`` with ``k`` counters.
+def misra_gries(df: DataFrame, col: str) -> DataFrame:
+    """Heavy-hitter candidates for ``df[col]`` with ``k`` = 50 counters.
 
     Returns (token, lower_bound, global_decrement): ``lower_bound`` is
     the merged counter after the final decrement (a lower bound on the
@@ -36,6 +36,8 @@ def misra_gries(df: DataFrame, col: str, k: int = 50) -> DataFrame:
     per partition with k counters of state; the merge aggregates
     |partitions|·k candidate rows.
     """
+
+    k = 50
 
     def summarize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         counters: dict[str, int] = {}

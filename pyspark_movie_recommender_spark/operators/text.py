@@ -42,10 +42,10 @@ def type_token_ratio(text: Column | str) -> Column:
     )
 
 
-def stopword_ratio(text: Column | str, lang: str = "en") -> Column:
-    """Fraction of tokens that are (language-specific) stopwords."""
+def stopword_ratio(text: Column | str) -> Column:
+    """Fraction of tokens that are English stopwords."""
     toks = ws_tokens(text)
-    sw = F.array(*[F.lit(s) for s in _STOPWORDS[lang]])
+    sw = F.array(*[F.lit(s) for s in _STOPWORDS["en"]])
     hits = F.size(F.filter(toks, lambda t: F.array_contains(sw, t)))
     return F.when(F.size(toks) > 0, hits / F.size(toks))
 
@@ -91,11 +91,11 @@ def lang_marker_scores(text: Column | str) -> dict[str, Column]:
     return out
 
 
-def predict_lang(text: Column | str, default: str = "und") -> Column:
+def predict_lang(text: Column | str) -> Column:
     """Argmax language over marker scores, deterministic tie-break by
     language code; 'und' (undetermined) when no marker hits at all."""
     scores = lang_marker_scores(text)
-    best_lang = F.lit(default)
+    best_lang = F.lit("und")
     best_score = F.lit(-1).cast("int")
     # iterate in sorted order so ties resolve to the alphabetically first
     for lang in sorted(scores, reverse=True):
@@ -114,18 +114,13 @@ FP_BASE = 257
 FP_MOD = 1_000_003  # small prime: acc*base+255 stays < 2^31 (no overflow)
 
 
-def winnowing_fingerprints_sql(
-    text: Column | str,
-    k: int = FP_K,
-    w: int = FP_W,
-    base: int = FP_BASE,
-    mod: int = FP_MOD,
-) -> Column:
+def winnowing_fingerprints_sql(text: Column | str) -> Column:
     """Winnowing document fingerprints (Schleimer et al., SIGMOD'03) in pure SQL.
 
-    Polynomial hash of every character k-gram (Horner form, mod a small
-    prime), then the min hash of each w-window of consecutive k-grams;
-    the distinct window-mins are the fingerprint set.
+    Polynomial hash of every character ``FP_K``-gram (Horner form, base
+    ``FP_BASE``, mod the small prime ``FP_MOD``), then the min hash of
+    each window of ``FP_W`` consecutive k-grams; the distinct
+    window-mins are the fingerprint set.
 
     REFERENCE FORM, not the hot path: nested higher-order lambdas are
     interpreted row-at-a-time by Catalyst (~0.5 ms per k-gram measured),
@@ -134,6 +129,7 @@ def winnowing_fingerprints_sql(
     test pinning the UDF to it. Use :func:`winnowing_fingerprints` in
     queries.
     """
+    k, w, base, mod = FP_K, FP_W, FP_BASE, FP_MOD
     c = F.col(text) if isinstance(text, str) else text
     n = F.length(c)
 
@@ -156,13 +152,7 @@ def winnowing_fingerprints_sql(
     )
 
 
-def winnowing_fingerprints(
-    text: Column | str,
-    k: int = FP_K,
-    w: int = FP_W,
-    base: int = FP_BASE,
-    mod: int = FP_MOD,
-) -> Column:
+def winnowing_fingerprints(text: Column | str) -> Column:
     """Winnowing fingerprints, Arrow-batched NumPy hot path.
 
     Value-identical to :func:`winnowing_fingerprints_sql` (the
@@ -176,6 +166,7 @@ def winnowing_fingerprints(
     import numpy as np
     from pyspark.sql.functions import pandas_udf
 
+    k, w, base, mod = FP_K, FP_W, FP_BASE, FP_MOD
     powers = np.array([pow(base, k - 1 - j, mod) for j in range(k)], dtype=np.int64)
 
     @pandas_udf("array<int>")
@@ -199,41 +190,21 @@ def winnowing_fingerprints(
     return _fps(c)
 
 
-def doc_profile(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """One-pass per-document profile: every statistic in one projection."""
-    return df.select(
-        id_col,
-        F.length(text_col).cast("long").alias("n_chars"),
-        token_count(text_col).alias("n_tokens"),
-        F.round(avg_token_len(text_col), 4).alias("avg_token_len"),
-        F.round(type_token_ratio(text_col), 4).alias("ttr"),
-        F.round(stopword_ratio(text_col, "en"), 4).alias("en_stopword_ratio"),
-        bpe_ish_token_count(text_col).alias("bpe_tokens"),
-        F.round(quality_score(text_col), 4).alias("quality"),
-        predict_lang(text_col).alias("pred_lang"),
-    )
-
-
-def bm25_scores(
-    docs: DataFrame,
-    terms: list[str],
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k1: float = 1.2,
-    b: float = 0.75,
-) -> DataFrame:
-    """BM25 ranked retrieval for a fixed term set, pure SQL.
+def bm25_scores(docs: DataFrame, terms: list[str]) -> DataFrame:
+    """BM25 ranked retrieval for a fixed term set over ``(doc_id, text)``,
+    pure SQL.
 
     Classic Robertson/Sparck-Jones BM25: idf(t) = ln(1 + (N-df+0.5)/(df+0.5)),
-    tf saturation k1, length normalization b. Shapes for scale: one
+    tf saturation k1 = 1.2, length normalization b = 0.75. Shapes for scale: one
     tokens explode (map-side), tf = groupBy(doc, term), df = groupBy(term)
     (tiny — |terms| rows, broadcast back), N/avgdl are a 1-row global
     aggregate cross-joined in. No UDF anywhere; the explode dominates and
     is linear in corpus tokens.
     """
+    k1, b = 1.2, 0.75
     toks = docs.select(
-        F.col(id_col).alias("doc_id"),
-        ws_tokens(text_col).alias("toks"),
+        "doc_id",
+        ws_tokens("text").alias("toks"),
     ).select("doc_id", F.size("toks").cast("double").alias("dl"), "toks")
 
     stats = toks.agg(
@@ -268,26 +239,22 @@ def bm25_scores(
     )
 
 
-def chunk_documents(
-    docs: DataFrame,
-    chunk_tokens: int = 64,
-    stride: int = 48,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Split documents into overlapping fixed-token chunks — the
-    tokenize-and-window step every LLM pretraining pipeline runs before
-    packing. Pure SQL: token array → sequence of chunk starts →
-    explode. Output: (doc_id, chunk_idx, n_chunk_tokens, chunk_text).
+def chunk_documents(docs: DataFrame) -> DataFrame:
+    """Split ``(doc_id, text)`` documents into overlapping 64-token
+    chunks — the tokenize-and-window step every LLM pretraining pipeline
+    runs before packing. Pure SQL: token array → sequence of chunk
+    starts → explode. Output: (doc_id, chunk_idx, n_chunk_tokens,
+    chunk_text).
 
-    Chunks start every ``stride`` tokens (overlap = chunk_tokens -
-    stride); the final partial chunk is kept iff it is the only one or
-    extends past the previous chunk. Map-side only — no shuffle;
-    explode multiplies rows ~n_tokens/stride, which is the point.
+    Chunks start every 48 tokens (overlap = 16 tokens); the final
+    partial chunk is kept iff it is the only one or extends past the
+    previous chunk. Map-side only — no shuffle; explode multiplies rows
+    ~n_tokens/48, which is the point.
     """
-    toks = ws_tokens(text_col)
+    chunk_tokens, stride = 64, 48
+    toks = ws_tokens("text")
     base = docs.select(
-        F.col(id_col).alias("doc_id"), toks.alias("__toks"), F.size(toks).alias("__n")
+        "doc_id", toks.alias("__toks"), F.size(toks).alias("__n")
     ).filter(F.size(toks) > 0)
     starts = F.sequence(
         F.lit(0),
@@ -312,34 +279,29 @@ def chunk_documents(
     )
 
 
-def pack_documents(
-    docs: DataFrame,
-    budget_tokens: int = 512,
-    by: str = "source",
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Assign documents to context-window bins: contiguous greedy fill
-    in deterministic (group, doc_id) order via one window cumsum —
-    bin = floor((cumsum - n_tokens) / budget). Docs longer than the
+def pack_documents(docs: DataFrame) -> DataFrame:
+    """Assign ``(doc_id, source, text)`` documents to 512-token
+    context-window bins: contiguous greedy fill in deterministic
+    (source, doc_id) order via one window cumsum —
+    bin = floor((cumsum - n_tokens) / 512). Docs longer than the
     budget get a bin of their own (they'd be chunked first in a real
     pipeline; composition with chunk_documents is the full path).
 
     One shuffle (window partition on the group key); no driver loop, no
     UDF. Deterministic, so the DuckDB oracle checks exact assignments.
     """
-    n = token_count(text_col)
+    n = token_count("text")
     w = Window.partitionBy("grp").orderBy("doc_id")
     return (
         docs.select(
-            F.col(id_col).alias("doc_id"), F.col(by).alias("grp"), n.alias("n_tokens")
+            "doc_id", F.col("source").alias("grp"), n.alias("n_tokens")
         )
         .withColumn("cum", F.sum("n_tokens").over(w.rowsBetween(Window.unboundedPreceding, 0)))
         .select(
             "doc_id",
             "grp",
             "n_tokens",
-            F.floor((F.col("cum") - F.col("n_tokens")) / budget_tokens)
+            F.floor((F.col("cum") - F.col("n_tokens")) / 512)
             .cast("long")
             .alias("bin_id"),
         )
@@ -350,15 +312,12 @@ CONTROL_CHAR_RE = r"[\x00-\x08\x0B\x0C\x0E-\x1F]"
 NON_ASCII_RE = r"[^\x00-\x7F]"
 
 
-def encoding_health(
-    docs: DataFrame,
-    by: str = "source",
-    text_col: str = "text",
-) -> DataFrame:
-    """Per-group encoding-health census: documents carrying C0 control
-    characters (NUL..US minus tab/newline/CR), U+FFFD replacement
-    characters, or the 'Ã' UTF-8-decoded-as-Latin-1 mojibake marker,
-    plus exact non-ASCII and whitespace char rates (ppm, integer DIV).
+def encoding_health(docs: DataFrame) -> DataFrame:
+    """Per-``source`` encoding-health census of ``text``: documents
+    carrying C0 control characters (NUL..US minus tab/newline/CR), U+FFFD
+    replacement characters, or the 'Ã' UTF-8-decoded-as-Latin-1 mojibake
+    marker, plus exact non-ASCII and whitespace char rates (ppm, integer
+    DIV).
 
     The ingest-side tripwire for codec bugs: a healthy corpus shows
     zeros in the flag columns, and any nonzero is an upstream decode
@@ -368,8 +327,8 @@ def encoding_health(
     Scale shape: map-side regexp counting fused into the scan, one
     |groups|-row hash aggregate. A 100 TB audit is one pass.
     """
-    t = F.col(text_col)
-    return docs.groupBy(F.col(by).alias("grp")).agg(
+    t = F.col("text")
+    return docs.groupBy(F.col("source").alias("grp")).agg(
         F.count(F.lit(1)).cast("long").alias("n_docs"),
         F.sum(
             F.when(F.regexp_count(t, F.lit(CONTROL_CHAR_RE)) > 0, 1).otherwise(0)

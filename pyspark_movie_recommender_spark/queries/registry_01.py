@@ -993,7 +993,7 @@ def ngram_jaccard_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") % 25 == 0)
     pairs = ngram_jaccard_pairs(
-        docs, "text", "doc_id", n=3, threshold=0.5, max_shingle_df=15
+        docs, "text", "doc_id", threshold=0.5, max_shingle_df=15
     )
     return pairs.select(
         F.col("id_a"), F.col("id_b"), F.round("jaccard", 6).alias("jaccard")
@@ -1049,7 +1049,7 @@ def dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark_movie_recommender_spark.operators.graph import connected_components
 
     docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") % 25 == 0)
-    pairs = ngram_jaccard_pairs(docs, "text", "doc_id", n=3, threshold=0.5)
+    pairs = ngram_jaccard_pairs(docs, "text", "doc_id", threshold=0.5)
     return connected_components(pairs)
 
 
@@ -1066,7 +1066,7 @@ def dedup_components_star(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") % 25 == 0)
-    pairs = ngram_jaccard_pairs(docs, "text", "doc_id", n=3, threshold=0.5)
+    pairs = ngram_jaccard_pairs(docs, "text", "doc_id", threshold=0.5)
     return connected_components_star(pairs)
 
 
@@ -1079,7 +1079,7 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") % 5 == 0)
     return minhash_lsh_pairs(
-        docs, "text", "doc_id", n=3, num_hashes=32, bands=8, verify_threshold=0.5
+        docs, "text", "doc_id", num_hashes=32, bands=8, verify_threshold=0.5
     )
 
 
@@ -1148,7 +1148,7 @@ def doc_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
         token_count("text").alias("n_tokens"),
         F.round(avg_token_len("text"), 4).alias("avg_token_len"),
         F.round(type_token_ratio("text"), 4).alias("ttr"),
-        F.round(stopword_ratio("text", "en"), 4).alias("en_stopword_ratio"),
+        F.round(stopword_ratio("text"), 4).alias("en_stopword_ratio"),
         bpe_ish_token_count("text").alias("bpe_tokens"),
     )
 
@@ -1277,7 +1277,7 @@ def chunk_documents_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark_movie_recommender_spark.operators.text import chunk_documents
 
     docs = load_table(spark, sf_dir, "documents")
-    return chunk_documents(docs, chunk_tokens=64, stride=48)
+    return chunk_documents(docs)
 
 
 @query(
@@ -1304,7 +1304,7 @@ def pack_documents_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark_movie_recommender_spark.operators.text import pack_documents
 
     docs = load_table(spark, sf_dir, "documents")
-    out = pack_documents(docs, budget_tokens=512, by="source")
+    out = pack_documents(docs)
     return out.select("doc_id", "grp", F.col("n_tokens").cast("long").alias("n_tokens"), "bin_id")
 
 
@@ -1426,7 +1426,7 @@ def cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load_table(spark, sf_dir, "embeddings")
     return cosine_topk_bruteforce(
-        emb, emb.filter(F.col("vec_id") < 10), "embedding", "vec_id", k=5
+        emb, emb.filter(F.col("vec_id") < 10), k=5
     )
 
 
@@ -1524,7 +1524,7 @@ def ann_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     n = table_row_hint(sf_dir, "embeddings")
     width = max(6, math.ceil(math.log2(max(n, 64) / 32)))
     return lsh_neardup_pairs(
-        emb, bits=8 * width, bands=8, cos_threshold=0.25
+        emb, bits=8 * width, cos_threshold=0.25
     )
 
 
@@ -1538,7 +1538,7 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # distinct pipeline steps (corpus assign, probe routing, scoring),
     # but the probe relation shouldn't cost a second corpus scan
     return ivf_topk(
-        emb, _ckpt(emb.filter(F.col("vec_id") < 10)), k=5, n_cells=16, nprobe=4
+        emb, _ckpt(emb.filter(F.col("vec_id") < 10))
     )
 
 
@@ -1680,7 +1680,7 @@ def multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") % 10 == 0)
-    frames = frame_sample(attach_fake_video_payload(docs), every_ms=1000)
+    frames = frame_sample(attach_fake_video_payload(docs))
     return frames.select(
         "doc_id",
         "frame_idx",
@@ -1785,7 +1785,7 @@ def als_recommend_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pyspark_movie_recommender_spark.recommend import recommend_parts_for_customers
 
-    return recommend_parts_for_customers(spark, sf_dir, k=5)
+    return recommend_parts_for_customers(spark, sf_dir)
 
 
 # ---------------------------------------------------------------------------
@@ -6245,7 +6245,7 @@ def prefix_filter_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = load_table(spark, sf_dir, "documents")
-    return prefix_filtered_jaccard_pairs(docs, threshold_pct=70)
+    return prefix_filtered_jaccard_pairs(docs)
 
 
 # ---------------------------------------------------------------------------

@@ -773,10 +773,10 @@ def matryoshka_overlap_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     # semantics — the corpus is scanned once per pass by design; the
     # tiny probe relations, though, need not re-scan the corpus at all
     probes = _ckpt(emb.filter(F.col("vec_id") < 10))
-    full = cosine_topk_bruteforce(emb, probes, "embedding", "vec_id", k=10)
+    full = cosine_topk_bruteforce(emb, probes, k=10)
     emb16 = emb.select("vec_id", F.slice("embedding", 1, 16).alias("embedding"))
     probes16 = _ckpt(emb16.filter(F.col("vec_id") < 10))
-    trunc = cosine_topk_bruteforce(emb16, probes16, "embedding", "vec_id", k=10)
+    trunc = cosine_topk_bruteforce(emb16, probes16, k=10)
     f = full.select("probe_id", "neighbor_id")
     t = trunc.select(
         F.col("probe_id").alias("tp"), F.col("neighbor_id").alias("tn")
@@ -1376,7 +1376,7 @@ def dedup_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") % 25 == 0)
     shared, sizes = shingle_candidates(
-        docs, "text", "doc_id", n=3, max_shingle_df=15
+        docs, "text", "doc_id", max_shingle_df=15
     )
     j = (
         shared.join(
@@ -1482,7 +1482,7 @@ def dedup_impact_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark_movie_recommender_spark.operators.graph import connected_components
 
     docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") % 25 == 0)
-    pairs = ngram_jaccard_pairs(docs, "text", "doc_id", n=3, threshold=0.5)
+    pairs = ngram_jaccard_pairs(docs, "text", "doc_id", threshold=0.5)
     comp = connected_components(pairs)
     removed = comp.filter(F.col("id") != F.col("component")).select("id")
     flagged = docs.join(
@@ -2405,7 +2405,7 @@ def bfs_copurchase_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     # round 9: basket census (one fact exchange) replaces the items
     # self-join — see operators/graph.copurchase_pairs
     edges = copurchase_pairs(li, min_support=2).select("u", "v")
-    return bfs_hops(edges, "u", "v", max_hops=4)
+    return bfs_hops(edges)
 
 
 @query(
@@ -5448,9 +5448,7 @@ def hybrid_rrf_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
         [
             brank.select("doc_id", F.col("rank_b").alias("rank")),
             crank.select("doc_id", F.col("rank_c").alias("rank")),
-        ],
-        id_col="doc_id",
-        k=60,
+        ]
     )
     return (
         fused.orderBy(F.desc("rrf"), F.asc("doc_id"))

@@ -5717,7 +5717,7 @@ def misra_gries_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     tok = docs.select(
         F.explode(ws_tokens(F.lower(F.col("text")))).alias("w")
     )
-    return misra_gries(tok, "w", k=50)
+    return misra_gries(tok, "w")
 
 
 @query(
@@ -6673,7 +6673,7 @@ def mmr_diverse_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     cand = (
         cosine_topk_bruteforce(
-            emb, emb.filter(F.col("vec_id") < 3), "embedding", "vec_id", k=8
+            emb, emb.filter(F.col("vec_id") < 3), k=8
         )
         .select(
             "probe_id",

@@ -2074,7 +2074,7 @@ def lindley_waiting_times(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("r", (30.0 - F.col("inter_arrival")).alias("x"))
     )
     waits = distributed_reflected_walk(
-        arr, "r", [], "x", out_cumsum="c", out_runmin="mn"
+        arr, "r", [], "x", out_runmin="mn"
     ).select(
         # reflected-walk form: W_i = C_i − min_{k≤i} C_k (the k=i term
         # gives the recursion's W_1 = 0 base for the first row)

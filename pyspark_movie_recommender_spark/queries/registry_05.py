@@ -7412,7 +7412,7 @@ def knn_holdout_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     probes = emb.where(F.col("vec_id") % 7 == 0)
     corpus = emb.where(F.col("vec_id") % 7 != 0)
-    topk = cosine_topk_bruteforce(corpus, probes, "embedding", "vec_id", k=5)
+    topk = cosine_topk_bruteforce(corpus, probes, k=5)
     # both the neighbor-label and the probe-truth joins consume this
     # 2-column relation — ckpt so the embeddings scan feeding it runs once
     labels = _ckpt(emb.select("vec_id", "label"))

@@ -3326,7 +3326,7 @@ def kingman_vut_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # inclusive running min) -- the reflected-walk identity, so the
     # distributed cumsum+runmin primitive applies directly.
     w = distributed_reflected_walk(
-        u, "i", [], "u", out_cumsum="c", out_runmin="mn"
+        u, "i", [], "u", out_runmin="mn"
     ).select((F.col("c") - F.least(F.lit(0.0), F.col("mn"))).alias("w"))
     ex = w.agg(F.avg("w").alias("mw"))
     king = moms.select(
@@ -3451,7 +3451,7 @@ def heavy_traffic_scaling(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         # reflected-walk identity per rho (see kingman_vut_audit)
         w_rho = distributed_reflected_walk(
-            u, "i", [], "u", out_cumsum="c", out_runmin="mn"
+            u, "i", [], "u", out_runmin="mn"
         ).select(
             (F.col("c") - F.least(F.lit(0.0), F.col("mn"))).alias("w")
         )

@@ -61,6 +61,7 @@ SEED = 5
 ITERATIONS = 10
 LAMBDA = 0.1
 RANKS = (4, 8, 12)
+SPLIT_WEIGHTS = [0.6, 0.2, 0.2]
 SPLIT_SEED = 0
 
 
@@ -104,10 +105,7 @@ class GridSearchResult:
 
 
 def train_with_grid_search(
-    ratings: DataFrame,
-    ranks: tuple[int, ...] = RANKS,
-    weights: tuple[float, float, float] = (0.6, 0.2, 0.2),
-    split_seed: int = SPLIT_SEED,
+    ratings: DataFrame, ranks: tuple[int, ...] = RANKS
 ) -> GridSearchResult:
     """Reference entry point 1 (recommender.py:39-100): split, grid
     search rank by validation RMSE, report test RMSE at the best rank.
@@ -115,7 +113,7 @@ def train_with_grid_search(
     ``randomSplit([3,1,1], 0)`` normalized to 0.6/0.2/0.2 with seed 0 —
     protocol reproduced, not row membership (partition-dependent).
     """
-    train, validation, test = ratings.randomSplit(list(weights), seed=split_seed)
+    train, validation, test = ratings.randomSplit(SPLIT_WEIGHTS, seed=SPLIT_SEED)
     train = train.cache()
     validation = validation.cache()
 
@@ -271,11 +269,9 @@ def _order_history_als(spark: SparkSession, sf_dir: str):
     return _als(rank=8, implicit=True, max_iter=5).fit(ratings)
 
 
-def recommend_parts_for_customers(
-    spark: SparkSession, sf_dir: str, k: int = 5
-) -> DataFrame:
+def recommend_parts_for_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ALS on the driver's star schema: implicit ratings from order
-    history (log1p of total quantity per customer×part), top-k part
+    history (log1p of total quantity per customer×part), top-5 part
     recommendations per customer.
 
     Scale shape: ratings build is one orders⋈lineitem shuffle + one
@@ -283,7 +279,7 @@ def recommend_parts_for_customers(
     factorization. ``recommendForAllUsers`` does blocked cross products
     JVM-side — never a driver loop.
     """
-    recs = _order_history_als(spark, sf_dir).recommendForAllUsers(k)
+    recs = _order_history_als(spark, sf_dir).recommendForAllUsers(5)
     return recs.select(
         F.col("user_id").cast("long").alias("c_custkey"),
         F.explode("recommendations").alias("rec"),
@@ -295,10 +291,10 @@ def recommend_parts_for_customers(
 
 
 def item_neighbors_from_factors(
-    spark: SparkSession, sf_dir: str, k: int = 3, n_probes: int = 10
+    spark: SparkSession, sf_dir: str, n_probes: int = 10
 ) -> DataFrame:
     """Related-items retrieval from the trained ALS item-factor matrix:
-    cosine top-k over ``itemFactors`` reusing the similarity operator
+    cosine top-3 over ``itemFactors`` reusing the similarity operator
     library — the "customers who bought X also bought Y" surface the
     reference's user-centric recommend flow (recommender.py:143-176)
     never exposes.
@@ -317,12 +313,10 @@ def item_neighbors_from_factors(
         F.col("features").cast("array<float>").alias("embedding"),
     )
     probes = factors.orderBy("vec_id").limit(n_probes)
-    return cosine_topk_bruteforce(factors, probes, k=k)
+    return cosine_topk_bruteforce(factors, probes, k=3)
 
 
-def text_topic_classifier_pipeline(
-    spark: SparkSession, sf_dir: str, seed: int = 7
-) -> DataFrame:
+def text_topic_classifier_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Supervised text classification on the ml.Pipeline API: Tokenizer →
     HashingTF → IDF → LogisticRegression — the estimator/transformer
     composition surface (the reference uses only raw ALS; a full engine
@@ -337,7 +331,8 @@ def text_topic_classifier_pipeline(
     count comparisons, and honest because the label derivation is
     exact and checkable.
 
-    Returns per-class (n_docs, n_correct) on a held-out split.
+    Returns per-class (n_docs, n_correct) on a held-out 20 % split
+    (seed 7).
     Scale shape: HashingTF is stateless per-row hashing (no vocabulary
     broadcast); IDF and LR are the standard distributed fits; nothing
     driver-side beyond the model's coefficient vectors.
@@ -370,7 +365,7 @@ def text_topic_classifier_pipeline(
         best_n = F.when(take, n).otherwise(best_n)
     labeled = docs.select("doc_id", "text", best.alias("topic"))
 
-    train, test = labeled.randomSplit([0.8, 0.2], seed=seed)
+    train, test = labeled.randomSplit([0.8, 0.2], seed=7)
     pipe = Pipeline(
         stages=[
             StringIndexer(inputCol="topic", outputCol="label"),

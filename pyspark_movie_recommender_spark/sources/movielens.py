@@ -37,9 +37,10 @@ MOVIES_CSV_SCHEMA = T.StructType(
 )
 
 
-def read_ratings_csv(spark: SparkSession, path: str, header: bool = False) -> DataFrame:
-    """Read a ratings CSV → (user_id INT, movie_id INT, rating DOUBLE, ts TIMESTAMP)."""
-    df = spark.read.csv(path, schema=RATINGS_CSV_SCHEMA, header=header)
+def read_ratings_csv(spark: SparkSession, path: str) -> DataFrame:
+    """Read a headerless ratings CSV → (user_id INT, movie_id INT, rating
+    DOUBLE, ts TIMESTAMP)."""
+    df = spark.read.csv(path, schema=RATINGS_CSV_SCHEMA, header=False)
     return df.select(
         "user_id",
         "movie_id",
@@ -48,13 +49,14 @@ def read_ratings_csv(spark: SparkSession, path: str, header: bool = False) -> Da
     )
 
 
-def read_movies_csv(spark: SparkSession, path: str, header: bool = False) -> DataFrame:
-    """Read a movies CSV → (movie_id INT, title STRING, genres ARRAY<STRING>).
+def read_movies_csv(spark: SparkSession, path: str) -> DataFrame:
+    """Read a headerless movies CSV → (movie_id INT, title STRING, genres
+    ARRAY<STRING>).
 
     RFC-4180 quoting handled by the CSV datasource; the latent genres
     array (``Adventure|Animation|...``) is materialized with ``split``.
     """
-    df = spark.read.csv(path, schema=MOVIES_CSV_SCHEMA, header=header, quote='"', escape='"')
+    df = spark.read.csv(path, schema=MOVIES_CSV_SCHEMA, header=False, quote='"', escape='"')
     return df.select(
         "movie_id",
         "title",

@@ -212,11 +212,10 @@ def compact_parquet(
     spark: SparkSession,
     src_dir: str,
     dst_dir: str,
-    target_file_mb: int = 128,
     sort_cols: list[str] | None = None,
 ) -> int:
     """Small-file compaction: rewrite a parquet directory into files of
-    ~``target_file_mb`` each, optionally sorting within partitions so
+    ~128 MB each, optionally sorting within partitions so
     min/max row-group stats cluster for data skipping.
 
     The small-files problem is a first-order 100 TB cost (every file is
@@ -231,7 +230,7 @@ def compact_parquet(
         for f in files
         if f.endswith(".parquet")
     )
-    n_files = max(1, round(size_bytes / (target_file_mb * 1024 * 1024)))
+    n_files = max(1, round(size_bytes / (128 * 1024 * 1024)))
     df = spark.read.parquet(src_dir)
     out = df.repartition(n_files)
     if sort_cols:

@@ -59,12 +59,11 @@ def _run_to_table(df: DataFrame, query_name: str, output_mode: str) -> None:
 def tumbling_window_stream(
     spark: SparkSession,
     sf_dir: str,
-    window: str = "1 hour",
-    watermark: str = "1 hour",
     query_name: str = "stream_tumbling",
     output_mode: str = "append",
 ) -> DataFrame:
-    """Windowed streaming aggregation with a watermark for late data.
+    """One-hour tumbling-window streaming aggregation with a one-hour
+    watermark for late data.
 
     In append mode a window only emits once the watermark passes its
     end — state is bounded by (watermark + window) regardless of
@@ -74,8 +73,8 @@ def tumbling_window_stream(
     """
     ev = _events_stream(spark, sf_dir)
     agg = (
-        ev.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window), "event_type")
+        ev.withWatermark("ts", "1 hour")
+        .groupBy(F.window("ts", "1 hour"), "event_type")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
             F.round(F.sum("value"), 2).alias("total_value"),
@@ -94,17 +93,15 @@ def tumbling_window_stream(
 def session_window_stream(
     spark: SparkSession,
     sf_dir: str,
-    gap: str = "30 minutes",
-    watermark: str = "1 hour",
     query_name: str = "stream_sessions",
     output_mode: str = "append",
 ) -> DataFrame:
-    """Native session windows (gap-based), the streaming twin of the
-    batch ``sessionize_events`` lag+cumsum query."""
+    """Native session windows (30-minute gap, one-hour watermark), the
+    streaming twin of the batch ``sessionize_events`` lag+cumsum query."""
     ev = _events_stream(spark, sf_dir)
     agg = (
-        ev.withWatermark("ts", watermark)
-        .groupBy(F.session_window("ts", gap), "user_id")
+        ev.withWatermark("ts", "1 hour")
+        .groupBy(F.session_window("ts", "30 minutes"), "user_id")
         .agg(F.count(F.lit(1)).alias("n_events"))
         .select(
             F.col("session_window.start").alias("session_start"),
@@ -118,17 +115,15 @@ def session_window_stream(
 
 
 def dedup_within_watermark_stream(
-    spark: SparkSession,
-    sf_dir: str,
-    watermark: str = "1 hour",
-    query_name: str = "stream_dedup",
+    spark: SparkSession, sf_dir: str, query_name: str = "stream_dedup"
 ) -> DataFrame:
     """Stateful streaming dedup on event_id with bounded state
     (``dropDuplicatesWithinWatermark``): duplicates arriving within the
-    watermark horizon are dropped; state older than it is evicted."""
+    one-hour watermark horizon are dropped; state older than it is
+    evicted."""
     ev = _events_stream(spark, sf_dir)
     deduped = (
-        ev.withWatermark("ts", watermark)
+        ev.withWatermark("ts", "1 hour")
         .dropDuplicatesWithinWatermark(["event_id"])
         .select("event_id", "ts", "user_id", "event_type", "value")
     )
@@ -518,10 +513,7 @@ def stream_stream_left_interval_join(
 
 
 def drift_band_counts_stream(
-    spark: SparkSession,
-    sf_dir: str,
-    query_name: str = "drift_bands",
-    output_mode: str = "complete",
+    spark: SparkSession, sf_dir: str, query_name: str = "drift_bands"
 ) -> DataFrame:
     """Streaming half of distribution-drift monitoring: per-band event
     VALUE counts maintained continuously, where the band edges are a
@@ -559,7 +551,7 @@ def drift_band_counts_stream(
     agg = banded.groupBy("band").agg(
         F.count(F.lit(1)).cast("long").alias("n_events")
     )
-    _run_to_table(agg, query_name, output_mode)
+    _run_to_table(agg, query_name, "complete")
     return spark.table(query_name)
 
 

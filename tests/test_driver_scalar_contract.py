@@ -17,19 +17,26 @@ It also keeps parquet schema inference in one place: a
 ``.read.parquet(`` outside ``sources/tables.py`` infers the schema with
 a Spark job on every call, where ``sources.tables.table_schema``
 infers it once per file set.
+
+Two AST gates read every call of the library (from the package, the
+query registry, perfbench, the scripts at the repository root and the
+tests): no public function outside the registry keeps a defaulted
+parameter that every call leaves at its default (a settable value no
+caller sets is a constant), and every call binds to its function's
+signature. A default run builds only part of the registry, so a call
+broken by a signature change in another slice would otherwise pass.
 """
 
 from __future__ import annotations
 
+import ast
 import os
 import re
 
 import pytest
 
-PKG = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-    "pyspark_movie_recommender_spark",
-)
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+PKG = os.path.join(ROOT, "pyspark_movie_recommender_spark")
 
 _COLLECT = re.compile(r"\.(collect|toArrow|toPandas)\(\)")
 _TRUNCATE = re.compile(r"localCheckpoint\(|\.checkpoint\(")
@@ -101,3 +108,223 @@ def test_bounded_collect_enforces_bound(spark):
         scalar_row(df, "test.many")
     with pytest.raises(AssertionError, match="exactly one"):
         scalar_row(df.filter("id < 0"), "test.zero")
+
+
+# --- parameter census --------------------------------------------------
+
+_PKG_NAME = os.path.basename(PKG)
+_REGISTRY = _PKG_NAME + ".queries.registry_"
+_SCOPES = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef, ast.Lambda)
+
+
+def _caller_files() -> list[str]:
+    """The package, perfbench, the tests and the scripts at the root."""
+    paths = [os.path.join(ROOT, f) for f in os.listdir(ROOT) if f.endswith(".py")]
+    for base in (PKG, os.path.join(ROOT, "perfbench"), os.path.join(ROOT, "tests")):
+        for d, _dirs, files in os.walk(base):
+            paths += [os.path.join(d, f) for f in files if f.endswith(".py")]
+    return sorted(paths)
+
+
+def _scope(body: list[ast.AST]):
+    """The nodes of one scope; nested functions, classes and lambdas are
+    yielded but not entered."""
+    stack = list(body)
+    while stack:
+        node = stack.pop()
+        yield node
+        if not isinstance(node, _SCOPES):
+            stack.extend(ast.iter_child_nodes(node))
+
+
+def _imports(module: str, is_pkg: bool, nodes, modules) -> dict[str, tuple]:
+    """Names bound by the import statements among ``nodes``:
+    ``("mod", dotted)`` for a module, ``("obj", module, name)`` else."""
+    env: dict[str, tuple] = {}
+    for node in nodes:
+        if isinstance(node, ast.Import):
+            for a in node.names:
+                if a.asname:
+                    env[a.asname] = ("mod", a.name)
+                else:
+                    env[a.name.split(".")[0]] = ("mod", a.name.split(".")[0])
+        elif isinstance(node, ast.ImportFrom):
+            base = node.module or ""
+            if node.level:
+                parts = module.split(".")[: len(module.split(".")) - node.level + is_pkg]
+                base = ".".join(parts + ([node.module] if node.module else []))
+            for a in node.names:
+                full = f"{base}.{a.name}"
+                env[a.asname or a.name] = (
+                    ("mod", full) if full in modules else ("obj", base, a.name)
+                )
+    return env
+
+
+def _params(fn: ast.FunctionDef) -> tuple[list[str], dict[str, ast.expr]]:
+    """Positional parameter names, and each defaulted parameter's default."""
+    a = fn.args
+    pos = [x.arg for x in a.posonlyargs + a.args]
+    defaults = dict(zip(pos[len(pos) - len(a.defaults):], a.defaults))
+    defaults.update(
+        (x.arg, d) for x, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None
+    )
+    return pos, defaults
+
+
+def _bind(fn: ast.FunctionDef, call: ast.Call) -> tuple[dict[str, ast.expr], list[str]]:
+    """Bind ``call`` to ``fn``'s signature as Python would: the argument
+    expression of each parameter it sets, and its binding errors."""
+    a = fn.args
+    pos, defaults = _params(fn)
+    bound: dict[str, ast.expr] = {}
+    errors = []
+    if len(call.args) > len(pos) and a.vararg is None:
+        errors.append(f"takes {len(pos)} positional arguments, got {len(call.args)}")
+    bound.update(zip(pos, call.args))
+    by_keyword = pos[len(a.posonlyargs):] + [x.arg for x in a.kwonlyargs]
+    for kw in call.keywords:
+        if kw.arg not in by_keyword and a.kwarg is None:
+            errors.append(f"unexpected keyword {kw.arg!r}")
+        elif kw.arg in bound:
+            errors.append(f"multiple values for {kw.arg!r}")
+        bound[kw.arg] = kw.value
+    required = [p for p in pos if p not in defaults] + [
+        x.arg for x, d in zip(a.kwonlyargs, a.kw_defaults) if d is None
+    ]
+    errors += [f"missing argument {p!r}" for p in required if p not in bound]
+    return bound, errors
+
+
+def _same_value(arg: ast.expr, default: ast.expr) -> bool:
+    try:
+        x, y = ast.literal_eval(arg), ast.literal_eval(default)
+    except ValueError:
+        return ast.dump(arg) == ast.dump(default)
+    return type(x) is type(y) and x == y
+
+
+@pytest.fixture(scope="module")
+def census():
+    """``(functions, calls)``: every top-level function of the library
+    (the package outside the registry) by ``(module, name)``, and every
+    call of one as ``(key, call node, "path:line")``."""
+    modules = {}
+    for path in _caller_files():
+        rel = os.path.relpath(path, ROOT)[:-3].split(os.sep)
+        is_pkg = rel[-1] == "__init__"
+        with open(path, encoding="utf-8") as fh:
+            tree = ast.parse(fh.read(), path)
+        modules[".".join(rel[:-1] if is_pkg else rel)] = (path, tree, is_pkg)
+
+    functions = {
+        (m, node.name): node
+        for m, (_p, tree, _pkg) in modules.items()
+        if m.startswith(_PKG_NAME) and not m.startswith(_REGISTRY)
+        for node in tree.body
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef))
+    }
+    top = {}
+    for m, (_p, tree, is_pkg) in modules.items():
+        top[m] = _imports(m, is_pkg, tree.body, modules)
+        top[m].update(
+            (node.name, ("obj", m, node.name))
+            for node in tree.body
+            if isinstance(node, _SCOPES)
+        )
+
+    def resolve(module: str, name: str, hops: int = 0):
+        """Follow re-exports to the defining ``(module, name)``."""
+        if (module, name) in functions:
+            return (module, name)
+        bound = top.get(module, {}).get(name)
+        if hops < 8 and bound and bound[0] == "obj" and bound[1:] != (module, name):
+            return resolve(bound[1], bound[2], hops + 1)
+        return None
+
+    def target(func: ast.expr, env: dict[str, tuple]):
+        chain = []
+        while isinstance(func, ast.Attribute):
+            chain.insert(0, func.attr)
+            func = func.value
+        bound = env.get(func.id) if isinstance(func, ast.Name) else None
+        if bound is None:
+            return None
+        if not chain:
+            return resolve(*bound[1:]) if bound[0] == "obj" else None
+        if bound[0] != "mod":
+            return None
+        return resolve(".".join([bound[1], *chain[:-1]]), chain[-1])
+
+    calls = []
+
+    def walk(module, is_pkg, path, body, env):
+        nodes = list(_scope(body))
+        env = {**env, **_imports(module, is_pkg, nodes, modules)}
+        for node in nodes:
+            if isinstance(node, ast.Call):
+                key = target(node.func, env)
+                if key:
+                    calls.append((key, node, f"{os.path.relpath(path, ROOT)}:{node.lineno}"))
+            if isinstance(node, ast.ClassDef):
+                walk(module, is_pkg, path, node.body, env)
+            elif isinstance(node, _SCOPES):  # a function or a lambda
+                # defaults and decorators run in the enclosing scope;
+                # the parameters shadow its names inside the body
+                a = node.args
+                outer = [*a.defaults, *[d for d in a.kw_defaults if d is not None]]
+                outer += getattr(node, "decorator_list", [])
+                walk(module, is_pkg, path, [ast.Expr(e) for e in outer], env)
+                params = {x.arg for x in a.posonlyargs + a.args + a.kwonlyargs}
+                params |= {x.arg for x in (a.vararg, a.kwarg) if x is not None}
+                inner = {k: v for k, v in env.items() if k not in params}
+                body = node.body if isinstance(node.body, list) else [ast.Expr(node.body)]
+                walk(module, is_pkg, path, body, inner)
+
+    for m, (path, tree, is_pkg) in modules.items():
+        walk(m, is_pkg, path, tree.body, top[m])
+    return functions, calls
+
+
+def _unpacks(call: ast.Call) -> bool:
+    return any(isinstance(x, ast.Starred) for x in call.args) or any(
+        kw.arg is None for kw in call.keywords
+    )
+
+
+def test_no_defaulted_parameter_that_every_call_leaves_at_default(census):
+    functions, calls = census
+    other_values: dict[tuple, set[str]] = {key: set() for key in functions}
+    for key, call, _where in calls:
+        _pos, defaults = _params(functions[key])
+        if _unpacks(call):  # may set any parameter
+            other_values[key] |= set(defaults)
+            continue
+        bound, _errors = _bind(functions[key], call)
+        other_values[key] |= {
+            p for p, arg in bound.items()
+            if p in defaults and not _same_value(arg, defaults[p])
+        }
+    unused = [
+        f"{m}.{name}({p})"
+        for (m, name), fn in sorted(functions.items())
+        if not name.startswith("_")
+        for p in _params(fn)[1]
+        if p not in other_values[(m, name)]
+    ]
+    assert not unused, (
+        "defaulted parameters that no call sets to another value — make "
+        "each a constant in the function body and drop it from its "
+        "calls:\n" + "\n".join(unused)
+    )
+
+
+def test_library_calls_bind_to_their_signatures(census):
+    functions, calls = census
+    broken = [
+        f"{where}: {key[1]}(): {err}"
+        for key, call, where in calls
+        if not _unpacks(call)
+        for err in _bind(functions[key], call)[1]
+    ]
+    assert not broken, "calls that would raise TypeError:\n" + "\n".join(broken)

@@ -99,14 +99,14 @@ def test_content_hash_dedup_collapses_case_space(spark, docs_with_dups):
 
 
 def test_ngram_jaccard_finds_near_dup(spark, docs_with_dups):
-    pairs = ngram_jaccard_pairs(docs_with_dups, "text", "doc_id", n=3, threshold=0.8)
+    pairs = ngram_jaccard_pairs(docs_with_dups, "text", "doc_id", threshold=0.8)
     got = {(r.id_a, r.id_b) for r in pairs.collect()}
     assert (1, 101) in got
 
 
 def test_minhash_lsh_recalls_planted_pair(spark, docs_with_dups):
     pairs = minhash_lsh_pairs(
-        docs_with_dups, "text", "doc_id", n=3, num_hashes=32, bands=16,
+        docs_with_dups, "text", "doc_id", num_hashes=32, bands=16,
         verify_threshold=0.5,
     )
     got = {(r.id_a, r.id_b) for r in pairs.collect()}
@@ -125,10 +125,10 @@ def test_ngram_jaccard_df_cap_kills_hot_shingle_blowup(spark):
     # with a df cap the footer shingles drop and no pair survives.
     rows = [(i, chr(65 + i) * 8 + " COMMON BOILERPLATE FOOTER") for i in range(12)]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    uncapped = ngram_jaccard_pairs(df, "text", "doc_id", n=3, threshold=0.01)
+    uncapped = ngram_jaccard_pairs(df, "text", "doc_id", threshold=0.01)
     assert uncapped.count() == 66  # every pair met via the hot shingles
     capped = ngram_jaccard_pairs(
-        df, "text", "doc_id", n=3, threshold=0.01, max_shingle_df=8
+        df, "text", "doc_id", threshold=0.01, max_shingle_df=8
     )
     assert capped.count() == 0  # bounded candidates: hot shingles filtered
 
@@ -187,7 +187,7 @@ def test_lsh_pairs_high_recall_on_clusters(spark, embeddings_clustered):
     got = {
         (r.id_a, r.id_b)
         for r in lsh_neardup_pairs(
-            embeddings_clustered, dim=16, bits=16, bands=8, cos_threshold=0.9
+            embeddings_clustered, dim=16, bits=16, cos_threshold=0.9
         ).collect()
     }
     # tight clusters at cos>=0.9 → recall should be essentially total
@@ -751,7 +751,7 @@ def test_operators_tolerate_empty_inputs(spark):
     empty_docs = spark.createDataFrame(
         [], "doc_id long, text string, lang string, n_chars long"
     )
-    assert ngram_jaccard_pairs(empty_docs, "text", "doc_id", n=3, threshold=0.5).count() == 0
+    assert ngram_jaccard_pairs(empty_docs, "text", "doc_id", threshold=0.5).count() == 0
     assert blocked_levenshtein_pairs(empty_docs).count() == 0
 
     empty_edges = spark.createDataFrame([], "id_a long, id_b long")
@@ -759,7 +759,7 @@ def test_operators_tolerate_empty_inputs(spark):
     assert kcore_nodes(empty_edges, k=2, src="id_a", dst="id_b").count() == 0
 
     empty_vecs = spark.createDataFrame([], "vec_id long, embedding array<float>")
-    assert cosine_topk_bruteforce(empty_vecs, empty_vecs, "embedding", "vec_id").count() == 0
+    assert cosine_topk_bruteforce(empty_vecs, empty_vecs).count() == 0
 
 
 def test_kcore_raises_loudly_on_round_cap(spark):
@@ -872,8 +872,18 @@ def test_bfs_hops_on_known_graph(spark):
     edges = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 4), (4, 5), (5, 6), (1, 4)], "u long, v long"
     )
-    got = {r.node: r.hops for r in bfs_hops(edges, max_hops=4).collect()}
+    got = {r.node: r.hops for r in bfs_hops(edges).collect()}
     assert got == {1: 0, 2: 1, 4: 1, 3: 2, 5: 2, 6: 3}
+
+
+def test_bfs_hops_on_empty_edge_list(spark):
+    from pyspark_movie_recommender_spark.operators.graph import bfs_hops
+
+    # no edges means no minimum vertex to start from: an empty result,
+    # not a TypeError on int(None)
+    out = bfs_hops(spark.createDataFrame([], "u long, v long"))
+    assert out.schema.simpleString() == "struct<node:bigint,hops:bigint>"
+    assert out.collect() == []
 
 
 def test_ckpt_reliable_checkpoint_when_env_set(spark, tmp_path, monkeypatch):

@@ -1129,7 +1129,7 @@ def test_lsh_band_join_skew_is_aqe_split(spark, monkeypatch):
 
     def run() -> str:
         pairs = minhash_lsh_pairs(
-            docs, "text", "doc_id", n=3, num_hashes=32, bands=8,
+            docs, "text", "doc_id", num_hashes=32, bands=8,
             verify_threshold=None,
         )
         # collect, not a noop write: the write runs on a SEPARATE

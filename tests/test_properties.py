@@ -110,7 +110,7 @@ def test_prefix_filter_jaccard_equals_bruteforce(spark, texts):
     ).limit(len(data))
     got = {
         (r.id_a, r.id_b, r.inter, r.n_a, r.n_b)
-        for r in prefix_filtered_jaccard_pairs(df, threshold_pct=70).collect()
+        for r in prefix_filtered_jaccard_pairs(df).collect()
     }
     sets = {i: set(t.split()) for i, t in data}
     want = set()
@@ -399,7 +399,7 @@ def test_rrf_fuse_matches_formula(spark, ranks_a, ranks_b):
     b = spark.createDataFrame(lb or [(0, 1)], "doc_id long, rank long")
     if not lb:
         b = b.limit(0)
-    got = {r.doc_id: r.rrf for r in rrf_fuse([a, b], k=60).collect()}
+    got = {r.doc_id: r.rrf for r in rrf_fuse([a, b]).collect()}
     da, db = dict(la), dict(lb)
     for i in set(da) | set(db):
         want = (1.0 / (60 + da[i]) if i in da else 0.0) + (

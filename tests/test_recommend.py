@@ -351,7 +351,7 @@ def test_reference_movielens_full_protocol_parity(spark):
 def test_als_item_neighbors_shape_and_sanity(spark, sf_dir):
     from pyspark_movie_recommender_spark.recommend import item_neighbors_from_factors
 
-    out = item_neighbors_from_factors(spark, sf_dir, k=3, n_probes=5).collect()
+    out = item_neighbors_from_factors(spark, sf_dir, n_probes=5).collect()
     # 5 probes x 3 neighbors, no self-matches, cosine in [-1, 1]
     assert len(out) == 15
     by_probe = {}

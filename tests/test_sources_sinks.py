@@ -209,7 +209,7 @@ def test_compact_parquet_reduces_file_count(spark, sf_dir, tmp_path):
     assert n_in >= 32
     dst = str(tmp_path / "compacted")
     n_out = compact_parquet(
-        spark, src, dst, target_file_mb=128, sort_cols=["o_orderdate"]
+        spark, src, dst, sort_cols=["o_orderdate"]
     )
     assert n_out < n_in / 8
     assert spark.read.parquet(dst).count() == load_table(

@@ -543,7 +543,7 @@ def test_drift_band_counts_stream_equals_batch(spark, sf_dir):
     )
 
     stream = drift_band_counts_stream(
-        spark, sf_dir, query_name="t_drift_eq", output_mode="complete"
+        spark, sf_dir, query_name="t_drift_eq"
     )
     ev = load_table(spark, sf_dir, "events")
     edges = ev.agg(
